@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etsd_time_series_database_spark.session import get_spark
+from etsd_time_series_database_spark.sources.store import epoch_ts
 from etsd_time_series_database_spark.timeparse import resolve_range
 
 _ops = importlib.import_module(
@@ -44,30 +45,9 @@ _ops = importlib.import_module(
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    ts_field = next((f for f in df.schema.fields if f.name == "ts"), None)
-    if ts_field is not None and ts_field.dataType.simpleString() == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000").cast("long")))
-    elif (
-        ts_field is not None
-        and ts_field.dataType.simpleString() == "timestamp_ntz"
-    ):
-        # sessions without the nanosAsLong conf read parquet NANOS as
-        # NTZ; unix_micros & friends want TIMESTAMP. Convert via the
-        # NTZ-epoch diff (store.load_table's formulation), which is
-        # session-timezone INDEPENDENT — cli.main accepts external
-        # SparkSessions, and a plain cast in a non-UTC session would
-        # shift every epoch-derived bucket and digest.
-        df = df.withColumn(
-            "ts",
-            F.timestamp_micros(
-                F.expr(
-                    "timestampdiff(MICROSECOND,"
-                    " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-                )
-            ),
-        )
-    return df
+    # store.epoch_ts is session-timezone INDEPENDENT — cli.main accepts
+    # external SparkSessions, whose confs this read leaves untouched
+    return epoch_ts(spark.read.parquet(path))
 
 
 def _bounds(df: DataFrame, ts: str = "ts") -> tuple[datetime, datetime]:

@@ -749,8 +749,8 @@ def ivf_compact(
     All fragmented cells rewrite in ONE Spark job (multi-dir read with
     ``basePath`` so the scan stays scoped to exactly those cells; a
     ``partitionBy(cent_id)`` staged write splits the output per cell),
-    then each cell installs through the same staged-rename swap as the
-    store verbs — per-cell work after the job is driver FS metadata,
+    then each cell installs through ``sources.store.swap_in_dir`` —
+    per-cell work after the job is driver FS metadata,
     not job submission. The prior per-cell-job loop serialized ~0.5 s
     of submission latency per cell (measured,
     scripts/bench_maintenance_verbs.py), which dominates on a badly
@@ -766,10 +766,9 @@ def ivf_compact(
     Reference analog: the reference compacts nothing (fixed-size
     blocks); this is lifecycle the Spark layout needs instead.
     """
-    import uuid
-
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
+        staging_dir,
         swap_in_dir,
     )
 
@@ -819,8 +818,8 @@ def ivf_compact(
         for r in df.groupBy("cent_id").agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    token = uuid.uuid4().hex
-    tmp = f"{path}/__ivfc_{token}"
+    # one staging root beside the cells; partitionBy splits it per cell
+    tmp = staging_dir(f"{path}/{fragmented[0]}", "ivfc")
     if int(files_per_cell) > 1:
         # explicit count: AQE coalesces a column-only repartition,
         # collapsing the per-cell fan-out salt
@@ -868,10 +867,7 @@ def ivf_compact(
             )
             continue
         stats["rows"] += src_counts.get(cid, 0)
-        swap_in_dir(
-            fs, Path, f"{tmp}/{cell}", f"{path}/{cell}",
-            f"{path}/__old_{token}_{cid}", "ivf_compact",
-        )
+        swap_in_dir(fs, Path, f"{tmp}/{cell}", f"{path}/{cell}", "ivf_compact")
         stats["cells_compacted"] += 1
         stats["files_after"] += sum(
             1
@@ -938,7 +934,11 @@ def rebalance_cells(
     the LLM-pipeline half of the brief (index maintenance under skew,
     the serving-latency-tail fix x83 measures).
     """
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
+    from etsd_time_series_database_spark.sources.store import (
+        _hadoop_fs,
+        staging_dir,
+        swap_in_dir,
+    )
 
     fs, Path = _hadoop_fs(spark, path)
     check_ivf_meta(spark, path, key, vec)
@@ -970,8 +970,6 @@ def rebalance_cells(
         "reassigned": 0,
         "split_input_files": [],
     }
-    import uuid
-
     next_id = (max(cent_ids) if cent_ids else 0) + 1
     new_cents: list[tuple[int, list]] = []
     for h in hot:
@@ -996,8 +994,8 @@ def rebalance_cells(
             (int(r["cent_id"]), r["cent_vec"]) for r in refined.collect()
         )
         assigned = assign_cells(cell, [], key, vec, _centroids=refined)
-        token = uuid.uuid4().hex
-        tmp = f"{path}/__rebal_{token}"
+        cell_dir = f"{path}/cent_id={h}"
+        tmp = staging_dir(cell_dir, "rebal")
         assigned.repartition(F.col("cent_id")).write.mode(
             "overwrite"
         ).partitionBy("cent_id").parquet(tmp)
@@ -1006,8 +1004,8 @@ def rebalance_cells(
             for st in fs.listStatus(Path(tmp))
             if st.getPath().getName().startswith("cent_id=")
         ]
-        old_dir = Path(f"{path}/cent_id={h}")
-        old = Path(f"{path}/__old_{token}")
+        old_dir = Path(cell_dir)
+        old = Path(staging_dir(cell_dir, "old"))
         if not fs.rename(old_dir, old):
             fs.delete(Path(tmp), True)
             raise IOError(f"rebalance: failed to move cent_id={h} aside")
@@ -1052,18 +1050,10 @@ def rebalance_cells(
             ).partitionBy("cent_id").parquet(path)
             stats["reassigned"] += n
         fs.delete(e_dir, True)
-    token = uuid.uuid4().hex
-    ctmp = f"{path}/__cent_{token}"
+    cdir = f"{path}/_centroids"
+    ctmp = staging_dir(cdir, "cent")
     cent_df.coalesce(1).write.mode("overwrite").parquet(ctmp)
-    cdir = Path(path + "/_centroids")
-    cold = Path(f"{path}/__centold_{token}")
-    if not fs.rename(cdir, cold):
-        fs.delete(Path(ctmp), True)
-        raise IOError("rebalance: failed to move _centroids aside")
-    if not fs.rename(Path(ctmp), cdir):
-        fs.rename(cold, cdir)
-        raise IOError("rebalance: failed to install new _centroids")
-    fs.delete(cold, True)
+    swap_in_dir(fs, Path, ctmp, cdir, "rebalance _centroids")
     # the sidecar tracks the geometry the rebalance just changed:
     # nlist follows the surviving centroid set (dim/metric/columns
     # are invariants of the layout)

@@ -17,6 +17,8 @@ thousands of files and pruned by Catalyst before any I/O happens.
 from __future__ import annotations
 
 import os
+import posixpath
+import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,8 +89,9 @@ def _ensure_ts_confs(spark: SparkSession) -> None:
 def _ts_kind(df: DataFrame) -> str | None:
     """The ``ts`` column's surfaced type name (None when absent):
     'bigint' == TIMESTAMP(NANOS) under nanosAsLong, 'timestamp_ntz'
-    == naive micros. THE single probe both the batch loader and the
-    streaming replays decide their conversion from."""
+    == naive micros. THE single probe the batch readers (via
+    :func:`epoch_ts`) and the streaming replays decide their conversion
+    from."""
     return next(
         (
             f.dataType.simpleString()
@@ -145,12 +148,6 @@ def load_table(
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     ts_kind = _ts_kind(df)
     raw_ns = ts_kind == "bigint"
-    # Naive parquet timestamps (isAdjustedToUTC=false) surface as
-    # TIMESTAMP_NTZ in Spark 4; DuckDB reads the same file as a naive
-    # TIMESTAMP whose epoch() treats the wall clock as UTC. Convert to
-    # an epoch-based TimestampType the same way — via timestampdiff
-    # against the NTZ epoch, which is session-timezone independent
-    # (a plain cast would re-interpret the wall clock in session tz).
     raw_ntz = ts_kind == "timestamp_ntz"
     if ts_range is not None and "ts" in df.columns:
         lo, hi = ts_range
@@ -175,12 +172,24 @@ def load_table(
                 df = df.filter(F.col("ts") >= F.lit(lo).cast(cast_t))
             if hi is not None:
                 df = df.filter(F.col("ts") <= F.lit(hi).cast(cast_t))
-    if raw_ns:
-        df = df.withColumn(
+    return epoch_ts(df)
+
+
+def epoch_ts(df: DataFrame) -> DataFrame:
+    """Convert ``df``'s raw ``ts`` to an epoch-based TimestampType, as
+    :func:`_ts_kind` classifies it: nanos (``bigint``) floor-truncate
+    to micros, exactly what DuckDB does reading the same file; naive
+    ``timestamp_ntz`` goes through timestampdiff against the NTZ epoch,
+    which DuckDB's epoch() matches and which is session-timezone
+    independent (a plain cast would re-interpret the wall clock in the
+    session tz). Any other ``ts`` (or none) passes through."""
+    kind = _ts_kind(df)
+    if kind == "bigint":
+        return df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long"))
         )
-    elif raw_ntz:
-        df = df.withColumn(
+    if kind == "timestamp_ntz":
+        return df.withColumn(
             "ts",
             F.timestamp_micros(
                 F.expr(
@@ -237,7 +246,8 @@ def _hadoop_fs(spark: SparkSession, path: str):
     FileSystem API — works uniformly for file:, hdfs:, s3a:, abfs:
     URIs, unlike os.listdir/shutil which only see the driver's local
     disk. At 100 TB the table lives on an object store; every
-    maintenance op below goes through this handle.
+    maintenance op goes through this handle — the one place the
+    package opens a FileSystem (test-pinned).
     """
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -254,25 +264,13 @@ def compact_partition(
 ) -> int:
     """Compact one date partition: rewrite its many small files (the
     residue of frequent streaming micro-batch commits) into
-    ``target_files`` sorted files. Returns the number of files before
-    compaction.
-
-    Swap protocol (Hadoop FS, object-store aware): write the compacted
-    data to a temp dir, rename the live partition ASIDE, rename the
-    temp dir into place, then delete the old data — at no point is the
-    partition simply absent, and a crash mid-swap leaves either the old
-    dir (recoverable by re-running) or both dirs (old one under
-    ``__old_*``), never neither. Note rename is atomic on HDFS but
-    copy-based on S3; for serious object-store deployments layer a
-    table format (Delta/Iceberg OPTIMIZE) on top — this implements the
-    same maintenance contract without that dependency.
+    ``target_files`` sorted files, installed with :func:`swap_in_dir`.
+    Returns the number of files before compaction.
 
     Only safe on partitions no longer receiving appends (i.e. past the
     ingest watermark) — same contract as the reference's rotation
     touching only the closed file (code/etsdSave.c:80-99).
     """
-    import uuid
-
     fs, Path = _hadoop_fs(spark, path)
     part_dir = f"{path}/{partition}"
     files_before = [
@@ -281,22 +279,14 @@ def compact_partition(
         if st.getPath().getName().endswith(".parquet")
     ]
     df = spark.read.parquet(part_dir)
-    token = uuid.uuid4().hex
-    tmp = f"{path}/__compact_{token}"
+    tmp = staging_dir(part_dir, "compact")
     (
         df.repartition(target_files)
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    old = f"{path}/__old_{token}"
-    if not fs.rename(Path(part_dir), Path(old)):
-        raise IOError(f"compact: failed to move {part_dir} aside")
-    if not fs.rename(Path(tmp), Path(part_dir)):
-        # roll back so the table is never left without the partition
-        fs.rename(Path(old), Path(part_dir))
-        raise IOError(f"compact: failed to install compacted {part_dir}")
-    fs.delete(Path(old), True)
+    swap_in_dir(fs, Path, tmp, part_dir, "compact")
     return len(files_before)
 
 
@@ -346,9 +336,8 @@ def amend_events(
     through its block-addressed RW layer (code/etsdRW.c); on immutable
     parquet the equivalent is a partition-scoped rewrite: per affected
     day, current rows anti-join the correction keys, union the day's
-    corrections, and the merged partition installs through the same
-    crash-safe rename-swap as compaction (never simply absent; old dir
-    recoverable mid-swap).
+    corrections, and the merged partition installs through
+    :func:`swap_in_dir`.
 
     A correction whose ``ts`` moves a row ACROSS days is two physical
     operations (delete old-day row + insert new-day row); ``cross_day``
@@ -465,10 +454,7 @@ def amend_events(
                 continue
         else:
             merged = day_corr
-        import uuid
-
-        token = uuid.uuid4().hex
-        tmp = f"{path}/__amend_{token}"
+        tmp = staging_dir(part_dir, "amend")
         (
             merged.repartition(int(target_files))
             .sortWithinPartitions(
@@ -477,9 +463,7 @@ def amend_events(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        swap_in_dir(
-            fs, Path, tmp, part_dir, f"{path}/__old_{token}", "amend"
-        )
+        swap_in_dir(fs, Path, tmp, part_dir, "amend")
         stats["partitions"][part] = spark.read.parquet(part_dir).count()
     # key-level accounting: each moved key contributes one removal (old
     # day) and one insertion (new day) but is neither a replace nor a
@@ -503,30 +487,25 @@ def sync_partition(
     The partition's parquet files are copied BYTE-IDENTICALLY through
     the Hadoop FileSystem API (no decode/re-encode — works across
     file:/hdfs:/s3a: and guarantees the re-digest converges), staged
-    into a temp dir and installed with the same rename-swap protocol
-    as :func:`compact_partition`: at no point is the partition simply
-    absent, and a crash mid-swap leaves either the old dir or both
-    (old under ``__old_*``), never neither. A partition absent from
-    the source is DELETED from the target (drift-by-extra-data).
+    into a temp dir and installed with :func:`swap_in_dir`. A
+    partition absent from the source is DELETED from the target
+    (drift-by-extra-data).
     Returns 'synced' | 'deleted' | 'noop' (absent on both sides).
 
     Partition-scoped by contract: untouched partitions are never
     listed, read, or rewritten — repair cost is O(drifted days), not
     O(store).
     """
-    import uuid
-
     fs_src, Path = _hadoop_fs(spark, source_path)
     fs_dst, _ = _hadoop_fs(spark, target_path)
     src_dir = Path(f"{source_path}/{partition}")
-    dst_dir = Path(f"{target_path}/{partition}")
+    dst = f"{target_path}/{partition}"
     if not fs_src.exists(src_dir):
-        if fs_dst.exists(dst_dir):
-            fs_dst.delete(dst_dir, True)
+        if fs_dst.exists(Path(dst)):
+            fs_dst.delete(Path(dst), True)
             return "deleted"
         return "noop"
-    token = uuid.uuid4().hex
-    tmp_s = f"{target_path}/__sync_{token}"
+    tmp_s = staging_dir(dst, "sync")
     tmp = Path(tmp_s)
     fs_dst.mkdirs(tmp)
     jvm = spark._jvm
@@ -543,10 +522,7 @@ def sync_partition(
             fs_dst.delete(tmp, True)
             raise IOError(f"sync: copy of {name} failed; "
                           f"target partition {partition} untouched")
-    swap_in_dir(
-        fs_dst, Path, tmp_s, f"{target_path}/{partition}",
-        f"{target_path}/__old_{token}", "sync",
-    )
+    swap_in_dir(fs_dst, Path, tmp_s, dst, "sync")
     return "synced"
 
 
@@ -568,7 +544,7 @@ def refresh_digest_tier(
     drift" checks is decoupled from store size. After an ``amend``,
     the tier is stale for exactly the amended days; ``days=[...]``
     recomputes only those partitions from the store and installs each
-    through the crash-safe rename swap — untouched tier partitions are
+    through :func:`install_partition` — untouched tier partitions are
     never listed, read, or rewritten. The day filter goes on the
     store's ``dt`` PARTITION column alone when present so Catalyst
     prunes the scan to that one directory — a ``to_date(ts)``
@@ -659,8 +635,6 @@ def refresh_digest_tier(
                 "count", "n"
             ).collect()
         }
-    import uuid
-
     fs, Path = _hadoop_fs(spark, digest_path)
     existing = read_digest_tier_meta(spark, digest_path)
     if existing is not None and existing != meta:
@@ -685,47 +659,49 @@ def refresh_digest_tier(
                 "rebuild it (days=None)"
             )
         write_digest_tier_meta(spark, digest_path, meta)
-    stats: dict = {}
-    for d in sorted(days):
-        fresh = digest(
-            day_scoped(store, d)
-        ).repartition(int(target_files)).sortWithinPartitions(
-            channel_col, "bucket_us"
+    return {
+        d: install_partition(
+            digest(day_scoped(store, d))
+            .repartition(int(target_files))
+            .sortWithinPartitions(channel_col, "bucket_us"),
+            f"{digest_path}/dt={d}",
+            "digest",
         )
-        token = uuid.uuid4().hex
-        tmp = f"{digest_path}/__digest_{token}"
-        fresh.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        part_dir = f"{digest_path}/dt={d}"
-        had_old = fs.exists(Path(part_dir))
-        if n == 0:
-            fs.delete(Path(tmp), True)
-            if had_old:
-                fs.delete(Path(part_dir), True)
-            stats[d] = 0
-            continue
-        swap_in_dir(
-            fs, Path, tmp, part_dir, f"{digest_path}/__old_{token}",
-            "digest refresh",
-        )
-        stats[d] = n
-    return stats
+        for d in sorted(days)
+    }
 
 
-def swap_in_dir(fs, Path, tmp: str, dst: str, old: str, label: str) -> None:
-    """The crash-safe directory swap every single-dir maintenance
-    verb shares (amend, day-scoped refresh x2, ivf-compact): the new
-    data is FULLY written at ``tmp`` before anything destructive
-    happens; ``dst`` (if present) moves aside to ``old``, ``tmp``
-    renames in, ``old`` is deleted last. Hadoop rename signals most
-    failures by returning FALSE, not raising, so every step before a
-    destructive delete is checked: a failed move-aside deletes only
-    the temp; a failed install renames the old dir back. A crash
-    leaves either the old dir or a rollback-able ``old`` — the
-    target is never simply absent with no recovery copy, and never
-    double-counted. Callers pick token-suffixed ``tmp``/``old``
-    names with an underscore prefix (invisible to Spark's listing).
+def staging_dir(dst: str, kind: str) -> str:
+    """A fresh ``__{kind}_{token}`` sibling of ``dst``: where a
+    :func:`swap_in_dir` install stages its new copy, and where the
+    swap moves the live ``dst`` aside (kind ``old``). The underscore
+    prefix hides it from Spark's listing of the enclosing table; the
+    token keeps a crashed run's leftovers from colliding with a
+    retry's."""
+    parent = posixpath.dirname(dst.rstrip("/"))
+    return posixpath.join(parent, f"__{kind}_{uuid.uuid4().hex}")
+
+
+def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
+    """The crash-safe directory swap every single-dir maintenance verb
+    shares (compact, ingest compact, amend, sync, the day-scoped tier
+    refreshes via :func:`install_partition`, minhash-index compact,
+    incremental-dedup survivors, ivf-compact, the rebalance
+    ``_centroids`` rewrite): the new data is FULLY written at ``tmp``
+    (a :func:`staging_dir`) before anything destructive happens;
+    ``dst`` (if present) moves aside to a ``__old_*`` sibling, ``tmp``
+    renames in, the old copy is deleted last. Hadoop rename signals
+    most failures by returning FALSE, not raising, so every step
+    before a destructive delete is checked: a failed move-aside
+    deletes only the temp; a failed install renames the old dir back.
+    A crash leaves either the old dir or a rollback-able ``__old_*``
+    — the target is never simply absent with no recovery copy, and
+    never double-counted. Rename is atomic on HDFS but copy-based on
+    S3; serious object-store deployments layer a table format
+    (Delta/Iceberg OPTIMIZE) on top — this is the same maintenance
+    contract without that dependency.
     """
+    old = staging_dir(dst, "old")
     had_old = fs.exists(Path(dst))
     if had_old and not fs.rename(Path(dst), Path(old)):
         fs.delete(Path(tmp), True)
@@ -736,6 +712,26 @@ def swap_in_dir(fs, Path, tmp: str, dst: str, old: str, label: str) -> None:
         raise IOError(f"{label}: failed to install {dst}")
     if had_old:
         fs.delete(Path(old), True)
+
+
+def install_partition(fresh: DataFrame, part_dir: str, kind: str) -> int:
+    """Stage ``fresh`` beside ``part_dir``, count the staged copy (a
+    readability check before anything destructive) and install it
+    with :func:`swap_in_dir` — or, when it holds no rows, drop
+    ``part_dir`` rather than install an empty partition (its source
+    day vanished, e.g. drained by a cross-day amend). The shared tail
+    of the day-scoped tier refreshes. Returns the row count."""
+    spark = fresh.sparkSession
+    fs, Path = _hadoop_fs(spark, part_dir)
+    tmp = staging_dir(part_dir, kind)
+    fresh.write.mode("overwrite").parquet(tmp)
+    n = spark.read.parquet(tmp).count()
+    if n == 0:
+        fs.delete(Path(tmp), True)
+        fs.delete(Path(part_dir), True)
+        return 0
+    swap_in_dir(fs, Path, tmp, part_dir, f"{kind} refresh")
+    return n
 
 
 def day_scoped(df: DataFrame, day: str) -> DataFrame:
@@ -917,16 +913,20 @@ def write_bucketed_table(
     has never heard of the table) then fails saveAsTable with
     LOCATION_ALREADY_EXISTS — .mode("overwrite") only overwrites
     REGISTERED tables. Drop the registration if any and clear the
-    orphaned default-warehouse location first.
+    orphaned managed location first — resolved through the catalog
+    (the target database's ``locationUri`` plus the table name), so
+    an unqualified name under a non-default current database never
+    touches a same-named table in another database.
     """
     if mode == "overwrite":
         spark = df.sparkSession
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        wh = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        )
-        loc = f"{wh.rstrip('/')}/{table_name.lower()}"
+        db, _, name = table_name.rpartition(".")
         try:
+            db_uri = spark.catalog.getDatabase(
+                db or spark.catalog.currentDatabase()
+            ).locationUri
+            loc = f"{db_uri.rstrip('/')}/{name.lower()}"
             fs, Path = _hadoop_fs(spark, loc)
             fs.delete(Path(loc), True)
         except Exception:

@@ -136,36 +136,41 @@ def write_ingest_epoch(
     )
     if downsample_to is not None:
         (
-            batch.groupBy(
-                "source",
-                "channel",
-                F.window("ts", f"{downsample_width_s} seconds").alias("w"),
-            )
-            .agg(
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias(
-                    "sum_value"
-                ),
-                F.avg("value").alias("avg_value"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            .select(
-                "source",
-                "channel",
-                F.col("w.start").alias("bucket_ts"),
-                "n",
-                "sum_value",
-                "avg_value",
-                "min_value",
-                "max_value",
-            )
+            consolidate(batch, ["source", "channel"], downsample_width_s)
             .withColumn("__epoch", F.lit(int(epoch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__epoch")
             .parquet(downsample_to)
         )
+
+
+def consolidate(df: DataFrame, keys: list[str], width_s: int) -> DataFrame:
+    """The downsample consolidation (the RRA export, edoRRD
+    code/plugins/edoRRD.c:44-74): per ``keys`` and ``width_s``-second
+    tumbling bucket, ``n``, the exact DECIMAL ``sum_value``, and the
+    display ``avg_value``/``min_value``/``max_value``. THE one form the
+    live foreachBatch sink, :func:`replay` and :func:`refresh_downsample`
+    write, which is what keeps their outputs bit-identical."""
+    return (
+        df.groupBy(*keys, F.window("ts", f"{int(width_s)} seconds").alias("w"))
+        .agg(
+            F.count("value").alias("n"),
+            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
+            F.avg("value").alias("avg_value"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .select(
+            *keys,
+            F.col("w.start").alias("bucket_ts"),
+            "n",
+            "sum_value",
+            "avg_value",
+            "min_value",
+            "max_value",
+        )
+    )
 
 
 def read_ingest_table(spark: SparkSession, path: str) -> DataFrame:
@@ -408,34 +413,14 @@ def replay(
     """Recover/replay: re-drive stored history through the downsample
     sink (the reference's recoverRRD path, call site
     code/etsdCmd.c:648-656 — re-deriving the external DB from the
-    authoritative store). Same consolidation as the live foreachBatch
-    sink, so a recovered sink is bit-identical to one maintained live.
+    authoritative store). Same :func:`consolidate` as the live
+    foreachBatch sink, so a recovered sink is bit-identical to one
+    maintained live.
     """
     raw = spark.read.parquet(raw_path)
-    (
-        raw.groupBy(
-            "source", "channel", F.window("ts", f"{width_s} seconds").alias("w")
-        )
-        .agg(
-            F.count("value").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
-            F.avg("value").alias("avg_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            "source",
-            "channel",
-            F.col("w.start").alias("bucket_ts"),
-            "n",
-            "sum_value",
-            "avg_value",
-            "min_value",
-            "max_value",
-        )
-        .write.mode("overwrite")
-        .parquet(sink_path)
-    )
+    consolidate(raw, ["source", "channel"], width_s).write.mode(
+        "overwrite"
+    ).parquet(sink_path)
 
 
 def compact_ingest_partition(
@@ -454,19 +439,20 @@ def compact_ingest_partition(
     directory depth stays uniform for Spark's partition discovery and
     :func:`read_ingest_table` keeps dropping the column.
 
-    Same rename-swap protocol as ``sources.store.compact_partition``
-    (temp dir fully written first; the partition is never simply
-    absent; a crash leaves old or old+new, recoverable). Same
-    contract, too: only for partitions past the ingest watermark — a
+    Installed with ``sources.store.swap_in_dir``, like
+    ``sources.store.compact_partition``, and under the same contract:
+    only for partitions past the ingest watermark — a
     micro-batch RETRY of a merged epoch would re-create its
     ``__epoch=N`` dir beside ``-1`` and duplicate those rows, which is
     exactly the at-least-once window the closed-partition rule
     excludes (reference rotation touches only the closed file,
     code/etsdSave.c:80-99). Returns {files_before, files_after, rows}.
     """
-    import uuid
-
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
+    from etsd_time_series_database_spark.sources.store import (
+        _hadoop_fs,
+        staging_dir,
+        swap_in_dir,
+    )
 
     fs, Path = _hadoop_fs(spark, path)
     part_dir = f"{path}/{partition}"
@@ -484,8 +470,7 @@ def compact_ingest_partition(
 
     files_before = _count_files(part_dir)
     df = spark.read.parquet(part_dir).drop("__epoch")
-    token = uuid.uuid4().hex
-    tmp = f"{path}/__compact_{token}"
+    tmp = staging_dir(part_dir, "compact")
     (
         df.repartition(int(target_files))
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
@@ -495,14 +480,7 @@ def compact_ingest_partition(
         .parquet(tmp)
     )
     rows = spark.read.parquet(tmp).count()
-    old = f"{path}/__old_{token}"
-    if not fs.rename(Path(part_dir), Path(old)):
-        fs.delete(Path(tmp), True)
-        raise IOError(f"ingest compact: failed to move {part_dir} aside")
-    if not fs.rename(Path(tmp), Path(part_dir)):
-        fs.rename(Path(old), Path(part_dir))
-        raise IOError(f"ingest compact: failed to install {part_dir}")
-    fs.delete(Path(old), True)
+    swap_in_dir(fs, Path, tmp, part_dir, "ingest compact")
     return {
         "files_before": files_before,
         "files_after": _count_files(part_dir),
@@ -703,7 +681,7 @@ def refresh_downsample(
     are stale for exactly those days, and re-deriving the WHOLE sink
     (the reference's recoverRRD, code/etsdCmd.c:648-656) is O(store).
     This recomputes only the named days' buckets from the raw store
-    and installs each day through the crash-safe rename swap;
+    and installs each day through ``sources.store.install_partition``;
     untouched sink partitions are never listed, read, or rewritten.
 
     When the raw store is ``dt=``-partitioned the day filter goes on
@@ -734,7 +712,7 @@ def refresh_downsample(
     rewrite of a cross-midnight bucket would drop the neighbor day's
     contribution).
 
-    Same aggregate expressions as the live foreachBatch sink and the
+    Same :func:`consolidate` as the live foreachBatch sink and the
     flat replay, so a refreshed day is bit-identical to a full
     recompute of that day (test-pinned). The consolidation carries
     ``sum_value`` (exact DECIMAL sums) alongside the display
@@ -754,8 +732,8 @@ def refresh_downsample(
         _hadoop_fs,
         buckets_misaligned,
         day_scoped,
+        install_partition,
         read_meta_sidecar,
-        swap_in_dir,
         write_meta_sidecar,
     )
 
@@ -766,34 +744,10 @@ def refresh_downsample(
     channel = "channel" if "channel" in raw.columns else "event_type"
     keys = (["source"] if "source" in raw.columns else []) + [channel]
 
-    def consolidated(df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                *keys,
-                F.window("ts", f"{int(width_s)} seconds").alias("w"),
-            )
-            .agg(
-                F.count("value").alias("n"),
-                F.sum(F.col("value").cast("decimal(18,6)")).alias(
-                    "sum_value"
-                ),
-                F.avg("value").alias("avg_value"),
-                F.min("value").alias("min_value"),
-                F.max("value").alias("max_value"),
-            )
-            .select(
-                *keys,
-                F.col("w.start").alias("bucket_ts"),
-                "n",
-                "sum_value",
-                "avg_value",
-                "min_value",
-                "max_value",
-            )
-        )
-
     if days is None:
-        full = consolidated(raw).withColumn("dt", F.to_date("bucket_ts"))
+        full = consolidate(raw, keys, width_s).withColumn(
+            "dt", F.to_date("bucket_ts")
+        )
         if int(target_files) > 1:
             # fan each day out across up to target_files write tasks —
             # deterministic (channel, bucket)-hash salt, so the knob
@@ -834,8 +788,6 @@ def refresh_downsample(
             ).collect()
         }
 
-    import uuid
-
     fs, Path = _hadoop_fs(spark, sink_path)
     existing = read_meta_sidecar(spark, sink_path, "_downsample_meta.json")
     if existing is not None and existing != sink_meta:
@@ -875,31 +827,14 @@ def refresh_downsample(
             legacy_cols = [c for c in sink_cols if c != "dt"]
     stats: dict = {}
     for d in sorted(days):
-        day_rows = day_scoped(raw, d)
         fresh = (
-            consolidated(day_rows)
+            consolidate(day_scoped(raw, d), keys, width_s)
             .repartition(int(target_files))
             .sortWithinPartitions(channel, "bucket_ts")
         )
         if legacy_cols is not None:
             fresh = fresh.select(*legacy_cols)
-        token = uuid.uuid4().hex
-        tmp = f"{sink_path}/__refresh_{token}"
-        fresh.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-        part_dir = f"{sink_path}/dt={d}"
-        old = f"{sink_path}/__old_{token}"
-        had_old = fs.exists(Path(part_dir))
-        if n == 0:
-            # the raw day vanished (e.g. drained by a cross-day amend):
-            # drop the sink day rather than install an empty partition
-            fs.delete(Path(tmp), True)
-            if had_old:
-                fs.delete(Path(part_dir), True)
-            stats[d] = 0
-            continue
-        swap_in_dir(fs, Path, tmp, part_dir, old, "refresh")
-        stats[d] = n
+        stats[d] = install_partition(fresh, f"{sink_path}/dt={d}", "downsample")
     return stats
 
 

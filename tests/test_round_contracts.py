@@ -107,3 +107,45 @@ def test_selfcheck_snapshots_are_scale_distinct():
     b = json.loads((REPO / "SELFCHECK_SF01.json").read_text())
     assert a["x31_segment_dedup"]["spark_rows"] == 500
     assert b["x31_segment_dedup"]["spark_rows"] == 5000
+
+
+def _calls_by_function(attr: str, receiver: str | None) -> dict[str, int]:
+    """{top-level function: n} for calls ``<receiver>.<attr>(`` (any
+    receiver when None) anywhere in the package, nested defs counted
+    toward their enclosing top-level function."""
+    import ast
+
+    out: dict[str, int] = {}
+    for f in (REPO / "etsd_time_series_database_spark").rglob("*.py"):
+        for top in ast.parse(f.read_text()).body:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == attr
+                    and (
+                        receiver is None
+                        or isinstance(node.func.value, ast.Name)
+                        and node.func.value.id == receiver
+                    )
+                ):
+                    out[top.name] = out.get(top.name, 0) + 1
+    return out
+
+
+def test_directory_swaps_go_through_swap_in_dir():
+    """Every single-directory install goes through
+    ``store.swap_in_dir`` and every FileSystem handle through
+    ``store._hadoop_fs``: an inline copy of the swap drifts (one
+    leaked its temp on a failed move-aside, one deleted the live dir
+    before its rename). The two multi-file protocols keep their own
+    renames: the stream sink's commit-log rewrite and the rebalance
+    one-to-many hot-cell install."""
+    renames = _calls_by_function("rename", "fs")
+    assert set(renames) <= {
+        "swap_in_dir", "compact_stream_sink", "rebalance_cells"
+    }, renames
+    assert sum(renames.values()) - renames["swap_in_dir"] == 6, renames
+    assert set(_calls_by_function("getFileSystem", None)) == {"_hadoop_fs"}

@@ -66,6 +66,32 @@ def test_bucketed_join_correct(spark, bucketed_tables):
     assert got == want
 
 
+def test_bucketed_overwrite_resolves_location_through_catalog(spark):
+    """overwrite clears the orphaned location of the table it targets —
+    resolved via the current database's catalog location — never the
+    default-warehouse path of a same-named table in another database."""
+    df = spark.range(40).withColumnRenamed("id", "k")
+    write_bucketed_table(df, "default.t", "k", n_buckets=2)
+    loc = (
+        spark.sql("DESCRIBE TABLE EXTENDED default.t")
+        .filter(F.col("col_name") == "Location")
+        .collect()[0]["data_type"]
+    )
+    prev = spark.catalog.currentDatabase()
+    spark.sql("CREATE DATABASE IF NOT EXISTS other")
+    try:
+        spark.catalog.setCurrentDatabase("other")
+        write_bucketed_table(df.limit(5), "t", "k", n_buckets=2)
+        assert spark.table("other.t").count() == 5
+        spark.catalog.refreshTable("default.t")
+        assert spark.read.parquet(loc).count() == 40
+        assert spark.table("default.t").count() == 40
+    finally:
+        spark.catalog.setCurrentDatabase(prev)
+        spark.sql("DROP DATABASE IF EXISTS other CASCADE")
+        spark.sql("DROP TABLE IF EXISTS default.t")
+
+
 def test_salted_agg_matches_direct(spark):
     e = load_table(spark, SF_SMOKE, "events")
     got = {
