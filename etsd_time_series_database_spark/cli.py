@@ -739,27 +739,6 @@ def cmd_recover(args, spark: SparkSession) -> int:
     )
 
     if args.days or args.partitioned:
-        if args.days:
-            # layout guard: a day-scoped refresh writes dt= partition
-            # dirs; pointed at a sink previously written by the FLAT
-            # replay it would leave a mixed layout that breaks reads
-            from etsd_time_series_database_spark.sources.store import (
-                _hadoop_fs,
-                list_date_partitions,
-            )
-
-            fs, Path = _hadoop_fs(spark, args.sink)
-            if fs.exists(Path(args.sink)) and not list_date_partitions(
-                spark, args.sink
-            ):
-                print(
-                    f"recover: {args.sink} exists but is not "
-                    "dt=-partitioned (flat replay layout?) — a --days "
-                    "refresh would mix layouts; rebuild it with "
-                    "`recover --partitioned` first",
-                    file=sys.stderr,
-                )
-                return 2
         days = args.days.split(",") if args.days else None
         try:
             stats = refresh_downsample(
@@ -767,7 +746,7 @@ def cmd_recover(args, spark: SparkSession) -> int:
                 target_files=args.target_files,
             )
         except ValueError as exc:
-            # width mismatch against the sink's _downsample_meta.json
+            # the sink contract (store.check_derived_tier) refused
             print(f"recover: {exc}", file=sys.stderr)
             return 2
         scope = (
@@ -947,11 +926,12 @@ def cmd_digest_diff(args, spark: SparkSession) -> int:
     channel_col = args.channel_col
     if args.materialized:
         from etsd_time_series_database_spark.sources.store import (
-            read_digest_tier_meta,
+            DIGEST_TIER,
+            read_meta_sidecar,
         )
 
         metas = {
-            p: read_digest_tier_meta(spark, p)
+            p: read_meta_sidecar(spark, p, DIGEST_TIER.sidecar)
             for p in (args.left, args.right)
         }
         known = {p: m for p, m in metas.items() if m is not None}
@@ -1015,22 +995,25 @@ def cmd_amend(args, spark: SparkSession) -> int:
     default --cross-day resolve), rewriting ONLY the involved date
     partitions via the crash-safe swap (sources.store.amend_events —
     the reference's write-into-past-blocks capability, code/etsdRW.c,
-    as partition lifecycle). With --refresh-sink, chains the
-    day-scoped downsample refresh (recover --days) over exactly the
+    as partition lifecycle). With --refresh-sink / --refresh-digest,
+    chains the day-scoped downsample / digest refresh over exactly the
     amended days so derived tiers never go stale. Exit 2 if the target
-    is not a dt= store OR a --refresh-sink/--refresh-digest target is
-    missing/incompatible (checked BEFORE any rewrite — sidecar compare
-    when the target carries one, the bucket-alignment probe when it
-    predates sidecars — a bad refresh target must not leave the store
-    amended but the tiers stale), 3 if
-    the corrections are rejected (duplicate keys, or a cross-day move
-    under --cross-day fail)."""
+    is not a dt= store, or a refresh target is missing or refused by
+    the refresh's own check (sources.store.check_derived_tier, run
+    with the meta the refresh will use) — all checked BEFORE any
+    rewrite, so a bad refresh target never leaves the store amended
+    but the tiers stale; 3 if the corrections are rejected (duplicate
+    keys, or a cross-day move under --cross-day fail)."""
     from etsd_time_series_database_spark.sources.store import (
+        DIGEST_TIER,
+        DOWNSAMPLE_TIER,
         amend_events,
-        buckets_misaligned,
+        check_derived_tier,
         list_date_partitions,
-        read_digest_tier_meta,
-        read_meta_sidecar,
+        refresh_digest_tier,
+    )
+    from etsd_time_series_database_spark.streaming.ingest import (
+        refresh_downsample,
     )
 
     if not list_date_partitions(spark, args.path):
@@ -1040,102 +1023,37 @@ def cmd_amend(args, spark: SparkSession) -> int:
             file=sys.stderr,
         )
         return 2
-    # validate refresh targets BEFORE mutating the store: a typo'd
-    # sink/tier path discovered after the rewrite would leave the
-    # store amended with its derived tiers silently stale; a missing
-    # target would come back holding ONLY the amended days — a partial
-    # tier masquerading as complete
+    # chained refreshes as (tier, path, meta, refresh, shown as, unit);
+    # meta keys are the refresh's keyword names, so the pre-check
+    # below and the refresh after the rewrite use the same meta
+    refreshes = []
     if args.refresh_sink:
-        if int(args.refresh_width) <= 0 or 86_400 % int(
-            args.refresh_width
-        ) != 0:
-            # the same rule refresh_downsample enforces, checked here
-            # so it cannot fire AFTER the store rewrite (<= 0 first:
-            # a zero width must hit this message, not ZeroDivisionError)
-            print(
-                f"amend: --refresh-width {args.refresh_width} must be "
-                "a positive divisor of 86400 — a bucket would span a "
-                "day boundary (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if not list_date_partitions(spark, args.refresh_sink):
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} is not an "
-                "existing dt=-partitioned downsample sink; build it "
-                "with `recover --partitioned` first (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        sink_meta = read_meta_sidecar(
-            spark, args.refresh_sink, "_downsample_meta.json"
-        )
-        if sink_meta is not None and sink_meta["width_s"] != int(
-            args.refresh_width
-        ):
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} was built "
-                f"with width_s={sink_meta['width_s']} but "
-                f"--refresh-width={args.refresh_width}; pass the "
-                "sink's own width (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if sink_meta is None and buckets_misaligned(
-            spark, args.refresh_sink, args.refresh_width, "bucket_ts"
-        ):
-            # pre-sidecar sink: the sidecar compare above was vacuous —
-            # run the library's alignment probe HERE so an incompatible
-            # width is rejected before the store rewrite, not after it
-            print(
-                f"amend: --refresh-sink {args.refresh_sink} holds "
-                "buckets not aligned to --refresh-width="
-                f"{args.refresh_width} — it was built at a different "
-                "width; pass the sink's own width (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
+        refreshes.append((
+            DOWNSAMPLE_TIER, args.refresh_sink,
+            {"width_s": args.refresh_width}, refresh_downsample,
+            args.refresh_sink, "bucket row(s)",
+        ))
     if args.refresh_digest:
-        if int(args.digest_bucket) <= 0 or 86_400 % int(
-            args.digest_bucket
-        ) != 0:
-            print(
-                f"amend: --digest-bucket {args.digest_bucket} must be "
-                "a positive divisor of 86400 — a digest bucket would "
-                "span a day boundary (store unchanged)",
-                file=sys.stderr,
-            )
+        refreshes.append((
+            DIGEST_TIER, args.refresh_digest,
+            {"bucket_s": args.digest_bucket, "channel_col": "event_type",
+             "value_col": "value"}, refresh_digest_tier,
+            f"digest tier {args.refresh_digest}", "digest cell(s)",
+        ))
+    for tier, path, meta, *_ in refreshes:
+        try:
+            check_derived_tier(spark, tier, path, meta)
+        except ValueError as exc:
+            print(f"amend: {exc} (store unchanged)", file=sys.stderr)
             return 2
-        if not list_date_partitions(spark, args.refresh_digest):
+        if not list_date_partitions(spark, path):
+            # a missing tier refreshed day-scoped would come back
+            # holding ONLY the amended days — a partial tier
+            # masquerading as complete
             print(
-                f"amend: --refresh-digest {args.refresh_digest} is not "
-                "an existing dt=-partitioned digest tier; build it "
-                "with the `digest-tier` verb first (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        tier_meta = read_digest_tier_meta(spark, args.refresh_digest)
-        if tier_meta is not None and tier_meta["bucket_s"] != int(
-            args.digest_bucket
-        ):
-            print(
-                f"amend: --refresh-digest {args.refresh_digest} was "
-                f"built with bucket_s={tier_meta['bucket_s']} but "
-                f"--digest-bucket={args.digest_bucket}; pass the "
-                "tier's own bucket (store unchanged)",
-                file=sys.stderr,
-            )
-            return 2
-        if tier_meta is None and buckets_misaligned(
-            spark, args.refresh_digest, args.digest_bucket, "bucket_us"
-        ):
-            # pre-sidecar tier: same before-any-rewrite probe as the
-            # sink branch above
-            print(
-                f"amend: --refresh-digest {args.refresh_digest} holds "
-                "digest buckets not aligned to --digest-bucket="
-                f"{args.digest_bucket} — it was built at a different "
-                "bucket; pass the tier's own bucket (store unchanged)",
+                f"amend: {path} is not an existing dt=-partitioned "
+                f"{tier.name} tier; build it with `{tier.verb}` first "
+                "(store unchanged)",
                 file=sys.stderr,
             )
             return 2
@@ -1157,53 +1075,21 @@ def cmd_amend(args, spark: SparkSession) -> int:
         f"{stats['inserted']}, moved {stats['moved']} across "
         f"{len(stats['partitions'])} partition(s)"
     )
-    if args.refresh_sink:
-        from etsd_time_series_database_spark.streaming.ingest import (
-            refresh_downsample,
-        )
-
-        amended_days = sorted(
-            p.split("=", 1)[1] for p in stats["partitions"]
-        )
+    amended_days = sorted(p.split("=", 1)[1] for p in stats["partitions"])
+    for _tier, path, meta, refresh, shown, unit in refreshes:
         try:
-            rstats = refresh_downsample(
-                spark, args.path, args.refresh_sink,
-                width_s=args.refresh_width, days=amended_days,
-                target_files=args.target_files,
+            rstats = refresh(
+                spark, args.path, path, days=amended_days,
+                target_files=args.target_files, **meta,
             )
         except ValueError as exc:
-            # residual library-side refusal (the pre-checks above
-            # cover the known cases; anything new must still exit
-            # clean, not as a traceback)
+            # the pre-check above ran the same check; anything new
+            # must still exit clean, not as a traceback
             print(f"amend: {exc}", file=sys.stderr)
             return 2
         print(
-            f"refreshed {args.refresh_sink} for day(s) "
-            f"{', '.join(amended_days)} "
-            f"({sum(rstats.values())} bucket row(s))"
-        )
-    if args.refresh_digest:
-        from etsd_time_series_database_spark.sources.store import (
-            refresh_digest_tier,
-        )
-
-        amended_days = sorted(
-            p.split("=", 1)[1] for p in stats["partitions"]
-        )
-        try:
-            dstats = refresh_digest_tier(
-                spark, args.path, args.refresh_digest,
-                bucket_s=args.digest_bucket, days=amended_days,
-                target_files=args.target_files,
-            )
-        except ValueError as exc:
-            # parameter mismatch against the tier's _digest_meta.json
-            print(f"amend: {exc}", file=sys.stderr)
-            return 2
-        print(
-            f"refreshed digest tier {args.refresh_digest} for day(s) "
-            f"{', '.join(amended_days)} "
-            f"({sum(dstats.values())} digest cell(s))"
+            f"refreshed {shown} for day(s) {', '.join(amended_days)} "
+            f"({sum(rstats.values())} {unit})"
         )
     return 0
 

@@ -253,9 +253,10 @@ def with_sortable_bits(df, src: Column | str, out: str):
     final constant CASE instead), which is also what makes it safe:
     no log2(0)/floor(Inf) ever evaluates.
 
-    Output values are IDENTICAL to double_sortable_bits (pinned in
-    tests/test_operators_unit.py against the same doubleToLongBits
-    reference). The helper columns are dropped before returning.
+    Output values are IDENTICAL to double_sortable_bits, NULL for
+    NULL included (pinned in tests/test_operators_unit.py against the
+    same doubleToLongBits reference). The helper columns are dropped
+    before returning.
     """
     x = _c(src)
     d = df.withColumn("__dsb_x", x)
@@ -298,7 +299,10 @@ def with_sortable_bits(df, src: Column | str, out: str):
     )
     sub_bits = ((a * F.lit(2.0**537)) * F.lit(2.0**537)).cast("bigint")
     mag = F.when(a < F.lit(2.0**-1022), sub_bits).otherwise(normal_bits)
-    o = (
+    # NULL in, NULL out: without the guard a NULL falls through every
+    # null-valued CASE condition to the chain's otherwise (bits(1.0))
+    o = F.when(
+        xx.isNotNull(),
         F.when(F.isnan(xx), F.lit(0x7FF8000000000000))
         .when(xx == F.lit(float("inf")), F.lit(0x7FF0000000000000))
         .when(xx == F.lit(float("-inf")), F.lit(-1 - 0x7FF0000000000000))
@@ -310,7 +314,7 @@ def with_sortable_bits(df, src: Column | str, out: str):
         )
         .when(xx < F.lit(0.0), F.lit(-1) - mag)
         .otherwise(mag)
-        .cast("bigint")
+        .cast("bigint"),
     )
     return d.withColumn(out, o).drop(
         "__dsb_x", "__dsb_a", "__dsb_e0", "__dsb_m0", "__dsb_m", "__dsb_e"

@@ -19,7 +19,9 @@ from __future__ import annotations
 import os
 import posixpath
 import uuid
+from collections.abc import Callable
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -526,6 +528,188 @@ def sync_partition(
     return "synced"
 
 
+class DerivedTier(NamedTuple):
+    """One kind of derived ``dt=`` tier re-derived from an
+    authoritative store (the reference's recoverRRD,
+    code/etsdCmd.c:648-656, with buckets per the RRA spec,
+    code/plugins/edoRRD.c:44-74): what :func:`check_derived_tier` and
+    :func:`refresh_derived_tier` need to know about it."""
+
+    name: str  # messages, and the staging-dir kind of a day install
+    sidecar: str  # parameter sidecar at the tier root
+    width_key: str  # meta key holding the bucket width in seconds
+    bucket_col: str  # bucket start: a timestamp or epoch-micros bigint
+    verb: str  # the CLI verb that builds the whole tier
+
+
+DOWNSAMPLE_TIER = DerivedTier(
+    "downsample", "_downsample_meta.json", "width_s", "bucket_ts",
+    "recover --partitioned",
+)
+DIGEST_TIER = DerivedTier(
+    "digest", "_digest_meta.json", "bucket_s", "bucket_us", "digest-tier"
+)
+
+
+def check_derived_tier(
+    spark: SparkSession,
+    tier: DerivedTier,
+    path: str,
+    meta: dict,
+    rebuild: bool = False,
+) -> bool:
+    """The derived-tier contract, checked before anything is written:
+    :func:`refresh_derived_tier` runs it first, and ``amend`` runs it
+    for every chained tier before it rewrites the store. Raises
+    ValueError, in this order, when
+
+    1. the width ``meta[tier.width_key]`` is not a positive divisor of
+       86400 — a bucket spanning midnight would make a day-scoped
+       rewrite drop the neighbor day's share;
+    2. the tier exists but is not ``dt=``-partitioned — day
+       directories beside flat part files break every read;
+    3. the tier's parameter sidecar differs from ``meta`` — a day
+       refreshed with other parameters would mix bucket widths (or
+       channel/value columns) inside one tier;
+    4. the tier has no sidecar (it predates them) and holds buckets
+       not aligned to the width (:func:`buckets_misaligned`) — adopting
+       an unvalidated claim would lock the wrong width in for every
+       later refresh.
+
+    ``rebuild=True`` (a whole-tier rewrite) checks the width alone:
+    the rebuild replaces layout, parameters and buckets. ``meta``'s
+    keys are the refresh function's own keyword names, so a caller can
+    check a meta and then refresh with ``**meta``. Returns True when
+    the tier exists without a sidecar and passed check 4 — the refresh
+    then stamps ``meta`` before its first write."""
+    width = int(meta[tier.width_key])
+    redo = (
+        "rebuild the whole tier (days=None; CLI "
+        f"`{tier.verb}` without --days)"
+    )
+    if width <= 0 or 86_400 % width != 0:
+        raise ValueError(
+            f"{tier.name} tier: {tier.width_key}={width} must be a "
+            "positive divisor of 86400 — a bucket would span a day "
+            "boundary and a day-scoped refresh would lose the neighbor "
+            "day's rows"
+        )
+    fs, Path = _hadoop_fs(spark, path)
+    if rebuild or not fs.exists(Path(path)):
+        return False
+    if not list_date_partitions(spark, path):
+        raise ValueError(
+            f"{tier.name} tier {path} exists but is not a "
+            "dt=-partitioned table (a flat replay sink?) — a day-scoped "
+            f"refresh would mix layouts; {redo} first"
+        )
+    existing = read_meta_sidecar(spark, path, tier.sidecar)
+    if existing is not None:
+        if existing != meta:
+            raise ValueError(
+                f"{tier.name} tier {path} was built with {existing} but "
+                f"this refresh asked for {meta} — a day-scoped refresh "
+                "with other parameters would mix them inside one tier; "
+                f"pass the tier's own, or {redo} to change them"
+            )
+        return False
+    if buckets_misaligned(spark, path, width, tier.bucket_col):
+        raise ValueError(
+            f"{tier.name} tier {path} has no {tier.sidecar} and holds "
+            f"buckets not aligned to {tier.width_key}={width} — it was "
+            "built at a different width; pass the tier's own, or "
+            f"{redo}"
+        )
+    return True
+
+
+def refresh_derived_tier(
+    spark: SparkSession,
+    tier: DerivedTier,
+    path: str,
+    meta: dict,
+    source: DataFrame,
+    derive: Callable[[DataFrame], DataFrame],
+    channel: str,
+    days: list[str] | None,
+    target_files: int,
+    project: Callable[[DataFrame, list[str]], DataFrame] | None = None,
+) -> dict:
+    """Rebuild (``days=None``) or day-refresh the derived tier at
+    ``path`` from the ``source`` store: the shared body of
+    :func:`refresh_digest_tier` and
+    :func:`streaming.ingest.refresh_downsample`, which supply only the
+    ``meta`` their sidecar records and ``derive`` (source rows -> tier
+    rows keyed by ``channel`` and ``tier.bucket_col``). Runs
+    :func:`check_derived_tier` first.
+
+    A full rebuild overwrites the tier partitioned by bucket day,
+    stamps the sidecar and reads the result back for its per-day
+    counts. With ``target_files > 1`` each day fans out over up to
+    that many write tasks through a deterministic (channel,
+    bucket)-hash salt — not round-robin+partitionBy, where every task
+    holds a writer for every day — under an explicit partition count:
+    a column-only repartition is advisory, and AQE would coalesce the
+    small shuffle back into one task per day, undoing the salt.
+
+    A day refresh recomputes each named day from ``day_scoped(source,
+    day)`` (partition-pruned) into ``target_files`` files and installs
+    it with :func:`install_partition`; untouched days are never
+    listed, read or rewritten, and a day whose source vanished drops
+    its partition. Both paths run the same ``derive``, so a refreshed
+    day is bit-identical to a full rebuild of it. ``project(fresh,
+    tier_columns)``, when given, maps each fresh day onto an existing
+    tier's columns. Returns {day: rows}."""
+    adopt = check_derived_tier(spark, tier, path, meta, rebuild=days is None)
+    bucket = tier.bucket_col
+    if days is None:
+        full = derive(source)
+        start = F.col(bucket)
+        if not dict(full.dtypes)[bucket].startswith("timestamp"):
+            start = F.timestamp_micros(start)
+        full = full.withColumn("dt", F.to_date(start))
+        if int(target_files) > 1:
+            n_part = int(
+                spark.conf.get("spark.sql.shuffle.partitions", "200")
+            )
+            full = full.repartition(
+                n_part,
+                F.col("dt"),
+                F.pmod(
+                    F.abs(F.hash(channel, bucket)), F.lit(int(target_files))
+                ),
+            )
+        else:
+            full = full.repartition("dt")
+        (
+            full.sortWithinPartitions(channel, bucket)
+            .write.mode("overwrite")
+            .partitionBy("dt")
+            .parquet(path)
+        )
+        write_meta_sidecar(spark, path, tier.sidecar, meta)
+        out = spark.read.parquet(path).groupBy("dt").count()
+        return {r.dt.isoformat(): r["count"] for r in out.collect()}
+    if adopt:
+        write_meta_sidecar(spark, path, tier.sidecar, meta)
+    tier_cols = None
+    if project is not None:
+        fs, Path = _hadoop_fs(spark, path)
+        if fs.exists(Path(path)):
+            tier_cols = spark.read.parquet(path).columns
+    stats: dict = {}
+    for d in sorted(days):
+        fresh = (
+            derive(day_scoped(source, d))
+            .repartition(int(target_files))
+            .sortWithinPartitions(channel, bucket)
+        )
+        if tier_cols is not None:
+            fresh = project(fresh, tier_cols)
+        stats[d] = install_partition(fresh, f"{path}/dt={d}", tier.name)
+    return stats
+
+
 def refresh_digest_tier(
     spark: SparkSession,
     store_path: str,
@@ -536,139 +720,44 @@ def refresh_digest_tier(
     value_col: str = "value",
     target_files: int = 1,
 ) -> dict:
-    """Materialize (or day-scope-refresh) the q77 content digest as a
-    dt=-partitioned table beside the store — the MONITORING tier of
-    the digest/repair loop: a periodic replica comparison then reads
-    two KB-sized digest TABLES (`digest-diff --materialized`) instead
-    of re-scanning both stores, so the cadence of "did my replica
-    drift" checks is decoupled from store size. After an ``amend``,
-    the tier is stale for exactly the amended days; ``days=[...]``
-    recomputes only those partitions from the store and installs each
-    through :func:`install_partition` — untouched tier partitions are
-    never listed, read, or rewritten. The day filter goes on the
-    store's ``dt`` PARTITION column alone when present so Catalyst
-    prunes the scan to that one directory — a ``to_date(ts)``
-    predicate is a data-column filter with zero PartitionFilters that
-    plans tasks over every day's files, and is session-timezone
-    dependent besides (plan-pinned). ``days=None`` rebuilds the whole tier.
-    ``bucket_s`` must divide 86400 so no digest bucket spans a day
-    boundary. ``target_files`` sets the per-day output fan-out
-    (default 1 — today's layout; same knob as
-    :func:`compact_partition`).
-
-    The tier root carries a ``_digest_meta.json`` sidecar recording
-    ``bucket_s``/``channel_col``/``value_col`` (underscore-prefixed,
-    so parquet readers ignore it): a day-scoped refresh against a tier
-    built with DIFFERENT parameters raises instead of silently mixing
-    bucket widths, and ``digest-diff --materialized`` uses it to
-    refuse comparing incompatible tiers.
-
-    A day whose store partition vanished drops its tier partition.
-    Same arithmetic as :func:`operators.range_stats.range_digest`
-    (q77), so a refreshed day is bit-identical to a full recompute of
-    that day (test-pinned). Returns {day: n_cells}.
+    """Materialize (or day-refresh) the q77 content digest as a
+    dt=-partitioned tier beside the store — the MONITORING tier of the
+    digest/repair loop: a periodic replica comparison then reads two
+    KB-sized digest TABLES (`digest-diff --materialized`) instead of
+    re-scanning both stores, so the cadence of "did my replica drift"
+    checks is decoupled from store size. After an ``amend`` the tier
+    is stale for exactly the amended days; ``days=[...]`` recomputes
+    only those. Same arithmetic as
+    :func:`operators.range_stats.range_digest` (q77). The
+    ``_digest_meta.json`` sidecar records ``bucket_s``/``channel_col``/
+    ``value_col``; ``digest-diff --materialized`` also reads it to
+    refuse comparing incompatible tiers. Rules, layout and
+    ``target_files``: :func:`refresh_derived_tier`. Returns
+    {day: n_cells}.
 
     Freshness contract: the tier proves drift only as of its own
     refresh — REPAIR's convergence proof deliberately re-digests the
     stores themselves (cli.cmd_repair), never this table; a stale
     materialized digest must not be able to fake convergence.
     """
-    if int(bucket_s) <= 0 or 86_400 % int(bucket_s) != 0:
-        raise ValueError(
-            f"refresh_digest_tier: bucket_s={bucket_s} must be a "
-            "positive divisor of 86400 — a digest bucket would span a "
-            "day boundary and a day-scoped refresh would be wrong"
-        )
     from etsd_time_series_database_spark.operators.range_stats import (
         range_digest,
     )
 
-    store = spark.read.parquet(store_path)
-    meta = {
-        "bucket_s": int(bucket_s),
-        "channel_col": channel_col,
-        "value_col": value_col,
-    }
-
-    def digest(df: DataFrame) -> DataFrame:
-        return range_digest(
+    return refresh_derived_tier(
+        spark,
+        DIGEST_TIER,
+        digest_path,
+        {"bucket_s": int(bucket_s), "channel_col": channel_col,
+         "value_col": value_col},
+        spark.read.parquet(store_path),
+        lambda df: range_digest(
             df, bucket_s=bucket_s, channel=channel_col, value=value_col
-        )
-
-    if days is None:
-        full = digest(store).withColumn(
-            "dt", F.to_date(F.timestamp_micros("bucket_us"))
-        )
-        if int(target_files) > 1:
-            # spread each day across up to target_files write tasks —
-            # deterministic (channel, bucket)-hash salt, so the
-            # fan-out knob works for the full rebuild exactly as for a
-            # --days refresh without the round-robin+partitionBy
-            # anti-pattern (every task holding a writer for every day)
-            # explicit partition count: a column-only repartition is
-            # advisory and AQE coalesces the tiny shuffle back into
-            # one task per day, silently undoing the salt
-            n_part = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            full = full.repartition(
-                n_part,
-                F.col("dt"),
-                F.pmod(
-                    F.abs(F.hash(channel_col, "bucket_us")),
-                    F.lit(int(target_files)),
-                ),
-            )
-        else:
-            full = full.repartition("dt")
-        (
-            full.sortWithinPartitions(channel_col, "bucket_us")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(digest_path)
-        )
-        write_digest_tier_meta(spark, digest_path, meta)
-        out = spark.read.parquet(digest_path)
-        return {
-            r.dt.isoformat(): r.n
-            for r in out.groupBy("dt").count().withColumnRenamed(
-                "count", "n"
-            ).collect()
-        }
-    fs, Path = _hadoop_fs(spark, digest_path)
-    existing = read_digest_tier_meta(spark, digest_path)
-    if existing is not None and existing != meta:
-        raise ValueError(
-            f"refresh_digest_tier: tier {digest_path} was built with "
-            f"{existing} but this refresh asked for {meta} — a "
-            "day-scoped refresh with different parameters would mix "
-            "bucket widths inside one tier; rebuild it (days=None) to "
-            "change parameters"
-        )
-    if existing is None and fs.exists(Path(digest_path)):
-        # pre-sidecar tier: validate the claimed bucket against the
-        # existing buckets' alignment before adopting it as the meta —
-        # stamping an unvalidated claim would lock the wrong bucket in
-        # (a FINER claim divides the true buckets and is undetectable
-        # from data; the sidecar closes that for new builds)
-        if buckets_misaligned(spark, digest_path, bucket_s, "bucket_us"):
-            raise ValueError(
-                f"refresh_digest_tier: tier {digest_path} holds buckets "
-                f"not aligned to bucket_s={bucket_s} — it was built at "
-                "a different bucket; pass the tier's own bucket, or "
-                "rebuild it (days=None)"
-            )
-        write_digest_tier_meta(spark, digest_path, meta)
-    return {
-        d: install_partition(
-            digest(day_scoped(store, d))
-            .repartition(int(target_files))
-            .sortWithinPartitions(channel_col, "bucket_us"),
-            f"{digest_path}/dt={d}",
-            "digest",
-        )
-        for d in sorted(days)
-    }
+        ),
+        channel_col,
+        days,
+        target_files,
+    )
 
 
 def staging_dir(dst: str, kind: str) -> str:
@@ -719,8 +808,8 @@ def install_partition(fresh: DataFrame, part_dir: str, kind: str) -> int:
     readability check before anything destructive) and install it
     with :func:`swap_in_dir` — or, when it holds no rows, drop
     ``part_dir`` rather than install an empty partition (its source
-    day vanished, e.g. drained by a cross-day amend). The shared tail
-    of the day-scoped tier refreshes. Returns the row count."""
+    day vanished, e.g. drained by a cross-day amend). The tail of a
+    :func:`refresh_derived_tier` day refresh. Returns the row count."""
     spark = fresh.sparkSession
     fs, Path = _hadoop_fs(spark, part_dir)
     tmp = staging_dir(part_dir, kind)
@@ -806,8 +895,7 @@ def buckets_misaligned(
 ) -> bool:
     """True when any existing bucket of the derived table at ``path``
     is NOT aligned to ``width_s`` seconds — the pre-sidecar adoption
-    probe shared by the day-scoped refresh paths and the CLI's
-    before-any-rewrite guards. ``bucket_col`` may be a timestamp
+    probe of :func:`check_derived_tier`. ``bucket_col`` may be a timestamp
     (downsample sinks' ``bucket_ts``) or an epoch-micros bigint
     (digest tiers' ``bucket_us``); the probe is a ``limit(1)`` scan,
     never a full materialization. A claimed width FINER than the build
@@ -830,22 +918,6 @@ def buckets_misaligned(
     )
     w_us = int(width_s) * 1_000_000
     return bool(df.filter(col % w_us != 0).limit(1).count())
-
-
-def write_digest_tier_meta(
-    spark: SparkSession, tier_path: str, meta: dict
-) -> None:
-    """Digest-tier sidecar (``_digest_meta.json``): what lets
-    ``digest-diff --materialized`` refuse comparing tiers built at
-    different ``bucket_s`` up front instead of reporting total
-    spurious drift."""
-    write_meta_sidecar(spark, tier_path, "_digest_meta.json", meta)
-
-
-def read_digest_tier_meta(spark: SparkSession, tier_path: str) -> dict | None:
-    """The ``_digest_meta.json`` sidecar of a digest tier (None for a
-    pre-sidecar or foreign table)."""
-    return read_meta_sidecar(spark, tier_path, "_digest_meta.json")
 
 
 def list_date_partitions(spark: SparkSession, path: str) -> list[str]:

@@ -675,167 +675,54 @@ def refresh_downsample(
     days: list[str] | None = None,
     target_files: int = 1,
 ) -> dict:
-    """Day-scoped consolidation refresh — the recover path narrowed to
-    the days that actually changed: after ``amend`` applies late
-    corrections to the raw store, the downsample tiers derived from it
-    are stale for exactly those days, and re-deriving the WHOLE sink
-    (the reference's recoverRRD, code/etsdCmd.c:648-656) is O(store).
-    This recomputes only the named days' buckets from the raw store
-    and installs each day through ``sources.store.install_partition``;
-    untouched sink partitions are never listed, read, or rewritten.
+    """Rebuild (``days=None``) or day-refresh the dt=-partitioned
+    downsample sink of a raw store — the recover path (the reference's
+    recoverRRD, code/etsdCmd.c:648-656) narrowed to the days that
+    changed: after ``amend`` applies late corrections, the sink is
+    stale for exactly those days, and re-deriving all of it is
+    O(store). The partitioned twin of :func:`replay`'s flat sink and
+    what the CLI ``recover --partitioned`` / ``--days`` writes.
 
-    When the raw store is ``dt=``-partitioned the day filter goes on
-    the PARTITION column alone (``dt == day``) so Catalyst prunes the
-    scan to that one directory — a ``to_date(ts)`` predicate is a
-    data-column filter that plans tasks over EVERY day's files AND is
-    session-timezone dependent (plan-pinned: non-empty
-    PartitionFilters and scan_files == the day's file count). A flat
-    raw store falls back to the ts predicate.
-
-    ``target_files`` controls the per-day output fan-out (same knob as
-    :func:`sources.store.compact_partition`): default 1 keeps today's
-    single-file layout; a hot day at scale can spread its rewrite
-    across N write tasks.
-
-    The sink root carries a ``_downsample_meta.json`` sidecar
-    recording ``width_s`` (the digest tier's ``_digest_meta.json``
-    pattern): a day-scoped refresh at a DIFFERENT width raises instead
-    of silently mixing bucket widths inside one sink, and ``amend
-    --refresh-sink`` validates ``--refresh-width`` against it before
-    touching the store.
-
-    The sink layout is date-partitioned (``dt=`` from the bucket
-    start) — the partitioned twin of :func:`replay`'s flat sink, and
-    what the CLI ``recover --days`` writes. ``days=None`` rebuilds the
-    full sink in the same layout. ``width_s`` must divide 86400 so no
-    bucket spans a day boundary (raises otherwise — a day-scoped
-    rewrite of a cross-midnight bucket would drop the neighbor day's
-    contribution).
-
-    Same :func:`consolidate` as the live foreachBatch sink and the
-    flat replay, so a refreshed day is bit-identical to a full
-    recompute of that day (test-pinned). The consolidation carries
-    ``sum_value`` (exact DECIMAL sums) alongside the display
-    ``avg_value`` — sums compose associatively where stored doubles
-    don't, which is what lets :func:`operators.trends.fetch_from_tier`
-    answer coarser requests from this sink bit-identically to a raw
-    scan. Returns {day: n_buckets}.
+    Key columns adapt to the store flavor: (source, channel) for
+    canonical ingest tables, event_type for events stores. Same
+    :func:`consolidate` as the live foreachBatch sink and the flat
+    replay; its exact DECIMAL ``sum_value`` is what lets
+    :func:`operators.trends.fetch_from_tier` compose coarser answers
+    from this sink bit-identically to a raw scan. A day refresh of a
+    sink built before ``sum_value`` existed keeps that sink's column
+    set — a mixed-schema sink would let fetch compose null sums for
+    the untouched days; a full rebuild is the upgrade path. The
+    ``_downsample_meta.json`` sidecar records ``width_s``. Rules,
+    layout and ``target_files``:
+    :func:`sources.store.refresh_derived_tier`. Returns
+    {day: n_buckets}.
     """
-    if int(width_s) <= 0 or 86_400 % int(width_s) != 0:
-        raise ValueError(
-            f"refresh_downsample: width_s={width_s} must be a positive "
-            "divisor of 86400 — a bucket would span a day boundary "
-            "and a day-scoped rewrite would lose the neighbor day's "
-            "rows"
-        )
     from etsd_time_series_database_spark.sources.store import (
-        _hadoop_fs,
-        buckets_misaligned,
-        day_scoped,
-        install_partition,
-        read_meta_sidecar,
-        write_meta_sidecar,
+        DOWNSAMPLE_TIER,
+        refresh_derived_tier,
     )
 
-    sink_meta = {"width_s": int(width_s)}
     raw = spark.read.parquet(raw_path)
-    # key columns adapt to the store flavor: canonical ingest tables
-    # carry (source, channel); events stores carry event_type
     channel = "channel" if "channel" in raw.columns else "event_type"
     keys = (["source"] if "source" in raw.columns else []) + [channel]
 
-    if days is None:
-        full = consolidate(raw, keys, width_s).withColumn(
-            "dt", F.to_date("bucket_ts")
-        )
-        if int(target_files) > 1:
-            # fan each day out across up to target_files write tasks —
-            # deterministic (channel, bucket)-hash salt, so the knob
-            # works for a full rebuild exactly as for a --days refresh
-            # without the round-robin+partitionBy anti-pattern (every
-            # task holding a writer for every day). Salting by channel
-            # alone degenerates when few channels share a hash parity.
-            # explicit partition count: a column-only repartition is
-            # advisory and AQE coalesces the tiny shuffle back into
-            # one task per day, silently undoing the salt
-            n_part = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            full = full.repartition(
-                n_part,
-                F.col("dt"),
-                F.pmod(
-                    F.abs(F.hash(channel, "bucket_ts")),
-                    F.lit(int(target_files)),
-                ),
-            )
-        else:
-            full = full.repartition("dt")
-        (
-            full.sortWithinPartitions(channel, "bucket_ts")
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(sink_path)
-        )
-        write_meta_sidecar(
-            spark, sink_path, "_downsample_meta.json", sink_meta
-        )
-        out = spark.read.parquet(sink_path)
-        return {
-            r.dt.isoformat(): r.n
-            for r in out.groupBy("dt").count().withColumnRenamed(
-                "count", "n"
-            ).collect()
-        }
+    def keep_sink_columns(fresh: DataFrame, sink_cols: list[str]) -> DataFrame:
+        if "sum_value" in sink_cols:
+            return fresh
+        return fresh.select(*[c for c in sink_cols if c != "dt"])
 
-    fs, Path = _hadoop_fs(spark, sink_path)
-    existing = read_meta_sidecar(spark, sink_path, "_downsample_meta.json")
-    if existing is not None and existing != sink_meta:
-        raise ValueError(
-            f"refresh_downsample: sink {sink_path} was built with "
-            f"{existing} but this refresh asked for {sink_meta} — a "
-            "day-scoped refresh at a different width would mix bucket "
-            "widths inside one sink; rebuild it (days=None) to change "
-            "the width"
-        )
-    if existing is None and fs.exists(Path(sink_path)):
-        # pre-sidecar sink: before ADOPTING the caller's width as its
-        # meta, check every existing bucket aligns to it — stamping an
-        # unvalidated claim would both mix widths in this refresh and
-        # lock the wrong width in for every future one. (A claimed
-        # width FINER than the build width divides its buckets and is
-        # undetectable from data; the sidecar closes that for every
-        # sink built from round 13 on.)
-        if buckets_misaligned(spark, sink_path, width_s, "bucket_ts"):
-            raise ValueError(
-                f"refresh_downsample: sink {sink_path} holds buckets "
-                f"not aligned to width_s={width_s} — it was built at a "
-                "different width; pass the sink's own width, or "
-                "rebuild it (days=None) to change the width"
-            )
-        write_meta_sidecar(
-            spark, sink_path, "_downsample_meta.json", sink_meta
-        )
-    # pre-round-14 sink (no carried exact sums): preserve ITS column
-    # set rather than upgrading one day — a mixed-schema sink would
-    # let fetch compose null sums for un-refreshed days; a full
-    # rebuild (days=None) is the upgrade path
-    legacy_cols: list[str] | None = None
-    if fs.exists(Path(sink_path)):
-        sink_cols = spark.read.parquet(sink_path).columns
-        if "sum_value" not in sink_cols:
-            legacy_cols = [c for c in sink_cols if c != "dt"]
-    stats: dict = {}
-    for d in sorted(days):
-        fresh = (
-            consolidate(day_scoped(raw, d), keys, width_s)
-            .repartition(int(target_files))
-            .sortWithinPartitions(channel, "bucket_ts")
-        )
-        if legacy_cols is not None:
-            fresh = fresh.select(*legacy_cols)
-        stats[d] = install_partition(fresh, f"{sink_path}/dt={d}", "downsample")
-    return stats
+    return refresh_derived_tier(
+        spark,
+        DOWNSAMPLE_TIER,
+        sink_path,
+        {"width_s": int(width_s)},
+        raw,
+        lambda df: consolidate(df, keys, width_s),
+        channel,
+        days,
+        target_files,
+        project=keep_sink_columns,
+    )
 
 
 def carry_forward_batch(batch: DataFrame, state: DataFrame | None) -> tuple[DataFrame, DataFrame]:

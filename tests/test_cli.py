@@ -1446,6 +1446,51 @@ def test_amend_refresh_guards_run_before_any_rewrite(spark, tmp_path, capsys):
     assert _store_checksums(raw) != before
 
 
+def test_amend_digest_precheck_compares_the_whole_meta(
+    spark, tmp_path, capsys
+):
+    """amend's pre-check is the refresh's own check: a digest tier
+    built with --channel-col user_id contradicts the refresh amend
+    chains (channel_col event_type) even at the same bucket, so the
+    amend exits 2 BEFORE the rewrite. Comparing bucket_s alone let the
+    store be amended and the refresh then refuse — store rewritten,
+    tier stale."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    raw = str(tmp_path / "raw_cc")
+    assert cli.main(
+        ["create", EVENTS, raw, "--mode", "overwrite"], spark=spark
+    ) == 0
+    day = sorted(
+        d for d in os.listdir(raw) if d.startswith("dt=")
+    )[0].split("=", 1)[1]
+    corr = str(tmp_path / "corr_cc.parquet")
+    cli._load_events(spark, EVENTS).filter(
+        F.to_date("ts") == F.lit(day)
+    ).limit(5).withColumn("value", F.col("value") + 1.0).write.parquet(corr)
+    tier = str(tmp_path / "tier_cc")
+    assert cli.main(
+        ["digest-tier", raw, tier, "--bucket", "86400",
+         "--channel-col", "user_id"],
+        spark=spark,
+    ) == 0
+    before = _store_checksums(raw)
+    tier_before = _store_checksums(tier)
+    capsys.readouterr()
+    rc = cli.main(
+        ["amend", raw, corr, "--refresh-digest", tier,
+         "--digest-bucket", "86400"],
+        spark=spark,
+    )
+    out = capsys.readouterr()
+    assert rc == 2 and "store unchanged" in out.err
+    assert "channel_col" in out.err and "amended" not in out.out
+    assert _store_checksums(raw) == before
+    assert _store_checksums(tier) == tier_before
+
+
 def test_target_files_spreads_rewrite_without_changing_content(
     spark, tmp_path, capsys
 ):

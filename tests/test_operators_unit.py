@@ -2087,8 +2087,10 @@ def test_poly_fingerprint_code_points_and_sortable_bits(spark):
     must hash CODE POINTS — identical to the old O(len^2) substr walk
     and to a Python code-point reference — including non-BMP
     (supplementary-plane) text, combining marks, and the empty
-    string. (2) double_sortable_bits must be the exact sortable image
-    of java.lang.Double.doubleToLongBits on every special value."""
+    string. (2) double_sortable_bits and its projection form
+    with_sortable_bits must be the exact sortable image of
+    java.lang.Double.doubleToLongBits on every special value, and map
+    NULL to NULL."""
     import math
     import struct
 
@@ -2099,6 +2101,7 @@ def test_poly_fingerprint_code_points_and_sortable_bits(spark):
         FP_MOD,
         double_sortable_bits,
         poly_fingerprint,
+        with_sortable_bits,
     )
 
     corpus = [
@@ -2152,13 +2155,19 @@ def test_poly_fingerprint_code_points_and_sortable_bits(spark):
         2.0**-500, 2.0**-501, 0.9999999403953552, 42.0, -273.15,
     ]
     vdf = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vals)], "i int, x double"
+        [(i, v) for i, v in enumerate(vals)] + [(len(vals), None)],
+        "i int, x double",
     )
-    got = {
-        r["i"]: r["o"]
-        for r in vdf.select(
+    forms = {
+        "double_sortable_bits": vdf.select(
             "i", double_sortable_bits(F.col("x")).alias("o")
-        ).collect()
+        ),
+        "with_sortable_bits": with_sortable_bits(vdf, "x", "o").select(
+            "i", "o"
+        ),
     }
-    for i, v in enumerate(vals):
-        assert got[i] == ref_bits(v), (v, got[i], ref_bits(v))
+    for form, out in forms.items():
+        got = {r["i"]: r["o"] for r in out.collect()}
+        for i, v in enumerate(vals):
+            assert got[i] == ref_bits(v), (form, v, got[i], ref_bits(v))
+        assert got[len(vals)] is None, (form, got[len(vals)])

@@ -106,3 +106,26 @@ def test_partitioned_store_prunes_by_date(spark, tmp_path):
     plan = read._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(dt" in plan
     assert read.count() == 1
+
+
+def test_day_refresh_refuses_flat_sink(spark, tmp_path):
+    """The dt= layout rule lives in the library, not only in the CLI:
+    a day-scoped refresh_downsample against a FLAT sink (replay's
+    layout) raises ValueError and leaves the sink as it was — no dt=
+    directory beside the flat part files, no sidecar stamped."""
+    rows = [
+        ("2024-01-01 00:00:05", "a", 1.0),
+        ("2024-01-01 00:01:10", "a", 5.0),
+        ("2024-01-02 00:00:10", "b", 7.0),
+    ]
+    raw, sink = str(tmp_path / "raw"), str(tmp_path / "flat_sink")
+    _rows_df(spark, rows).coalesce(1).write.parquet(raw)
+    ingest.consolidate(
+        spark.read.parquet(raw), ["source", "channel"], 60
+    ).write.parquet(sink)
+    listing = sorted(os.listdir(sink))
+    with pytest.raises(ValueError, match="dt=-partitioned"):
+        ingest.refresh_downsample(
+            spark, raw, sink, width_s=60, days=["2024-01-01"]
+        )
+    assert sorted(os.listdir(sink)) == listing

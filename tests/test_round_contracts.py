@@ -109,6 +109,17 @@ def test_selfcheck_snapshots_are_scale_distinct():
     assert b["x31_segment_dedup"]["spark_rows"] == 5000
 
 
+def _package_functions():
+    """Every top-level function of the package as ``ast`` nodes (nested
+    defs stay inside their enclosing top-level function)."""
+    import ast
+
+    for f in (REPO / "etsd_time_series_database_spark").rglob("*.py"):
+        for top in ast.parse(f.read_text()).body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield top
+
+
 def _calls_by_function(attr: str, receiver: str | None) -> dict[str, int]:
     """{top-level function: n} for calls ``<receiver>.<attr>(`` (any
     receiver when None) anywhere in the package, nested defs counted
@@ -116,22 +127,19 @@ def _calls_by_function(attr: str, receiver: str | None) -> dict[str, int]:
     import ast
 
     out: dict[str, int] = {}
-    for f in (REPO / "etsd_time_series_database_spark").rglob("*.py"):
-        for top in ast.parse(f.read_text()).body:
-            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            for node in ast.walk(top):
-                if (
-                    isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr == attr
-                    and (
-                        receiver is None
-                        or isinstance(node.func.value, ast.Name)
-                        and node.func.value.id == receiver
-                    )
-                ):
-                    out[top.name] = out.get(top.name, 0) + 1
+    for top in _package_functions():
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == attr
+                and (
+                    receiver is None
+                    or isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == receiver
+                )
+            ):
+                out[top.name] = out.get(top.name, 0) + 1
     return out
 
 
@@ -149,3 +157,86 @@ def test_directory_swaps_go_through_swap_in_dir():
     }, renames
     assert sum(renames.values()) - renames["swap_in_dir"] == 6, renames
     assert set(_calls_by_function("getFileSystem", None)) == {"_hadoop_fs"}
+
+
+def test_derived_tier_contract_has_one_copy():
+    """The derived-tier rules (``store.check_derived_tier``) and the
+    salted whole-tier rewrite (``store.refresh_derived_tier``) exist
+    once: the downsample sink, the digest tier and amend's pre-check
+    all go through them. Hand copies drifted — amend compared only the
+    bucket width while the refresh compared the whole meta, and only
+    the CLI refused a day refresh of a flat sink."""
+    import ast
+
+    from etsd_time_series_database_spark.sources import store
+
+    tier_sidecars = {"_downsample_meta.json", "_digest_meta.json"}
+
+    def is_call(node, name):
+        f = getattr(node, "func", None)
+        return isinstance(node, ast.Call) and (
+            isinstance(f, ast.Name) and f.id == name
+            or isinstance(f, ast.Attribute) and f.attr == name
+        )
+
+    def reads_tier_sidecar(node):
+        # read_meta_sidecar(spark, path, <tier sidecar>)
+        return any(
+            is_call(n, "read_meta_sidecar")
+            and len(n.args) == 3
+            and (
+                isinstance(n.args[2], ast.Constant)
+                and n.args[2].value in tier_sidecars
+                or isinstance(n.args[2], ast.Attribute)
+                and n.args[2].attr == "sidecar"
+            )
+            for n in ast.walk(node)
+        )
+
+    divisor, misaligned, compares, salted = set(), set(), set(), set()
+    for top in _package_functions():
+        read_names = {
+            t.id
+            for n in ast.walk(top)
+            if isinstance(n, ast.Assign) and reads_tier_sidecar(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+
+        def from_sidecar(operand):
+            if isinstance(operand, ast.Subscript):
+                operand = operand.value
+            return isinstance(operand, ast.Name) and operand.id in read_names
+
+        for n in ast.walk(top):
+            if (
+                isinstance(n, ast.BinOp)
+                and isinstance(n.op, ast.Mod)
+                and isinstance(n.left, ast.Constant)
+                and n.left.value == 86_400
+            ):
+                divisor.add(top.name)
+            if is_call(n, "buckets_misaligned"):
+                misaligned.add(top.name)
+            if isinstance(n, ast.Compare) and any(
+                isinstance(op, (ast.Eq, ast.NotEq)) for op in n.ops
+            ):
+                # a sidecar compared against something that is not
+                # itself a sidecar (digest-diff compares two tiers'
+                # sidecars with each other, which is not a request)
+                sides = [from_sidecar(o) for o in [n.left, *n.comparators]]
+                if any(sides) and not all(sides):
+                    compares.add(top.name)
+            if (
+                is_call(n, "partitionBy")
+                and [a.value for a in n.args if isinstance(a, ast.Constant)]
+                == ["dt"]
+                and any(is_call(h, "hash") for h in ast.walk(top))
+            ):
+                salted.add(top.name)
+    assert divisor == {"check_derived_tier"}, divisor
+    assert misaligned == {"check_derived_tier"}, misaligned
+    assert compares == {"check_derived_tier"}, compares
+    assert salted == {"refresh_derived_tier"}, salted
+    assert not hasattr(store, "read_digest_tier_meta")
+    assert not hasattr(store, "write_digest_tier_meta")
