@@ -1899,73 +1899,32 @@ def xff_consolidate(
     ts: str = "ts",
     value: str = "value",
 ) -> DataFrame:
-    """RRA consolidation under the xfiles factor — the validity rule
-    the reference's RRD target applies and its own blocks carry as
-    valid-interval counts: an ``RRA:AVERAGE:xff:steps:rows`` line
-    (`ECM-1240 storage format 2.txt:142-148`) declares what fraction
-    of a consolidation interval may be UNKNOWN source intervals while
-    the consolidated value still counts as known; the reference's
-    block header stores "Total intervals | Valid intervals" for
-    exactly this accounting (`ECM-1240 storage format 2.txt:8`;
-    short-block commit `code/etsdSave.c:58-66`).
+    """RRA consolidation under the xfiles factor: an
+    ``RRA:AVERAGE:xff:steps:rows`` line (`ECM-1240 storage format
+    2.txt:142-148`) declares what fraction of a consolidation interval
+    may be UNKNOWN source intervals while the consolidated value still
+    counts as known; the reference's block header stores "Total
+    intervals | Valid intervals" for this accounting (`ECM-1240
+    storage format 2.txt:8`; short-block commit
+    `code/etsdSave.c:58-66`).
 
-    Per (channel, ``width_s`` bucket): ``expected = width_s/step_s``
-    source intervals (``step_s`` is the deployment's polling cadence —
-    the reference's config-fixed interval), ``n`` = readings actually
-    present (rows whose ``status`` is 0 when the frame carries a
-    status column — the plugin ABI marks 0xFFFFFFFF/-1 readings
-    invalid, `Plugin_API.txt:31-32` — else all non-null values).
-    The bucket is VALID iff ``(expected - n) * 100 <= xff_pct *
-    expected`` (integer arithmetic — no float threshold, so the
-    decision hashes identically on any engine). Valid buckets carry
-    exact-DECIMAL-derived avg and min/max over the known readings;
-    invalid buckets keep their counts but NULL aggregates — a
-    dashboard must see "unknown", never an average quietly computed
-    from a sliver of the interval.
-
-    One map-side-combinable hash aggregate; scale-safe at any corpus
-    size. ``xff_pct`` is the xff as an integer percent (0..99).
+    Per (channel, ``width_s`` bucket), ``expected = width_s/step_s``
+    source intervals (``step_s`` is the deployment's polling cadence)
+    and ``n`` = non-null readings present, counting only rows whose
+    ``status`` is 0 when the frame carries a status column (the plugin
+    ABI marks 0xFFFFFFFF/-1 readings invalid, `Plugin_API.txt:31-32`).
+    ``xff_pct`` is the xff as an integer percent (0..99). One
+    map-side-combinable hash aggregate. Validity rule, NULLed
+    aggregates and avg_v: :func:`operators.trends._rra_finish`.
     """
-    if int(width_s) % int(step_s) != 0:
-        raise ValueError(
-            f"xff_consolidate: step_s={step_s} does not divide "
-            f"width_s={width_s} — expected-interval accounting needs "
-            "whole steps per bucket"
-        )
-    expected = int(width_s) // int(step_s)
-    w_us = int(width_s) * 1_000_000
-    src = df
-    if "status" in df.columns:
-        src = df.filter(F.col("status") == 0)
-    agged = (
-        src.select(
-            F.col(channel),
-            (F.expr(f"unix_micros({ts}) div {w_us}") * w_us).alias(
-                "bucket_us"
-            ),
-            F.col(value).alias("__v"),
-        )
-        .groupBy(channel, "bucket_us")
-        .agg(
-            F.count("__v").cast("bigint").alias("n"),
-            F.sum(F.col("__v").cast("decimal(18,6)")).alias("__s"),
-            F.min("__v").alias("__min"),
-            F.max("__v").alias("__max"),
-        )
+    from etsd_time_series_database_spark.operators.trends import (
+        _rra_finish,
+        _rra_fold,
     )
-    valid = (
-        (F.lit(expected) - F.col("n")) * 100
-        <= F.lit(int(xff_pct) * expected)
-    )
-    return agged.select(
-        F.col(channel),
-        "bucket_us",
-        "n",
-        F.lit(expected).cast("bigint").alias("expected"),
-        valid.alias("is_valid"),
-        F.when(
-            valid, F.round(F.col("__s").cast("double") / F.col("n"), 6)
-        ).alias("avg_v"),
-        F.when(valid, F.col("__min")).alias("min_v"),
-        F.when(valid, F.col("__max")).alias("max_v"),
+
+    src = df.filter(F.col("status") == 0) if "status" in df.columns else df
+    return _rra_finish(
+        _rra_fold(src, [channel], ts, value, width_s, count_all=False),
+        [channel],
+        (width_s, step_s, xff_pct),
     ).orderBy(channel, "bucket_us")

@@ -42,6 +42,8 @@ EWMA weights are exact powers of two.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -2434,6 +2436,150 @@ def bucketed_time_weighted_avg(
     )
 
 
+# ---- RRA consolidation ------------------------------------------------
+# The reference consolidates readings into RRAs: fixed-width buckets, a
+# retention ladder of coarser widths and the xfiles-factor validity
+# rule (code/plugins/edoRRD.c:44-74, `ECM-1240 storage format
+# 2.txt:127-148`). Every tier operator (tiered_rollup, route_range_query,
+# fetch_from_tier, materialize_tier_ladder, range_stats.xff_consolidate,
+# the s20 replay) takes those rules from the helpers below. Sums ride
+# DECIMAL, which is exact and order-independent, so a bucket composed
+# from finer ones equals aggregating raw directly; only avg_v is a
+# double.
+
+
+def _coarsest_dividing(widths, width_s: int) -> int:
+    """RRA-fetch routing: the coarsest tier width that divides the
+    requested ``width_s``, as rrdtool's fetch picks the best-resolution
+    RRA. Raises when none does: a mis-sized request must not fall back
+    to a raw scan."""
+    eligible = [int(w) for w in widths if int(width_s) % int(w) == 0]
+    if not eligible:
+        raise ValueError(
+            f"no tier in {sorted({int(w) for w in widths})} divides the "
+            f"requested width {width_s}s — answering it would need a raw "
+            "scan; add a finer tier or change the request"
+        )
+    return max(eligible)
+
+
+def _rra_fold(
+    df: DataFrame, keys: list, ts: str, value: str, width_s: int,
+    count_all: bool,
+) -> DataFrame:
+    """Raw rows -> one row per (``keys``, ``width_s`` bucket):
+    ``bucket_us`` (epoch micros), ``n``, the exact DECIMAL
+    ``sum_value``, ``min_v`` and ``max_v``. ``n`` is ``count(*)`` with
+    ``count_all``, else ``count(value)`` (the downsample sinks' n)."""
+    w = int(width_s) * 1_000_000
+    v = F.col("__v")
+    return (
+        df.select(
+            *keys,
+            (F.expr(f"unix_micros({ts}) div {w}") * w).alias("bucket_us"),
+            F.col(value).alias("__v"),
+        )
+        .groupBy(*keys, "bucket_us")
+        .agg(
+            F.count(F.lit(1) if count_all else v).cast("bigint").alias("n"),
+            F.sum(v.cast(DEC)).alias("sum_value"),
+            F.min(v).alias("min_v"),
+            F.max(v).alias("max_v"),
+        )
+    )
+
+
+def _rra_compose(tier: DataFrame, keys: list, width_s: int) -> DataFrame:
+    """Re-aggregate fold rows (:func:`_rra_fold`'s shape) to the
+    coarser ``width_s``: n and the exact sums add, min/max fold."""
+    w = int(width_s) * 1_000_000
+    return tier.groupBy(
+        *keys, (F.expr(f"bucket_us div {w}") * w).alias("bucket_us")
+    ).agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("sum_value").cast(DEC_SQ).alias("sum_value"),
+        F.min("min_v").alias("min_v"),
+        F.max("max_v").alias("max_v"),
+    )
+
+
+def _rra_finish(
+    tier: DataFrame, head: list, xff: tuple | None = None
+) -> DataFrame:
+    """Fold rows -> served rows: ``head`` columns, then bucket_us, n,
+    avg_v, min_v, max_v. ``avg_v`` is sum_value/n rounded to 6 places
+    the way DuckDB rounds, ``x * 1e6`` rounded half away from zero in
+    floating point; Spark's ``round(x, 6)`` rounds x's shortest decimal
+    repr instead and disagrees just below a tie (267.5369105 ->
+    267.536911, DuckDB 267.53691).
+
+    ``xff=(width_s, step_s, xff_pct)`` applies the xfiles-factor rule:
+    a bucket expects ``width_s/step_s`` readings and is valid iff
+    ``(expected - n) * 100 <= xff_pct * expected`` (integer arithmetic,
+    so the decision is the same on any engine). ``expected`` and
+    ``is_valid`` follow n, and an invalid bucket keeps n but NULLs its
+    aggregates, rrdtool's UNKNOWN consolidated point."""
+    aggs = {
+        "avg_v": F.round(
+            F.col("sum_value").cast("double") / F.col("n") * 1_000_000
+        ) / 1_000_000,
+        "min_v": F.col("min_v"),
+        "max_v": F.col("max_v"),
+    }
+    if xff is None:
+        return tier.select(
+            *head, "bucket_us", "n", *(c.alias(k) for k, c in aggs.items())
+        )
+    width_s, step_s, xff_pct = (int(x) for x in xff)
+    if width_s % step_s != 0:
+        raise ValueError(
+            f"step_s={step_s} does not divide width_s={width_s} — "
+            "expected-interval accounting needs whole steps per bucket"
+        )
+    expected = width_s // step_s
+    valid = (F.lit(expected) - F.col("n")) * 100 <= F.lit(xff_pct * expected)
+    return tier.select(
+        *head,
+        "bucket_us",
+        "n",
+        F.lit(expected).cast("bigint").alias("expected"),
+        valid.alias("is_valid"),
+        *(F.when(valid, c).alias(k) for k, c in aggs.items()),
+    )
+
+
+def _rra_cascade(
+    df: DataFrame, tiers_s, keys: list, ts: str, value: str,
+    count_all: bool,
+) -> DataFrame:
+    """The retention ladder from ONE raw scan: the finest tier is
+    folded from ``df`` and localCheckpoint-ed (bucket-cardinality rows,
+    KB to MB) so no coarser tier re-scans raw, and each coarser tier
+    composes from the previous one, a shuffle of keys x buckets rows.
+    ``tiers_s`` must be non-empty and each width an integer multiple of
+    the previous one, so that a coarse bucket is an exact union of fine
+    ones (ValueError otherwise). Returns every tier's fold rows under a
+    leading ``tier_s``."""
+    if not tiers_s:
+        raise ValueError("tier ladder is empty: give at least one width")
+    for a, b in zip(tiers_s, tiers_s[1:]):
+        if int(b) % int(a) != 0:
+            raise ValueError(f"tier {b}s is not a multiple of {a}s")
+    tiers = [
+        _rra_fold(df, keys, ts, value, tiers_s[0], count_all)
+        .localCheckpoint()
+    ]
+    for w in tiers_s[1:]:
+        tiers.append(_rra_compose(tiers[-1], keys, w))
+    return reduce(
+        DataFrame.unionByName,
+        (
+            t.select(F.lit(int(w)).cast("bigint").alias("tier_s"), "*")
+            for w, t in zip(tiers_s, tiers)
+        ),
+    )
+
+
 def tiered_rollup(
     df: DataFrame,
     tiers_s: tuple = (3600, 21600, 86400),
@@ -2441,81 +2587,17 @@ def tiered_rollup(
     ts: str = "ts",
     value: str = "value",
 ) -> DataFrame:
-    """Multi-resolution consolidation tiers in ONE raw scan: the
-    finest tier aggregates the fact table; every coarser tier
-    re-aggregates the PREVIOUS tier's bucket-cardinality table
-    (sum/count/min/max compose associatively; avg re-derives from the
-    carried exact sums) — the RRD-style retention ladder of the
-    reference's consolidation plugin (code/plugins/edoRRD.c:44-74)
-    built the way a 100 TB store must: raw data is touched once, and
-    each next tier costs a shuffle of channels x buckets rows, not
-    data volume. Each ``tiers_s[k+1]`` must be an integer multiple of
-    ``tiers_s[k]`` (asserted) so coarse buckets are exact unions of
-    fine ones.
-
-    The finest tier is localCheckpoint-ed (bucket-cardinality — KB to
-    MB) so the coarser branches and the union output cannot re-scan
-    the fact table. Sums ride DECIMAL(18,6) (exact,
-    order-independent); the exported avg rounds at 6 (the q38
-    decimal->double ulp note). Output: one row per (tier_s, channel,
-    bucket) with n/avg/min/max — the table a dashboard's zoom level
-    indexes by tier_s.
+    """Multi-resolution consolidation tiers in one raw scan: the
+    RRD-style retention ladder a dashboard's zoom level indexes by
+    ``tier_s``. Each ``tiers_s[k+1]`` must be an integer multiple of
+    ``tiers_s[k]`` (ValueError otherwise); n is ``count(*)``. Output:
+    one row per (tier_s, channel, bucket) with n/avg_v/min_v/max_v.
+    Cascade, avg_v rounding: :func:`_rra_cascade`, :func:`_rra_finish`.
     """
-    assert len(tiers_s) >= 1
-    for a, b in zip(tiers_s, tiers_s[1:]):
-        assert b % a == 0, f"tier {b}s is not a multiple of {a}s"
-
-    w0 = int(tiers_s[0]) * 1_000_000
-    cur = (
-        df.select(
-            F.col(channel),
-            (F.expr(f"unix_micros({ts}) div {w0}") * w0).alias(
-                "bucket_us"
-            ),
-            F.col(value).alias("__v"),
-        )
-        .groupBy(channel, "bucket_us")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("__v").cast(DEC)).alias("__s"),
-            F.min("__v").alias("min_v"),
-            F.max("__v").alias("max_v"),
-        )
-        .localCheckpoint()
-    )
-    out = []
-    for k, tier in enumerate(tiers_s):
-        if k > 0:
-            w = int(tier) * 1_000_000
-            cur = (
-                cur.groupBy(
-                    channel,
-                    (F.expr(f"bucket_us div {w}") * w).alias("bucket_us"),
-                )
-                .agg(
-                    F.sum("n").cast("bigint").alias("n"),
-                    F.sum("__s").alias("__s"),
-                    F.min("min_v").alias("min_v"),
-                    F.max("max_v").alias("max_v"),
-                )
-            )
-        out.append(
-            cur.select(
-                F.lit(int(tier)).cast("bigint").alias("tier_s"),
-                F.col(channel),
-                "bucket_us",
-                "n",
-                F.round(
-                    F.col("__s").cast("double") / F.col("n"), 6
-                ).alias("avg_v"),
-                "min_v",
-                "max_v",
-            )
-        )
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    return res.orderBy("tier_s", channel, "bucket_us")
+    return _rra_finish(
+        _rra_cascade(df, tiers_s, [channel], ts, value, count_all=True),
+        ["tier_s", channel],
+    ).orderBy("tier_s", channel, "bucket_us")
 
 
 def route_range_query(
@@ -2526,79 +2608,23 @@ def route_range_query(
     ts: str = "ts",
     value: str = "value",
 ) -> DataFrame:
-    """RRA-FETCH routing: answer a range-aggregate request at
-    ``width_s`` from the COARSEST consolidation tier whose width
-    divides it — rrdtool's fetch picks the best-resolution RRA the
-    same way, and the reference's RRD consolidation plugin
-    (code/plugins/edoRRD.c:44-74) exists exactly so queries stop
-    touching raw history. The routing decision is driver-side
-    metadata (max eligible tier; raises if no tier divides the
-    request — a mis-sized request must not silently fall back to a
-    raw scan); n/sum/min/max then COMPOSE from the routed tier's
-    buckets (exact DECIMAL sums, so the re-derived average is
-    bit-identical to aggregating raw directly — that equality is
-    q79's oracle gate).
-
-    Here the routed tier is computed inline from ``df`` (one raw scan
-    at tier resolution — the gate proves aggregate-then-compose ==
-    direct); the production form is :func:`fetch_from_tier` (CLI
-    ``fetch``), which routes over MATERIALIZED `recover --partitioned`
-    sinks via their sidecars and never scans raw: the query cost
-    becomes a KB–MB tier read no matter how large raw history is
-    (q80's gate). When the request equals the tier width
-    the compose step is skipped (no second shuffle). Output one row
-    per (channel, request bucket): (tier_s = routed source tier,
-    channel, bucket_us, n, avg_v, min_v, max_v).
+    """Answer a range-aggregate request at ``width_s`` from the
+    coarsest tier of ``tiers_s`` that divides it (raises if none does),
+    computing that tier inline from ``df`` and composing it to the
+    request; when the request equals the tier width the compose step is
+    skipped. n is ``count(*)``. :func:`fetch_from_tier` is the form that
+    reads materialized tiers instead of raw. Output one row per
+    (channel, request bucket): (tier_s = routed tier, channel,
+    bucket_us, n, avg_v, min_v, max_v). Routing, compose and avg_v:
+    :func:`_coarsest_dividing`, :func:`_rra_compose`,
+    :func:`_rra_finish`.
     """
-    eligible = [int(t) for t in tiers_s if int(width_s) % int(t) == 0]
-    if not eligible:
-        raise ValueError(
-            f"route_range_query: no tier in {tuple(tiers_s)} divides "
-            f"the requested width {width_s}s — answering it would "
-            "need a raw scan; add a finer tier or change the request"
-        )
-    routed = max(eligible)
-    w0 = routed * 1_000_000
-    tier = (
-        df.select(
-            F.col(channel),
-            (F.expr(f"unix_micros({ts}) div {w0}") * w0).alias(
-                "bucket_us"
-            ),
-            F.col(value).alias("__v"),
-        )
-        .groupBy(channel, "bucket_us")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("__v").cast(DEC)).alias("__s"),
-            F.min("__v").alias("min_v"),
-            F.max("__v").alias("max_v"),
-        )
-    )
+    routed = _coarsest_dividing(tiers_s, width_s)
+    tier = _rra_fold(df, [channel], ts, value, routed, count_all=True)
     if int(width_s) != routed:
-        w = int(width_s) * 1_000_000
-        tier = (
-            tier.groupBy(
-                channel,
-                (F.expr(f"bucket_us div {w}") * w).alias("bucket_us"),
-            )
-            .agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("__s").alias("__s"),
-                F.min("min_v").alias("min_v"),
-                F.max("max_v").alias("max_v"),
-            )
-        )
-    return tier.select(
-        F.lit(routed).cast("bigint").alias("tier_s"),
-        F.col(channel),
-        "bucket_us",
-        "n",
-        F.round(F.col("__s").cast("double") / F.col("n"), 6).alias(
-            "avg_v"
-        ),
-        "min_v",
-        "max_v",
+        tier = _rra_compose(tier, [channel], width_s)
+    return _rra_finish(
+        tier, [F.lit(routed).cast("bigint").alias("tier_s"), channel]
     ).orderBy(channel, "bucket_us")
 
 
@@ -2634,16 +2660,8 @@ def route_tier(spark, tier_paths, width_s: int) -> tuple[str, int]:
                 "materialize_tier_ladder"
             )
         options.append((int(meta["width_s"]), p))
-    eligible = [(w, p) for w, p in options if int(width_s) % w == 0]
-    if not eligible:
-        raise ValueError(
-            "fetch_from_tier: no tier in "
-            f"{sorted({w for w, _ in options})} divides the requested "
-            f"width {width_s}s — answering it would need a raw scan; "
-            "add a finer tier or change the request"
-        )
-    w, p = max(eligible)
-    return p, w
+    w = _coarsest_dividing([w for w, _ in options], width_s)
+    return max(p for ww, p in options if ww == w), w
 
 
 def fetch_from_tier(
@@ -2656,43 +2674,29 @@ def fetch_from_tier(
     step_s: int | None = None,
     xff_pct: int = 50,
 ) -> DataFrame:
-    """RRA fetch against MATERIALIZED consolidation tiers — the
-    production twin of :func:`route_range_query`: where that operator
-    proves compose == raw-direct inline, this one never touches raw
-    history at all. ``tier_paths`` is the RRA ladder: any mix of
-    downsample sinks (``recover --partitioned`` output, one width
-    each, ``_downsample_meta.json``) and
-    :func:`materialize_tier_ladder` tables (every tier a ``tier_s=``
-    partition of one table, ``_ladder_meta.json``), each sidecar
-    naming its width(s)
-    (rrdtool keeps one ring per consolidation the same way; reference
-    consolidation plugin code/plugins/edoRRD.c:44-74, RRA ladder
-    `ECM-1240 storage format 2.txt:127-148`). Routing is DRIVER-SIDE
-    metadata — the sidecars are the only thing read before the plan is
-    built, so tiers that lose the route are never listed, opened, or
+    """RRA fetch against MATERIALIZED consolidation tiers: the form of
+    :func:`route_range_query` that never touches raw history.
+    ``tier_paths`` is the ladder: any mix of downsample sinks
+    (``recover --partitioned`` output, one width each,
+    ``_downsample_meta.json``) and :func:`materialize_tier_ladder`
+    tables (every tier a ``tier_s=`` partition of one table,
+    ``_ladder_meta.json``). Routing (:func:`route_tier`) reads only the
+    sidecars, so tiers that lose the route are never listed, opened or
     scanned (plan-pinned: the executed scan reads exactly the routed
-    tier's files); the coarsest width dividing the request wins, and
-    an un-servable width raises rather than silently scanning raw.
+    tier's files). The answer composes from the routed tier's carried
+    ``sum_value``; a sink built before that column existed raises with
+    a rebuild hint instead of degrading to a float-composed average.
 
-    The answer COMPOSES from the routed tier's buckets: n/min/max fold
-    associatively and the average re-derives from the sink's carried
-    ``sum_value`` (exact DECIMAL sums — sums compose, stored doubles
-    don't), so the result is bit-identical to aggregating raw history
-    directly (q80's oracle gate). A sink built before ``sum_value``
-    existed raises with a rebuild hint instead of quietly degrading to
-    a float-composed average.
-
-    With ``step_s`` (the deployment's polling cadence) the result
-    additionally carries ``expected``/``is_valid`` per request bucket
-    and NULLs the aggregates of invalid ones — q82's xfiles-factor
-    rule applied at fetch time, rrdtool's UNKNOWN consolidated
-    points (`ECM-1240 storage format 2.txt:142-148`).
+    With ``step_s`` (the deployment's polling cadence) the xfiles-factor
+    rule applies at the request width: ``expected``/``is_valid`` per
+    bucket and NULL aggregates on invalid ones (q82's rule, at fetch
+    time).
 
     ``start_us``/``end_us`` (epoch micros, half-open) prune the read:
     a conservative ±1-day ``dt`` partition filter (immune to the
     session-timezone skew of ``to_date``) plus the exact bucket
-    predicate. At 100 TB this is the dashboard-zoom query: cost is the
-    KB–MB tier slice, independent of raw volume.
+    predicate. Compose, avg_v and the xff rule: :func:`_rra_compose`,
+    :func:`_rra_finish`.
     """
     from etsd_time_series_database_spark.sources.store import (
         read_meta_sidecar,
@@ -2705,11 +2709,14 @@ def fetch_from_tier(
         if routed is not None
         else route_tier(spark, tier_paths, width_s)
     )
+    bounded = start_us is not None or end_us is not None
+    lo = start_us if start_us is not None else 0
+    hi = end_us if end_us is not None else 4_102_444_800_000_000
     lmeta = read_meta_sidecar(spark, routed_path, "_ladder_meta.json")
     if lmeta is not None:
         # ladder table: tier_s is a PARTITION column, so selecting the
         # routed tier is directory pruning; columns are already the
-        # normalized (bucket_us, n, sum_value, min_v, max_v) shape
+        # fold shape (bucket_us, n, sum_value, min_v, max_v)
         keys = [lmeta["channel"]]
         tier = (
             spark.read.parquet(routed_path)
@@ -2718,9 +2725,7 @@ def fetch_from_tier(
                 *keys, "bucket_us", "n", "sum_value", "min_v", "max_v"
             )
         )
-        if start_us is not None or end_us is not None:
-            lo = start_us if start_us is not None else 0
-            hi = end_us if end_us is not None else 4_102_444_800_000_000
+        if bounded:
             # bucket_us is the sort column inside each tier file, so
             # this predicate prunes at parquet row-group level
             tier = tier.filter(
@@ -2738,9 +2743,7 @@ def fetch_from_tier(
             c for c in ("source", "channel", "event_type")
             if c in tier.columns
         ]
-        if start_us is not None or end_us is not None:
-            lo = start_us if start_us is not None else 0
-            hi = end_us if end_us is not None else 4_102_444_800_000_000
+        if bounded:
             tier = tier.filter(
                 (F.col("dt") >= F.date_sub(
                     F.to_date(F.timestamp_micros(F.lit(lo))), 1))
@@ -2757,57 +2760,10 @@ def fetch_from_tier(
             F.col("min_value").alias("min_v"),
             F.col("max_value").alias("max_v"),
         )
-    w = int(width_s) * 1_000_000
-    composed = tier.groupBy(
-        *keys,
-        (F.expr(f"bucket_us div {w}") * w).alias("bucket_us"),
-    ).agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("sum_value").alias("__s"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-    )
-    if step_s is None:
-        return composed.select(
-            F.lit(routed_w).cast("bigint").alias("tier_s"),
-            *keys,
-            "bucket_us",
-            "n",
-            F.round(
-                F.col("__s").cast("double") / F.col("n"), 6
-            ).alias("avg_v"),
-            "min_v",
-            "max_v",
-        ).orderBy(*keys, "bucket_us")
-    # xff mode — rrdtool fetch returns UNKNOWN for consolidated
-    # points built from too little source data: with ``step_s`` the
-    # deployment's polling cadence, a request bucket expects
-    # width_s/step_s readings and q82's integer validity rule
-    # (operators.range_stats.xff_consolidate) applies at the REQUEST
-    # width; invalid buckets keep their counts but NULL aggregates.
-    if int(width_s) % int(step_s) != 0:
-        raise ValueError(
-            f"fetch_from_tier: step_s={step_s} does not divide the "
-            f"requested width {width_s}s — expected-interval "
-            "accounting needs whole steps per bucket"
-        )
-    expected = int(width_s) // int(step_s)
-    valid = (
-        (F.lit(expected) - F.col("n")) * 100
-        <= F.lit(int(xff_pct) * expected)
-    )
-    return composed.select(
-        F.lit(routed_w).cast("bigint").alias("tier_s"),
-        *keys,
-        "bucket_us",
-        "n",
-        F.lit(expected).cast("bigint").alias("expected"),
-        valid.alias("is_valid"),
-        F.when(
-            valid, F.round(F.col("__s").cast("double") / F.col("n"), 6)
-        ).alias("avg_v"),
-        F.when(valid, F.col("min_v")).alias("min_v"),
-        F.when(valid, F.col("max_v")).alias("max_v"),
+    return _rra_finish(
+        _rra_compose(tier, keys, width_s),
+        [F.lit(routed_w).cast("bigint").alias("tier_s"), *keys],
+        None if step_s is None else (width_s, step_s, xff_pct),
     ).orderBy(*keys, "bucket_us")
 
 
@@ -2819,93 +2775,37 @@ def materialize_tier_ladder(
     ts: str = "ts",
     value: str = "value",
 ) -> dict:
-    """Persist the WHOLE consolidation ladder as one ``tier_s``-
-    partitioned table — :func:`tiered_rollup`'s cascade (one raw scan;
-    each coarser tier re-aggregates the previous tier's KB-sized
-    bucket table) with the exact DECIMAL sums KEPT as a ``sum_value``
-    column instead of folded into a display average, so
-    :func:`fetch_from_tier` can route INTO the table (``tier_s`` is a
-    partition directory — selecting the routed tier is pruning, like
-    a probe selecting an IVF cell) and compose coarser answers
-    bit-identically to a raw scan. The rrdtool analog is the multi-RRA
-    file: every retention level in one artifact, fetch picks the best
-    one (`ECM-1240 storage format 2.txt:127-148`).
+    """Persist the whole consolidation ladder as one ``tier_s``-
+    partitioned table: :func:`tiered_rollup`'s cascade with the exact
+    sums kept as ``sum_value`` instead of folded into a display
+    average, so :func:`fetch_from_tier` can route INTO the table
+    (selecting the routed tier is partition pruning) and compose
+    coarser answers. n is ``count(value)``, the downsample sinks' n, so
+    fetch's answer does not depend on which tier kind wins the route.
+    The rrdtool analog is the multi-RRA file: every retention level in
+    one artifact.
 
-    Layout per row: (tier_s=, channel, bucket_us, n, sum_value,
-    min_v, max_v), sorted by (channel, bucket_us) within each tier so
-    a bounded fetch prunes at parquet row-group level. The root
-    carries a ``_ladder_meta.json`` sidecar ({tiers_s, channel}) —
-    the routing metadata, read driver-side before any parquet is
-    listed. Returns {tier_s: n_buckets}.
+    Layout per row: (tier_s=, channel, bucket_us, n, sum_value
+    decimal(28,6), min_v, max_v), sorted by (channel, bucket_us) within
+    each tier so a bounded fetch prunes at parquet row-group level. The
+    root carries a ``_ladder_meta.json`` sidecar ({tiers_s, channel}),
+    the routing metadata read before any parquet is listed. The table
+    is staged and swapped in (:func:`sources.store.install_rebuild`), so
+    a failed rebuild leaves the previous ladder readable. Returns
+    {tier_s: n_buckets}.
     """
-    assert len(tiers_s) >= 1
-    for a, b in zip(tiers_s, tiers_s[1:]):
-        assert b % a == 0, f"tier {b}s is not a multiple of {a}s"
     from etsd_time_series_database_spark.sources.store import (
-        write_meta_sidecar,
+        install_rebuild,
     )
 
     spark = df.sparkSession
-    w0 = int(tiers_s[0]) * 1_000_000
-    cur = (
-        df.select(
-            F.col(channel),
-            (F.expr(f"unix_micros({ts}) div {w0}") * w0).alias(
-                "bucket_us"
-            ),
-            F.col(value).alias("__v"),
-        )
-        .groupBy(channel, "bucket_us")
-        .agg(
-            # count NON-NULL values, matching the downsample sinks'
-            # F.count("value") — fetch's n/avg must not depend on
-            # which tier kind wins the route when values hold nulls
-            F.count("__v").cast("bigint").alias("n"),
-            F.sum(F.col("__v").cast(DEC)).alias("sum_value"),
-            F.min("__v").alias("min_v"),
-            F.max("__v").alias("max_v"),
-        )
-        .localCheckpoint()
-    )
-    out = []
-    for k, tier in enumerate(tiers_s):
-        if k > 0:
-            w = int(tier) * 1_000_000
-            cur = (
-                cur.groupBy(
-                    channel,
-                    (F.expr(f"bucket_us div {w}") * w).alias("bucket_us"),
-                )
-                .agg(
-                    F.sum("n").cast("bigint").alias("n"),
-                    F.sum("sum_value").cast(DEC_SQ).alias("sum_value"),
-                    F.min("min_v").alias("min_v"),
-                    F.max("max_v").alias("max_v"),
-                )
-            )
-        out.append(
-            cur.select(
-                F.lit(int(tier)).cast("bigint").alias("tier_s"),
-                F.col(channel),
-                "bucket_us",
-                "n",
-                F.col("sum_value").cast(DEC_SQ).alias("sum_value"),
-                "min_v",
-                "max_v",
-            )
-        )
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    (
-        res.repartition("tier_s")
+    ladder = _rra_cascade(df, tiers_s, [channel], ts, value, count_all=False)
+    install_rebuild(
+        spark, path, "ladder",
+        ladder.repartition("tier_s")
         .sortWithinPartitions(channel, "bucket_us")
-        .write.mode("overwrite")
-        .partitionBy("tier_s")
-        .parquet(path)
-    )
-    write_meta_sidecar(
-        spark, path, "_ladder_meta.json",
+        .write.partitionBy("tier_s").parquet,
+        "_ladder_meta.json",
         {"tiers_s": [int(t) for t in tiers_s], "channel": channel},
     )
     return {

@@ -1562,11 +1562,13 @@ def s19(spark: SparkSession, sf_dir: str) -> DataFrame:
     "code/etsdSave.c:58-66).",
 )
 def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from etsd_time_series_database_spark.operators.trends import (
+        _rra_finish,
+    )
     from etsd_time_series_database_spark.streaming.ingest import (
         windowed_aggregate,
     )
 
-    expected = 3600 // 600
     out = _replay(
         spark,
         sf_dir,
@@ -1577,28 +1579,12 @@ def s20(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("bucket_ts").alias("bucket_us"),
             F.col("n").cast("bigint").alias("n"),
             "sum_value",
-            "min_value",
-            "max_value",
+            F.col("min_value").alias("min_v"),
+            F.col("max_value").alias("max_v"),
         ),
         "s20_sink",
         inject_nulls=False,
     )
-    valid = (F.lit(expected) - F.col("n")) * 100 <= F.lit(50 * expected)
-    return (
-        out.select(
-            "channel",
-            "bucket_us",
-            "n",
-            F.lit(expected).cast("bigint").alias("expected"),
-            valid.alias("is_valid"),
-            F.when(
-                valid,
-                F.round(
-                    F.col("sum_value").cast("double") / F.col("n"), 6
-                ),
-            ).alias("avg_v"),
-            F.when(valid, F.col("min_value")).alias("min_v"),
-            F.when(valid, F.col("max_value")).alias("max_v"),
-        )
-        .orderBy("channel", "bucket_us")
+    return _rra_finish(out, ["channel"], (3600, 600, 50)).orderBy(
+        "channel", "bucket_us"
     )

@@ -643,14 +643,15 @@ def refresh_derived_tier(
     rows keyed by ``channel`` and ``tier.bucket_col``). Runs
     :func:`check_derived_tier` first.
 
-    A full rebuild overwrites the tier partitioned by bucket day,
-    stamps the sidecar and reads the result back for its per-day
-    counts. With ``target_files > 1`` each day fans out over up to
-    that many write tasks through a deterministic (channel,
-    bucket)-hash salt — not round-robin+partitionBy, where every task
-    holds a writer for every day — under an explicit partition count:
-    a column-only repartition is advisory, and AQE would coalesce the
-    small shuffle back into one task per day, undoing the salt.
+    A full rebuild writes the tier partitioned by bucket day, stamps
+    the sidecar, installs both with :func:`install_rebuild` and reads
+    the result back for its per-day counts. With ``target_files > 1``
+    each day fans out over up to that many write tasks through a
+    deterministic (channel, bucket)-hash salt — not
+    round-robin+partitionBy, where every task holds a writer for every
+    day — under an explicit partition count: a column-only repartition
+    is advisory, and AQE would coalesce the small shuffle back into one
+    task per day, undoing the salt.
 
     A day refresh recomputes each named day from ``day_scoped(source,
     day)`` (partition-pruned) into ``target_files`` files and installs
@@ -681,13 +682,12 @@ def refresh_derived_tier(
             )
         else:
             full = full.repartition("dt")
-        (
+        install_rebuild(
+            spark, path, tier.name,
             full.sortWithinPartitions(channel, bucket)
-            .write.mode("overwrite")
-            .partitionBy("dt")
-            .parquet(path)
+            .write.partitionBy("dt").parquet,
+            tier.sidecar, meta,
         )
-        write_meta_sidecar(spark, path, tier.sidecar, meta)
         out = spark.read.parquet(path).groupBy("dt").count()
         return {r.dt.isoformat(): r["count"] for r in out.collect()}
     if adopt:
@@ -774,7 +774,8 @@ def staging_dir(dst: str, kind: str) -> str:
 def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
     """The crash-safe directory swap every single-dir maintenance verb
     shares (compact, ingest compact, amend, sync, the day-scoped tier
-    refreshes via :func:`install_partition`, minhash-index compact,
+    refreshes via :func:`install_partition`, the whole-tier rebuilds via
+    :func:`install_rebuild`, minhash-index compact,
     incremental-dedup survivors, ivf-compact, the rebalance
     ``_centroids`` rewrite): the new data is FULLY written at ``tmp``
     (a :func:`staging_dir`) before anything destructive happens;
@@ -801,6 +802,33 @@ def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
         raise IOError(f"{label}: failed to install {dst}")
     if had_old:
         fs.delete(Path(old), True)
+
+
+def install_rebuild(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    write: Callable[[str], None],
+    sidecar: str,
+    meta: dict,
+) -> None:
+    """Replace the whole derived table at ``path``: ``write(tmp)``
+    fills a :func:`staging_dir`, the ``sidecar`` recording ``meta`` is
+    stamped there, and :func:`swap_in_dir` installs the copy. A write
+    or stamp that fails deletes the staging copy and leaves the live
+    table and its sidecar as they were (an overwrite onto the live path
+    would leave an empty directory). The full-rebuild tail of
+    :func:`refresh_derived_tier` and
+    :func:`operators.trends.materialize_tier_ladder`."""
+    fs, Path = _hadoop_fs(spark, path)
+    tmp = staging_dir(path, kind)
+    try:
+        write(tmp)
+        write_meta_sidecar(spark, tmp, sidecar, meta)
+    except Exception:
+        fs.delete(Path(tmp), True)
+        raise
+    swap_in_dir(fs, Path, tmp, path, f"{kind} rebuild")
 
 
 def install_partition(fresh: DataFrame, part_dir: str, kind: str) -> int:

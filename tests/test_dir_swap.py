@@ -161,3 +161,52 @@ def test_incremental_dedup_failed_install_keeps_previous_survivors(
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == before
     # the failed install stops the workflow before the index append
     assert spark.read.parquet(path).count() == index_rows
+
+
+
+def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
+    """A whole-tier rebuild (``refresh_derived_tier(days=None)``,
+    ``materialize_tier_ladder``) stages its copy and swaps it in: a
+    write whose tasks fail leaves the previous tier and its sidecar
+    readable and no staging dir behind. The failure is an unavailable
+    parquet codec, which raises in the write tasks themselves; an
+    overwrite onto the live path left it an empty directory."""
+    from py4j.protocol import Py4JJavaError
+
+    from etsd_time_series_database_spark.operators.trends import (
+        materialize_tier_ladder,
+    )
+
+    events = store.load_table(spark, SF_SMOKE, "events")
+    raw = str(tmp_path / "raw")
+    store.create_events_table(events, raw, mode="overwrite")
+    dig = str(tmp_path / "digest")
+    lad = str(tmp_path / "ladder")
+    store.refresh_digest_tier(spark, raw, dig)
+    materialize_tier_ladder(events, lad, tiers_s=(3600, 86400))
+    tiers = {
+        dig: store.DIGEST_TIER.sidecar, lad: "_ladder_meta.json",
+    }
+    before = {
+        p: (
+            sorted(map(tuple, spark.read.parquet(p).collect())),
+            store.read_meta_sidecar(spark, p, sidecar),
+        )
+        for p, sidecar in tiers.items()
+    }
+
+    codec = "spark.sql.parquet.compression.codec"
+    spark.conf.set(codec, "lzo")
+    try:
+        with pytest.raises(Py4JJavaError, match="LzoCodec"):
+            store.refresh_digest_tier(spark, raw, dig)
+        with pytest.raises(Py4JJavaError, match="LzoCodec"):
+            materialize_tier_ladder(events, lad, tiers_s=(3600, 21600))
+    finally:
+        spark.conf.unset(codec)
+    for p, sidecar in tiers.items():
+        assert (
+            sorted(map(tuple, spark.read.parquet(p).collect())),
+            store.read_meta_sidecar(spark, p, sidecar),
+        ) == before[p], p
+    assert not [q for q in tmp_path.iterdir() if q.name.startswith("__")]

@@ -1917,15 +1917,17 @@ def test_bucketed_twa_locf_weights(spark):
     assert b1.twa == 5.0
 
 
-def test_tiered_rollup_hierarchical_equals_direct(spark):
+def test_tiered_rollup_hierarchical_equals_direct(spark, tmp_path):
     """Every coarser tier derives from the previous tier's table; the
     result must equal aggregating each tier DIRECTLY from raw (the
-    associative-composition contract), and non-multiple tier ladders
-    are refused."""
+    associative-composition contract), and non-multiple or empty tier
+    ladders are refused (by tiered_rollup and materialize_tier_ladder
+    alike)."""
     import pytest
     import pyspark.sql.functions as F
 
     from etsd_time_series_database_spark.operators.trends import (
+        materialize_tier_ladder,
         tiered_rollup,
     )
 
@@ -1966,8 +1968,14 @@ def test_tiered_rollup_hierarchical_equals_direct(spark):
             .collect()
         )
     assert sorted(tuple(r) for r in got) == sorted(direct)
-    with pytest.raises(AssertionError, match="not a multiple"):
+    with pytest.raises(ValueError, match="not a multiple"):
         tiered_rollup(df, tiers_s=(3600, 5000))
+    with pytest.raises(ValueError, match="not a multiple"):
+        materialize_tier_ladder(
+            df, str(tmp_path / "ladder"), tiers_s=(3600, 5000)
+        )
+    with pytest.raises(ValueError, match="empty"):
+        tiered_rollup(df, tiers_s=())
 
 
 def test_percentile_profile_exact_interpolation(spark):

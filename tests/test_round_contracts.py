@@ -240,3 +240,66 @@ def test_derived_tier_contract_has_one_copy():
     assert salted == {"refresh_derived_tier"}, salted
     assert not hasattr(store, "read_digest_tier_meta")
     assert not hasattr(store, "write_digest_tier_meta")
+
+
+def test_rra_consolidation_rules_have_one_copy():
+    """The RRA consolidation rules behind q75, q79, q80/q81, q82, s20
+    and the CLI ``fetch`` exist once, in ``operators.trends``' private
+    helpers. Hand copies drifted: the ``avg_v`` rounding disagreed with
+    the DuckDB oracle in all six copies, and the tier-ladder check was
+    an ``assert`` that ``python -O`` drops."""
+    import ast
+
+    def is_call(node, attr, *args):
+        f = getattr(node, "func", None)
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(f, ast.Attribute)
+            and f.attr == attr
+            and [getattr(a, "value", None) for a in node.args] == list(args)
+        )
+
+    def has_text(node, text):
+        return isinstance(node, ast.Constant) and text in str(node.value)
+
+    def names(node):
+        return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+    rules = {
+        # (expected - n) * 100 <= xff_pct * expected
+        "xff": lambda n: isinstance(n, ast.Compare)
+        and isinstance(n.ops[0], ast.LtE)
+        and isinstance(n.left, ast.BinOp)
+        and isinstance(n.left.op, ast.Mult)
+        and getattr(n.left.right, "value", None) == 100,
+        # <sum>.cast("double") / F.col("n")
+        "avg_v": lambda n: isinstance(n, ast.BinOp)
+        and isinstance(n.op, ast.Div)
+        and is_call(n.left, "cast", "double")
+        and is_call(n.right, "col", "n"),
+        # the coarser bucket of a compose: "bucket_us div {w}"
+        "compose": lambda n: has_text(n, "bucket_us div"),
+        "tier_multiple": lambda n: has_text(n, "is not a multiple of"),
+        # [w for w in widths if width_s % w == 0]
+        "route": lambda n: isinstance(n, ast.comprehension)
+        and any(
+            isinstance(c, ast.Compare)
+            and isinstance(c.left, ast.BinOp)
+            and isinstance(c.left.op, ast.Mod)
+            and "width_s" in names(c.left.left)
+            for c in n.ifs
+        ),
+    }
+    found: dict[str, dict[str, int]] = {k: {} for k in rules}
+    for top in _package_functions():
+        for n in ast.walk(top):
+            for k, rule in rules.items():
+                if rule(n):
+                    found[k][top.name] = found[k].get(top.name, 0) + 1
+    assert found == {
+        "xff": {"_rra_finish": 1},
+        "avg_v": {"_rra_finish": 1},
+        "compose": {"_rra_compose": 1},
+        "tier_multiple": {"_rra_cascade": 1},
+        "route": {"_coarsest_dividing": 1},
+    }, found

@@ -1144,3 +1144,40 @@ def test_fetch_from_tier_xff_mode_matches_direct_rule(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="whole steps"):
         fetch_from_tier(spark, sink, 3600, step_s=700)
+
+
+def test_avg_v_rounds_like_the_duckdb_oracle(spark, duck, tmp_path):
+    """One bucket holding 267.0 and 268.073821 (twice each, so q82's
+    xff rule counts it valid): the exact mean 267.5369105 is a double
+    just below the tie at the 7th decimal. Rounding the shortest
+    decimal repr half-up gives 267.536911; DuckDB's oracle rounds
+    ``x * 1e6`` in floating point and gives 267.53691. q75, q79 and
+    q82 must each equal their catalog oracle on that bucket."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etsd_time_series_database_spark.plans import catalog
+    from tests.oracle import diff_report, run_pair
+
+    t0 = dt.datetime(2024, 1, 1)
+    values = [267.0, 268.073821, 267.0, 268.073821]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(values)), pa.int64()),
+            "ts": pa.array(
+                [t0 + dt.timedelta(minutes=10 * i)
+                 for i in range(len(values))],
+                pa.timestamp("us"),
+            ),
+            "event_type": ["a"] * len(values),
+            "value": values,
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    for name in (
+        "q75_tiered_rollup", "q79_tier_routed_range",
+        "q82_xff_consolidation",
+    ):
+        s, d = run_pair(spark, duck, catalog()[name], str(tmp_path))
+        assert 267.53691 in {r[0] for r in d[1]}, name  # avg_v sorts first
+        assert s == d, diff_report(name, s, d)
