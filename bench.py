@@ -351,6 +351,16 @@ def _skew_compare(spark) -> dict:
         running_zscore_batch,
         tiered_rollup,
     )
+    from tests.plain_windows import channel_global
+
+    def _global(op):
+        # the channel-global reference form: each stitched step swapped
+        # for the same step on a window partitioned by channel alone
+        def build():
+            with channel_global():
+                return op()
+
+        return build
 
     def _naive_tiers(frozen):
         # every tier straight from the fact table: the anti-pattern
@@ -424,7 +434,7 @@ def _skew_compare(spark) -> dict:
     )
 
     forms = {
-        "rate_global_s": lambda: rate(df, scalable=False),
+        "rate_global_s": _global(lambda: rate(df)),
         "rate_scalable_s": lambda: rate_scalable(df),
         "asof_global_s": lambda: asof_join(
             df, right, on="event_type", value_cols=["value"]
@@ -454,12 +464,13 @@ def _skew_compare(spark) -> dict:
         # channels, so every above-sample is an isolated episode —
         # N/2 episodes hit the union (a lazy projection over the
         # frozen df; both forms pay it identically)
-        "coverage_global_s": lambda: alarm_coverage(
-            df.withColumn(
-                "value", (F.col("event_id") % 2 * 100).cast("double")
-            ),
-            50.0,
-            scalable=False,
+        "coverage_global_s": _global(
+            lambda: alarm_coverage(
+                df.withColumn(
+                    "value", (F.col("event_id") % 2 * 100).cast("double")
+                ),
+                50.0,
+            )
         ),
         "coverage_scalable_s": lambda: alarm_coverage(
             df.withColumn(

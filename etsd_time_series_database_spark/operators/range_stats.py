@@ -32,7 +32,9 @@ from etsd_time_series_database_spark.functions.exprs import (
     davg,
     dsum,
     epoch_us,
+    with_sortable_bits,
 )
+from etsd_time_series_database_spark.operators import scalable_window as sw
 
 
 def _in_range(ts: str, start, end) -> Column:
@@ -154,37 +156,19 @@ def rate(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Counter -> rate: (v - lag(v)) / Δt per channel — the query-time
     equivalent of the reference's ingest-side delta encoding
     (code/etsdSave.c:396-398) re-derived from raw stored readings.
 
-    Default path is the stitched (channel, time-bucket) form: channel
+    Computed in the stitched (channel, time-bucket) form: channel
     cardinality is typically tiny (the reference tops out at 16
     channels), so a window partitioned by channel alone caps cluster
-    parallelism at n_channels. ``scalable=False`` selects the plain
-    global window (useful as the equivalence oracle in tests).
+    parallelism at n_channels.
     """
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            rate_scalable,
-        )
-
-        return rate_scalable(
-            df, channel=channel, value=value, ts=ts, seq=seq, bucket_s=bucket_s
-        )
-    w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-    dv = F.col(value) - F.lag(value).over(w)
-    dt_us = epoch_us(ts) - F.lag(epoch_us(ts)).over(w)
-    return (
-        df.select(
-            F.col(seq),
-            F.col(channel),
-            (dv * F.lit(1_000_000.0) / dt_us).alias("rate_per_s"),
-        )
-        .orderBy(seq)
+    return sw.rate_scalable(
+        df, channel=channel, value=value, ts=ts, seq=seq, bucket_s=bucket_s
     )
 
 
@@ -195,7 +179,6 @@ def rollover_corrected(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Rollover-corrected monotone counter: whenever a reading drops
@@ -203,39 +186,18 @@ def rollover_corrected(
     'bump' logic (code/etsdQuery.c:332-336,383) generalized to a
     cumulative correction column.
 
-    Default path is the stitched lag + distributed prefix sum (see
+    Computed with the stitched lag + distributed prefix sum (see
     operators.scalable_window): parallelism (channels x buckets), not
-    n_channels. ``scalable=False`` keeps the plain global window.
+    n_channels.
     """
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            rollover_corrected_scalable,
-        )
-
-        return rollover_corrected_scalable(
-            df,
-            rollover=rollover,
-            channel=channel,
-            value=value,
-            ts=ts,
-            seq=seq,
-            bucket_s=bucket_s,
-        )
-    w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-    cum = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq)).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    bump = F.when(F.col(value) < F.lag(value).over(w), F.lit(1)).otherwise(F.lit(0))
-    return (
-        df.withColumn("__bump", bump)
-        .select(
-            F.col(seq),
-            F.col(channel),
-            (F.col(value) + F.sum("__bump").over(cum) * F.lit(float(rollover))).alias(
-                "corrected_value"
-            ),
-        )
-        .orderBy(seq)
+    return sw.rollover_corrected_scalable(
+        df,
+        rollover=rollover,
+        channel=channel,
+        value=value,
+        ts=ts,
+        seq=seq,
+        bucket_s=bucket_s,
     )
 
 
@@ -410,14 +372,86 @@ def reconstruct_from_deltas(
     )
 
 
+# Mantissa bits below the exponent field in q33's value buckets:
+# 2^bits sub-buckets per binade. 4 measured the best local cost at an
+# unchanged fan-out class; every power of two in [2..8] gave 100-2000
+# buckets per channel on the sf0.1 value spread.
+VALUE_BUCKET_BITS = 4
+
+
+def _value_ranks(
+    src: DataFrame, channel: str, value: str, seq: str
+) -> tuple[DataFrame, DataFrame]:
+    """Rank each row of ``src`` within its channel by (value, seq):
+    returns ``ranked`` (channel, value, ``__rn``) and ``counts``
+    (channel, ``__n``).
+
+    Stitched (channel, value-bucket) form (round 14; the
+    lag_stitched/cumsum_scalable pattern applied to VALUE order
+    instead of time order): a window partitioned by channel alone
+    caps parallelism at n_channels — at 100 TB a handful of tasks
+    would each sort the full history by value. The bucket is the HIGH
+    BITS of the IEEE-754 sortable-bits image of the value (round 15:
+    exponent field plus the top :data:`VALUE_BUCKET_BITS` mantissa
+    bits) — an order-preserving split of the value axis that is
+    data-adaptive BY CONSTRUCTION: buckets follow the value
+    distribution's floating-point neighborhoods, so a channel whose
+    values concentrate in [0, 1) still fans out across ~2^bits
+    buckets per binade where the round-14 fixed ``floor(value /
+    100.0)`` width collapsed it to ONE bucket. No pre-pass, no join:
+    the bucket is a per-row projection. The image is taken of
+    ``value + 0.0``, which maps -0.0 to +0.0: the rank window's sort
+    treats the two as equal and breaks their tie by ``seq``, so they
+    must share a bucket. NaN lands above +Inf in the bits image —
+    exactly the rank window's value order. Global rank = in-bucket
+    row_number + the exclusive running count of lower buckets,
+    computed on a (channels x present-buckets)-row summary; the
+    per-channel counts close from that summary too, so the ranked
+    pipeline is NOT evaluated for them. The one irreducible
+    degeneracy is a channel whose values are all EQUAL (a constant
+    has one floating-point neighborhood); its rank order is then pure
+    ``seq`` order inside one bucket, which no value-axis split can
+    spread."""
+    # projection-chain form of the bits image: the intermediates
+    # materialize once per row (11x the nested single expression —
+    # see exprs.with_sortable_bits)
+    b = (
+        with_sortable_bits(src, F.col(value) + 0.0, "__dsb_o")
+        .withColumn("__vb", F.shiftright(F.col("__dsb_o"), 52 - VALUE_BUCKET_BITS))
+        .drop("__dsb_o")
+    )
+    w_in = Window.partitionBy(channel, "__vb").orderBy(F.col(value), F.col(seq))
+    sizes = b.groupBy(channel, "__vb").agg(F.count(F.lit(1)).alias("__bn"))
+    w_excl = (
+        Window.partitionBy(channel)
+        .orderBy("__vb")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = sizes.select(
+        channel,
+        "__vb",
+        F.coalesce(F.sum("__bn").over(w_excl), F.lit(0)).alias("__off"),
+    )
+    ranked = (
+        b.withColumn("__rin", F.row_number().over(w_in))
+        # unhinted boundary join, same rationale as lag_stitched
+        .join(offsets, [channel, "__vb"])
+        .select(
+            channel,
+            value,
+            (F.col("__rin") + F.col("__off")).cast("int").alias("__rn"),
+        )
+    )
+    counts = sizes.groupBy(channel).agg(F.sum("__bn").cast("int").alias("__n"))
+    return ranked, counts
+
+
 def exact_percentiles(
     df: DataFrame,
     ps: tuple[float, ...] = (0.5, 0.9, 0.99),
     channel: str = "event_type",
     value: str = "value",
     seq: str = "event_id",
-    scalable: bool = True,
-    value_bucket_bits: int = 4,
 ) -> DataFrame:
     """Exact linear-interpolated percentiles per channel, computed with
     explicit rank arithmetic (pos = p*(n-1); lerp between the two
@@ -426,100 +460,13 @@ def exact_percentiles(
     bit-exact cross-engine where builtin percentile implementations
     drift by ulps.
 
-    Plan: one rank window + a tiny broadcast of the percentile spec +
-    two self-joins on (channel, rank) — the joined side carries only
-    the straddling rows, not the full series.
-
-    The default rank window is the stitched (channel, value-bucket)
-    form (round-14 optimization; the lag_stitched/cumsum_scalable
-    pattern applied to VALUE order instead of time order): a window
-    partitioned by channel alone caps parallelism at n_channels — at
-    100 TB a handful of tasks would each sort the full history by
-    value. The bucket is the HIGH BITS of the IEEE-754 sortable-bits
-    image of the value (round-15: exponent field plus the top
-    ``value_bucket_bits`` (default 4: measured best local cost at
-    unchanged fan-out class; every power of two in [2..8] gave
-    100-2000 buckets/channel on the sf0.1 value spread) mantissa
-    bits, via the sortable-bits image >> (52 - bits) — an
-    order-preserving split of the value axis that is data-adaptive BY
-    CONSTRUCTION: buckets follow the value distribution's
-    floating-point neighborhoods (2^bits sub-buckets per binade), so
-    a channel whose values concentrate in [0, 1) still fans out
-    across ~2^bits buckets per binade where the round-14 fixed
-    ``floor(value / 100.0)`` width collapsed it to ONE bucket (the
-    judge-flagged narrow-range degeneracy). No pre-pass, no join:
-    the bucket is a per-row projection. NaN lands above +Inf and
-    -0.0 just below +0.0 in the bits image — exactly the rank
-    window's value order, so the stitch stays bit-identical on every
-    special value. Global rank = in-bucket row_number + the exclusive
-    running count of lower buckets, computed on a (channels x
-    present-buckets)-row summary. The one irreducible degeneracy is a
-    channel whose values are all EQUAL (a constant has one
-    floating-point neighborhood); its rank order is then pure ``seq``
-    order inside one bucket, which no value-axis split can spread.
-    ``scalable=False`` keeps the plain per-channel window (the
-    equivalence oracle in tests)."""
-    from etsd_time_series_database_spark.functions.exprs import (
-        with_sortable_bits,
+    Plan: the stitched (channel, value-bucket) rank of
+    :func:`_value_ranks` + a tiny broadcast of the percentile spec +
+    one join on (channel, rank) — the joined side carries only the
+    straddling rows, not the full series."""
+    ranked, counts = _value_ranks(
+        df.filter(F.col(value).isNotNull()), channel, value, seq
     )
-
-    src = df.filter(F.col(value).isNotNull())
-    if scalable:
-        shift = 52 - int(value_bucket_bits)
-        if not (0 <= shift <= 52):
-            raise ValueError(
-                f"value_bucket_bits must be in [0, 52]; got {value_bucket_bits}"
-            )
-        # projection-chain form of the bits image: the intermediates
-        # materialize once per row (11x the nested single expression —
-        # see exprs.with_sortable_bits)
-        b = (
-            with_sortable_bits(src, F.col(value), "__dsb_o")
-            .withColumn("__vb", F.shiftright(F.col("__dsb_o"), shift))
-            .drop("__dsb_o")
-        )
-        w_in = Window.partitionBy(channel, "__vb").orderBy(
-            F.col(value), F.col(seq)
-        )
-        sizes = b.groupBy(channel, "__vb").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        w_excl = (
-            Window.partitionBy(channel)
-            .orderBy("__vb")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = sizes.select(
-            channel,
-            "__vb",
-            F.coalesce(F.sum("__bn").over(w_excl), F.lit(0)).alias("__off"),
-        )
-        ranked = (
-            b.withColumn("__rin", F.row_number().over(w_in))
-            # unhinted boundary join, same rationale as lag_stitched
-            .join(offsets, [channel, "__vb"])
-            .select(
-                channel,
-                value,
-                (F.col("__rin") + F.col("__off")).cast("int").alias("__rn"),
-            )
-        )
-    else:
-        w = Window.partitionBy(channel).orderBy(F.col(value), F.col(seq))
-        ranked = src.withColumn("__rn", F.row_number().over(w)).select(
-            channel, value, "__rn"
-        )
-    # Per-channel row counts: in the stitched branch they close from
-    # the tiny (channel, bucket) sizes table — the ranked pipeline is
-    # NOT evaluated for them (round 15; the old max(__rn) form was one
-    # of THREE full evaluations of the ranked subtree, with the lo and
-    # hi self-joins the other two).
-    if scalable:
-        counts = sizes.groupBy(channel).agg(
-            F.sum("__bn").cast("int").alias("__n")
-        )
-    else:
-        counts = ranked.groupBy(channel).agg(F.max("__rn").alias("__n"))
     spec = F.explode(F.array(*[F.lit(p) for p in ps])).alias("p")
     pos = F.col("p") * (F.col("__n") - 1)
     targets = counts.select(channel, "__n", spec).select(
@@ -694,7 +641,6 @@ def longest_gaps(
     channel: str = "event_type",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Top-k LONGEST inter-sample gaps per channel with their
@@ -706,47 +652,28 @@ def longest_gaps(
     the fact.
 
     The lag() is where channel-keyed skew lives (the rank is
-    WindowGroupLimit-bounded either way): the default path computes it
-    with the stitched (channel, time-bucket) form (q07's
+    WindowGroupLimit-bounded either way): it is computed with the
+    stitched (channel, time-bucket) form (q07's
     operators/scalable_window.py machinery), so parallelism is bounded
-    by buckets, not channels. ``scalable=False`` selects the plain
-    per-channel window (the equivalence oracle in tests)."""
-    us = epoch_us(ts)
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            lag_stitched,
+    by buckets, not channels."""
+    st = sw.lag_stitched(
+        df.withColumn("__ts_us", epoch_us(ts)),
+        ["__ts_us"],
+        channel=channel,
+        ts=ts,
+        seq=seq,
+        bucket_s=bucket_s,
+    )
+    d = (
+        st.filter(F.col("__lag___ts_us").isNotNull())
+        .select(
+            F.col(channel),
+            F.col("__ts_us").alias("__us"),
+            F.col(seq).alias("__seq"),
+            F.col("__lag___ts_us").alias("__prev_us"),
         )
-
-        st = lag_stitched(
-            df.withColumn("__ts_us", us),
-            ["__ts_us"],
-            channel=channel,
-            ts=ts,
-            seq=seq,
-            bucket_s=bucket_s,
-        )
-        d = (
-            st.filter(F.col("__lag___ts_us").isNotNull())
-            .select(
-                F.col(channel),
-                F.col("__ts_us").alias("__us"),
-                F.col(seq).alias("__seq"),
-                F.col("__lag___ts_us").alias("__prev_us"),
-            )
-            .withColumn("gap_us", F.col("__us") - F.col("__prev_us"))
-        )
-    else:
-        w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-        d = (
-            df.select(
-                F.col(channel),
-                us.alias("__us"),
-                F.col(seq).alias("__seq"),
-                F.lag(us).over(w).alias("__prev_us"),
-            )
-            .filter(F.col("__prev_us").isNotNull())
-            .withColumn("gap_us", F.col("__us") - F.col("__prev_us"))
-        )
+        .withColumn("gap_us", F.col("__us") - F.col("__prev_us"))
+    )
     wr = Window.partitionBy(channel).orderBy(
         F.col("gap_us").desc(), "__prev_us", "__seq"
     )
@@ -771,7 +698,6 @@ def episode_table(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """One row per alarm episode: consecutive samples above
@@ -785,13 +711,11 @@ def episode_table(
     the running count of NOT-above rows at or before it (each below
     row increments it, separating runs; it is constant within a run).
     That is a single per-channel prefix sum of the not-above
-    indicator, so the default path computes it with the distributed
-    prefix-sum machinery (operators/scalable_window.cumsum_scalable,
-    q08's shape) — (channel, bucket) parallelism instead of the
-    channel-capped double-row_number window. ``scalable=False``
-    selects the plain two-window form (the equivalence oracle in
-    tests; also exactly the q56 DuckDB oracle's formulation). Either
-    way the per-island rollup is a map-side-combinable hash-agg.
+    indicator, computed with the distributed prefix-sum machinery
+    (operators/scalable_window.cumsum_scalable, q08's shape) —
+    (channel, bucket) parallelism instead of the channel-capped
+    double-row_number window. The per-island rollup is a
+    map-side-combinable hash-agg.
     """
     us = epoch_us(ts)
     base = df.filter(F.col(value).isNotNull()).select(
@@ -801,26 +725,15 @@ def episode_table(
         F.col(seq),
         (F.col(value) > threshold).alias("__above"),
     )
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            cumsum_scalable,
-        )
-
-        marked = cumsum_scalable(
-            base,
-            F.when(F.col("__above"), F.lit(0)).otherwise(F.lit(1)),
-            "__island",
-            channel=channel,
-            ts=ts,
-            seq=seq,
-            bucket_s=bucket_s,
-        )
-    else:
-        w_all = Window.partitionBy(channel).orderBy("__us", seq)
-        w_state = Window.partitionBy(channel, "__above").orderBy("__us", seq)
-        marked = base.withColumn(
-            "__island", F.row_number().over(w_all) - F.row_number().over(w_state)
-        )
+    marked = sw.cumsum_scalable(
+        base,
+        F.when(F.col("__above"), F.lit(0)).otherwise(F.lit(1)),
+        "__island",
+        channel=channel,
+        ts=ts,
+        seq=seq,
+        bucket_s=bucket_s,
+    )
     episodes = (
         marked.filter(F.col("__above"))
         .groupBy(channel, "__island")
@@ -841,7 +754,6 @@ def alarm_episodes(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Alarm-episode accounting per channel over the
@@ -849,7 +761,7 @@ def alarm_episodes(
     span/start/samples (packed-decimal argmax, EARLIEST on ties) —
     which incident was worst, completing the alarm family (q49: total
     time above; q51: longest silences). See :func:`episode_table` for
-    the scalable island construction."""
+    the stitched island construction."""
     episodes = episode_table(
         df,
         threshold,
@@ -857,7 +769,6 @@ def alarm_episodes(
         value=value,
         ts=ts,
         seq=seq,
-        scalable=scalable,
         bucket_s=bucket_s,
     )
     # pack (span, −start) for the argmax: spans fit decimal(19,0),
@@ -1020,7 +931,6 @@ def alarm_coverage(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Cross-channel alarm coverage: merge every channel's alarm
@@ -1037,7 +947,7 @@ def alarm_coverage(
     episode count, merged-interval count, total covered microseconds,
     the longest merged interval, and the overall first/last bounds.
 
-    Scale shape (default, ``scalable=True``): the raw scan reduces to
+    Scale shape: the raw scan reduces to
     the episode table first (one row per episode); episodes are then
     SPLIT at coarse time-bucket boundaries (``bucket_s``) and the
     union runs per bucket — a window partitioned by bucket, never a
@@ -1053,10 +963,8 @@ def alarm_coverage(
     coverage/endpoints unchanged because the pieces of one episode
     touch at the boundary and touching intervals merge by definition;
     episode counting survives splitting by weighting only the FIRST
-    segment of each episode. ``scalable=False`` selects the one-level
-    global-window formulation (the DuckDB oracle's shape; equivalence
-    is pytest-pinned at multiple bucket widths). Single-sample
-    episodes cover zero microseconds by construction (span = 0).
+    segment of each episode (:func:`_interval_union_stitched`).
+    Single-sample episodes cover zero microseconds by construction (span = 0).
     All outputs are integers — engine/oracle hashing is exact.
     """
     eps = episode_table(
@@ -1066,36 +974,9 @@ def alarm_coverage(
         value=value,
         ts=ts,
         seq=seq,
-        scalable=scalable,
         bucket_s=bucket_s,
     )
-    if scalable:
-        merged = _interval_union_stitched(eps, channel, bucket_s)
-    else:
-        order = [F.col("start_us"), F.col("end_us"), F.col(channel)]
-        w_prev = (
-            Window.orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_run = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        # the very first episode has a NULL running max over the
-        # empty preceding frame — it still opens interval #1
-        opened = F.when(
-            F.max("end_us").over(w_prev).isNull()
-            | (F.col("start_us") > F.max("end_us").over(w_prev)),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        merged = (
-            eps.withColumn("__interval", F.sum(opened).over(w_run))
-            .groupBy("__interval")
-            .agg(
-                F.min("start_us").alias("i_start"),
-                F.max("end_us").alias("i_end"),
-                F.count(F.lit(1)).alias("i_eps"),
-            )
-        )
+    merged = _interval_union_stitched(eps, channel, bucket_s)
     return merged.agg(
         F.sum("i_eps").cast("bigint").alias("n_episodes"),
         F.count(F.lit(1)).cast("bigint").alias("n_intervals"),
@@ -1117,7 +998,6 @@ def coverage_timeline(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Fleet alarm-coverage TIMELINE: per time bucket (default: day),
@@ -1144,7 +1024,6 @@ def coverage_timeline(
         value=value,
         ts=ts,
         seq=seq,
-        scalable=scalable,
         bucket_s=bucket_s,
     )
     merged = _bucket_merged_segments(eps, channel, bucket_s)
@@ -1179,6 +1058,87 @@ def coverage_timeline(
     )
 
 
+def _overlap_pairs(
+    eps: DataFrame, channel: str, bucket_s: int, salt: int
+) -> DataFrame:
+    """One row per overlapping episode pair of two channels
+    (``channel_a < channel_b``; episodes strictly straddle): the
+    columns ``channel_a``, ``channel_b`` and ``pair_ov``, the shared
+    microseconds. Episodes split at ``bucket_s`` boundaries and meet
+    in an EQUI-join on the bucket; with ``salt`` > 1, side ``b`` is
+    keyed by ``hash(island) % salt`` and side ``a`` replicates over
+    every salt, so each pair still meets exactly once. The bucket
+    join of :func:`co_alarm_matrix`."""
+    w_us = int(bucket_s) * 1_000_000
+    # pieces carry the ORIGINAL episode bounds: the straddle test
+    # must run on originals, not pieces — a point episode sitting
+    # exactly on a bucket boundary inside another channel's
+    # episode yields pieces that never strictly straddle each
+    # other even though the episodes do (the cut lands exactly on
+    # the only intersection point). Piece overlaps then clamp at
+    # zero: buckets where the pair's pieces coexist without
+    # intersecting contribute nothing, and the per-bucket clamped
+    # sums add up to the exact total (bucket cuts partition the
+    # intersection).
+    seg = eps.withColumn(
+        "__b",
+        F.explode(
+            F.sequence(
+                F.expr(f"start_us DIV {w_us}"),
+                F.expr(f"end_us DIV {w_us}"),
+            )
+        ),
+    ).select(
+        "__b",
+        F.col(channel),
+        F.col("__island"),
+        F.col("start_us"),
+        F.col("end_us"),
+        F.greatest(F.col("start_us"), F.col("__b") * w_us).alias("__s"),
+        F.least(
+            F.col("end_us"), (F.col("__b") + F.lit(1)) * w_us
+        ).alias("__e"),
+    )
+    if salt > 1:
+        a = seg.withColumn(
+            "__salt",
+            F.explode(
+                F.sequence(F.lit(0).cast("long"), F.lit(salt - 1))
+            ),
+        ).alias("a")
+        b = seg.withColumn(
+            "__salt",
+            F.pmod(
+                F.xxhash64(F.col("__island"), F.col(channel)),
+                F.lit(salt),
+            ),
+        ).alias("b")
+    else:
+        a, b = seg.alias("a"), seg.alias("b")
+    cond = (
+        (F.col("a.__b") == F.col("b.__b"))
+        & (F.col(f"a.{channel}") < F.col(f"b.{channel}"))
+        & (F.col("a.start_us") < F.col("b.end_us"))
+        & (F.col("b.start_us") < F.col("a.end_us"))
+    )
+    if salt > 1:
+        cond = (F.col("a.__salt") == F.col("b.__salt")) & cond
+    pieces = a.join(b, on=cond).select(
+        F.col(f"a.{channel}").alias("channel_a"),
+        F.col(f"b.{channel}").alias("channel_b"),
+        F.col("a.__island").alias("ia"),
+        F.col("b.__island").alias("ib"),
+        F.greatest(
+            F.lit(0),
+            F.least(F.col("a.__e"), F.col("b.__e"))
+            - F.greatest(F.col("a.__s"), F.col("b.__s")),
+        ).alias("ov"),
+    )
+    return pieces.groupBy("channel_a", "channel_b", "ia", "ib").agg(
+        F.sum("ov").alias("pair_ov")
+    )
+
+
 def co_alarm_matrix(
     df: DataFrame,
     threshold: float,
@@ -1186,7 +1146,6 @@ def co_alarm_matrix(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s="auto",
     auto_target: int = 256,
     salt="auto",
@@ -1199,7 +1158,7 @@ def co_alarm_matrix(
     other (``a.start < b.end AND b.start < a.end``); touching
     endpoints share zero microseconds and do not count.
 
-    Scale shape (default): per-channel episodes are already DISJOINT
+    Scale shape: per-channel episodes are already DISJOINT
     (islands are separated by below-threshold rows), so no union pass
     is needed — episodes split at ``bucket_s`` boundaries (the q57
     machinery) and the overlap join becomes an EQUI-join on the
@@ -1208,9 +1167,8 @@ def co_alarm_matrix(
     one bucket's segments across channels. Split pieces of one
     episode pair re-aggregate by (island_a, island_b) before the
     per-pair rollup, so overlap sums exactly and pairs never double
-    count. ``scalable=False`` is the direct episode-level theta-join
-    (the oracle's formulation; equivalence pytest-pinned). Outputs
-    are integers — engine/oracle hashing exact.
+    count (:func:`_overlap_pairs`). Outputs are integers —
+    engine/oracle hashing exact.
 
     Within one bucket the cross-channel segment join is quadratic in
     that bucket's segments, so a channel CHATTERING around the
@@ -1252,7 +1210,7 @@ def co_alarm_matrix(
     explicit ``bucket_s``/``salt`` ints to stay lazy; output equality
     between the modes is test-pinned.
     """
-    detect_bucket_s = 86400 if bucket_s == "auto" else bucket_s
+    auto = bucket_s == "auto"
     eps = episode_table(
         df,
         threshold,
@@ -1260,11 +1218,9 @@ def co_alarm_matrix(
         value=value,
         ts=ts,
         seq=seq,
-        scalable=scalable,
-        bucket_s=detect_bucket_s,
+        bucket_s=86400 if auto else bucket_s,
     ).select(channel, "__island", "start_us", "end_us")
-    _auto_checkpointed = bool(scalable and bucket_s == "auto")
-    if scalable and bucket_s == "auto":
+    if auto:
         # freeze the episode table: the density rollup + both join
         # sides would otherwise each recompute the full detection scan
         eps = eps.localCheckpoint()
@@ -1287,118 +1243,31 @@ def co_alarm_matrix(
             mean_len_s = int(st["tot_len"] // st["n"] // 1_000_000)
             density_s = int(86400 * auto_target // st["mx"])
             bucket_s = min(86400, max(1, density_s, mean_len_s))
-    if scalable:
-        w_us = int(bucket_s) * 1_000_000
-        # pieces carry the ORIGINAL episode bounds: the straddle test
-        # must run on originals, not pieces — a point episode sitting
-        # exactly on a bucket boundary inside another channel's
-        # episode yields pieces that never strictly straddle each
-        # other even though the episodes do (the cut lands exactly on
-        # the only intersection point). Piece overlaps then clamp at
-        # zero: buckets where the pair's pieces coexist without
-        # intersecting contribute nothing, and the per-bucket clamped
-        # sums add up to the exact total (bucket cuts partition the
-        # intersection).
-        seg = eps.withColumn(
-            "__b",
-            F.explode(
-                F.sequence(
-                    F.expr(f"start_us DIV {w_us}"),
-                    F.expr(f"end_us DIV {w_us}"),
+    if salt == "auto":
+        # the hottest-bucket probe needs the episode table twice more;
+        # only affordable when it is already checkpointed (auto-bucket
+        # mode). One episode-scale rollup: max segments in any one
+        # join bucket.
+        salt = 1
+        if auto:
+            w_us = int(bucket_s) * 1_000_000
+            hot = (
+                eps.select(
+                    F.explode(
+                        F.sequence(
+                            F.expr(f"start_us DIV {w_us}"),
+                            F.expr(f"end_us DIV {w_us}"),
+                        )
+                    ).alias("__b")
                 )
-            ),
-        ).select(
-            "__b",
-            F.col(channel),
-            F.col("__island"),
-            F.col("start_us"),
-            F.col("end_us"),
-            F.greatest(F.col("start_us"), F.col("__b") * w_us).alias("__s"),
-            F.least(
-                F.col("end_us"), (F.col("__b") + F.lit(1)) * w_us
-            ).alias("__e"),
-        )
-        if salt == "auto":
-            # the hottest-bucket probe needs the episode table twice
-            # more; only affordable when it is already checkpointed
-            # (auto-bucket mode). One episode-scale rollup: max
-            # segments in any one join bucket.
-            if _auto_checkpointed:
-                hot = (
-                    eps.select(
-                        F.explode(
-                            F.sequence(
-                                F.expr(f"start_us DIV {w_us}"),
-                                F.expr(f"end_us DIV {w_us}"),
-                            )
-                        ).alias("__b")
-                    )
-                    .groupBy("__b")
-                    .count()
-                    .agg(F.max("count").alias("mx"))
-                    .collect()[0]["mx"]
-                )
-                salt = (
-                    min(32, int(hot) // auto_target)
-                    if hot and int(hot) > 4 * auto_target
-                    else 1
-                )
-            else:
-                salt = 1
-        salt = max(1, int(salt))
-        if salt > 1:
-            a = seg.withColumn(
-                "__salt",
-                F.explode(
-                    F.sequence(F.lit(0).cast("long"), F.lit(salt - 1))
-                ),
-            ).alias("a")
-            b = seg.withColumn(
-                "__salt",
-                F.pmod(
-                    F.xxhash64(F.col("__island"), F.col(channel)),
-                    F.lit(salt),
-                ),
-            ).alias("b")
-        else:
-            a, b = seg.alias("a"), seg.alias("b")
-        cond = (
-            (F.col("a.__b") == F.col("b.__b"))
-            & (F.col(f"a.{channel}") < F.col(f"b.{channel}"))
-            & (F.col("a.start_us") < F.col("b.end_us"))
-            & (F.col("b.start_us") < F.col("a.end_us"))
-        )
-        if salt > 1:
-            cond = (F.col("a.__salt") == F.col("b.__salt")) & cond
-        pieces = a.join(b, on=cond).select(
-            F.col(f"a.{channel}").alias("channel_a"),
-            F.col(f"b.{channel}").alias("channel_b"),
-            F.col("a.__island").alias("ia"),
-            F.col("b.__island").alias("ib"),
-            F.greatest(
-                F.lit(0),
-                F.least(F.col("a.__e"), F.col("b.__e"))
-                - F.greatest(F.col("a.__s"), F.col("b.__s")),
-            ).alias("ov"),
-        )
-        pairs = pieces.groupBy("channel_a", "channel_b", "ia", "ib").agg(
-            F.sum("ov").alias("pair_ov")
-        )
-    else:
-        a, b = eps.alias("a"), eps.alias("b")
-        pairs = a.join(
-            b,
-            on=(F.col(f"a.{channel}") < F.col(f"b.{channel}"))
-            & (F.col("a.start_us") < F.col("b.end_us"))
-            & (F.col("b.start_us") < F.col("a.end_us")),
-        ).select(
-            F.col(f"a.{channel}").alias("channel_a"),
-            F.col(f"b.{channel}").alias("channel_b"),
-            (
-                F.least(F.col("a.end_us"), F.col("b.end_us"))
-                - F.greatest(F.col("a.start_us"), F.col("b.start_us"))
-            ).alias("pair_ov"),
-        )
+                .groupBy("__b")
+                .count()
+                .agg(F.max("count").alias("mx"))
+                .collect()[0]["mx"]
+            )
+            if hot and int(hot) > 4 * auto_target:
+                salt = min(32, int(hot) // auto_target)
+    pairs = _overlap_pairs(eps, channel, bucket_s, max(1, int(salt)))
     return (
         pairs.groupBy("channel_a", "channel_b")
         .agg(
@@ -1416,7 +1285,6 @@ def alarm_reliability(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Per-channel reliability report over the alarm episodes: MTTR
@@ -1445,7 +1313,6 @@ def alarm_reliability(
         value=value,
         ts=ts,
         seq=seq,
-        scalable=scalable,
         bucket_s=bucket_s,
     )
     w = Window.partitionBy(channel).orderBy("start_us", "end_us")
@@ -1585,19 +1452,14 @@ def hysteresis_episodes(
         )
         scalable = bool(mx and int(mx) > int(auto_plain_max))
     if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            cumsum_scalable,
-            lag_stitched,
-        )
-
-        lagged = lag_stitched(
+        lagged = sw.lag_stitched(
             dec, ["__set"], channel=channel, ts=ts, seq=seq, bucket_s=bucket_s
         )
         start = (
             (F.col("__set") == 1)
             & (F.coalesce(F.col("__lag___set"), F.lit(0)) == 0)
         ).cast("bigint")
-        marked = cumsum_scalable(
+        marked = sw.cumsum_scalable(
             lagged,
             start,
             "__k",
@@ -1666,7 +1528,6 @@ def rle_profile(
     value: str = "value",
     ts: str = "ts",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Run-length compressibility profile per channel: how many
@@ -1692,31 +1553,16 @@ def rle_profile(
         F.col(seq),
         F.col(value).alias("__v"),
     )
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            cumsum_scalable,
-            lag_stitched,
-        )
-
-        lagged = lag_stitched(
-            base, ["__v"], channel=channel, ts=ts, seq=seq, bucket_s=bucket_s
-        )
-        chg = F.coalesce(
-            F.col("__v") != F.col("__lag___v"), F.lit(True)
-        ).cast("bigint")
-        marked = cumsum_scalable(
-            lagged, chg, "__k",
-            channel=channel, ts=ts, seq=seq, bucket_s=bucket_s,
-        )
-    else:
-        w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-        chg = F.coalesce(
-            F.col("__v") != F.lag("__v").over(w), F.lit(True)
-        ).cast("bigint")
-        marked = base.withColumn(
-            "__k",
-            F.sum(chg).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
+    lagged = sw.lag_stitched(
+        base, ["__v"], channel=channel, ts=ts, seq=seq, bucket_s=bucket_s
+    )
+    chg = F.coalesce(
+        F.col("__v") != F.col("__lag___v"), F.lit(True)
+    ).cast("bigint")
+    marked = sw.cumsum_scalable(
+        lagged, chg, "__k",
+        channel=channel, ts=ts, seq=seq, bucket_s=bucket_s,
+    )
     runs = marked.groupBy(channel, "__k").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.min("__us").alias("start_us"),
@@ -1750,7 +1596,6 @@ def freshness_report(
     ts: str = "ts",
     seq: str = "event_id",
     overdue_factor: float = 3.0,
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Per-channel data-freshness report: last/first sample, sample
@@ -1766,27 +1611,17 @@ def freshness_report(
     Gaps come from the stitched (channel, bucket) lag (q51's
     machinery); the median runs the q33 exact-percentile shape over
     the GAP table (one row per sample — same cardinality class as the
-    input, per-channel rank window as documented for q33); everything
+    input, ranked by :func:`_value_ranks`); everything
     else is two tiny aggregates joined back (global now is ONE row,
     AQE-broadcast). Channels with < 2 samples report NULL cadence and
     NULL overdue.
     """
     us = epoch_us(ts)
     base = df.select(F.col(channel), F.col(ts), us.alias("__us"), F.col(seq))
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            lag_stitched,
-        )
-
-        lagged = lag_stitched(
-            base, ["__us"], channel=channel, ts=ts, seq=seq,
-            bucket_s=bucket_s,
-        )
-        prev = F.col("__lag___us")
-    else:
-        w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-        lagged = base.withColumn("__lag___us", F.lag("__us").over(w))
-        prev = F.col("__lag___us")
+    lagged = sw.lag_stitched(
+        base, ["__us"], channel=channel, ts=ts, seq=seq, bucket_s=bucket_s
+    )
+    prev = F.col("__lag___us")
     gaps = (
         lagged.filter(prev.isNotNull())
         .select(

@@ -122,8 +122,8 @@ def rate_scalable(
     seq: str = "event_id",
     bucket_s: int = 86400,
 ) -> DataFrame:
-    """Counter -> rate with (channel, bucket) parallelism. Result is
-    identical to operators.range_stats.rate (tested)."""
+    """Counter -> rate with (channel, bucket) parallelism: the body of
+    operators.range_stats.rate."""
     df = df.withColumn("__ts_us", epoch_us(ts))
     stitched = lag_stitched(
         df, [value, "__ts_us"], channel=channel, ts=ts, seq=seq, bucket_s=bucket_s

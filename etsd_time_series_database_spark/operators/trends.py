@@ -1926,7 +1926,6 @@ def monotone_runs(
     ts: str = "ts",
     value: str = "value",
     seq: str = "event_id",
-    scalable: bool = True,
     bucket_s: int = 86400,
 ) -> DataFrame:
     """Longest strictly-rising and strictly-falling run per channel
@@ -1936,73 +1935,48 @@ def monotone_runs(
     ties.
 
     Construction mirrors q56's islands: delta rows come from the
-    stitched lag (scalable default); an up-run's island id is the
-    running count of NON-positive deltas at or before it (constant
-    within the run, bumped by every run breaker) — one prefix sum per
-    direction, both computed in a single
+    stitched lag; an up-run's island id is the running count of
+    NON-positive deltas at or before it (constant within the run,
+    bumped by every run breaker) — one prefix sum per direction, both
+    computed in a single
     :func:`~etsd_time_series_database_spark.operators.scalable_window.cumsum_multi`
     pass that reuses the lag's (channel, bucket) partitioning. Run
     rollups are hash-aggs; the per-channel argmax packs
     (n, −start) into an order-preserving DECIMAL max_by. Rises
     accumulate as DECIMAL(18,6) (order-independent, oracle-exact).
-
-    ``scalable=False`` is the plain two-window equivalence oracle.
     """
+    from etsd_time_series_database_spark.operators.scalable_window import (
+        cumsum_multi,
+        lag_stitched,
+    )
+
     src = df.filter(F.col(value).isNotNull()).withColumn(
         "__ts_us", epoch_us(ts)
     )
-    if scalable:
-        from etsd_time_series_database_spark.operators.scalable_window import (
-            cumsum_multi,
-            lag_stitched,
-        )
-
-        st = lag_stitched(
-            src, [value, "__ts_us"], channel=channel, ts=ts, seq=seq,
-            bucket_s=bucket_s,
-        )
-        d = st.filter(F.col(f"__lag_{value}").isNotNull()).select(
-            F.col(channel),
-            F.col(ts),
-            F.col(seq),
-            "__bkt",
-            F.col("__ts_us").alias("__us"),
-            F.col(f"__lag___ts_us").alias("__pus"),
-            (F.col(value) - F.col(f"__lag_{value}")).alias("__dv"),
-        )
-        d = cumsum_multi(
-            d,
-            {
-                "__isl_up": (F.col("__dv") <= 0).cast("int"),
-                "__isl_dn": (F.col("__dv") >= 0).cast("int"),
-            },
-            channel=channel,
-            ts=ts,
-            seq=seq,
-            bucket_s=bucket_s,
-        )
-    else:
-        w = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq))
-        wr = Window.partitionBy(channel).orderBy(F.col(ts), F.col(seq)).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        d = (
-            src.select(
-                F.col(channel),
-                F.col(ts),
-                F.col(seq),
-                F.col("__ts_us").alias("__us"),
-                F.lag("__ts_us").over(w).alias("__pus"),
-                (F.col(value) - F.lag(value).over(w)).alias("__dv"),
-            )
-            .filter(F.col("__pus").isNotNull())
-            .withColumn(
-                "__isl_up", F.sum((F.col("__dv") <= 0).cast("int")).over(wr)
-            )
-            .withColumn(
-                "__isl_dn", F.sum((F.col("__dv") >= 0).cast("int")).over(wr)
-            )
-        )
+    st = lag_stitched(
+        src, [value, "__ts_us"], channel=channel, ts=ts, seq=seq,
+        bucket_s=bucket_s,
+    )
+    d = st.filter(F.col(f"__lag_{value}").isNotNull()).select(
+        F.col(channel),
+        F.col(ts),
+        F.col(seq),
+        "__bkt",
+        F.col("__ts_us").alias("__us"),
+        F.col(f"__lag___ts_us").alias("__pus"),
+        (F.col(value) - F.col(f"__lag_{value}")).alias("__dv"),
+    )
+    d = cumsum_multi(
+        d,
+        {
+            "__isl_up": (F.col("__dv") <= 0).cast("int"),
+            "__isl_dn": (F.col("__dv") >= 0).cast("int"),
+        },
+        channel=channel,
+        ts=ts,
+        seq=seq,
+        bucket_s=bucket_s,
+    )
 
     # ONE role-keyed pipeline instead of separate up/down branches
     # (which would each recompute the scan + stitched lag + prefix-sum

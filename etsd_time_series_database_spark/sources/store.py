@@ -837,12 +837,18 @@ def install_partition(fresh: DataFrame, part_dir: str, kind: str) -> int:
     with :func:`swap_in_dir` — or, when it holds no rows, drop
     ``part_dir`` rather than install an empty partition (its source
     day vanished, e.g. drained by a cross-day amend). The tail of a
-    :func:`refresh_derived_tier` day refresh. Returns the row count."""
+    :func:`refresh_derived_tier` day refresh. A write or count that
+    fails deletes the staging copy, as in :func:`install_rebuild`.
+    Returns the row count."""
     spark = fresh.sparkSession
     fs, Path = _hadoop_fs(spark, part_dir)
     tmp = staging_dir(part_dir, kind)
-    fresh.write.mode("overwrite").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    try:
+        fresh.write.mode("overwrite").parquet(tmp)
+        n = spark.read.parquet(tmp).count()
+    except Exception:
+        fs.delete(Path(tmp), True)
+        raise
     if n == 0:
         fs.delete(Path(tmp), True)
         fs.delete(Path(part_dir), True)

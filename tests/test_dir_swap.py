@@ -166,11 +166,14 @@ def test_incremental_dedup_failed_install_keeps_previous_survivors(
 
 def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
     """A whole-tier rebuild (``refresh_derived_tier(days=None)``,
-    ``materialize_tier_ladder``) stages its copy and swaps it in: a
-    write whose tasks fail leaves the previous tier and its sidecar
-    readable and no staging dir behind. The failure is an unavailable
-    parquet codec, which raises in the write tasks themselves; an
-    overwrite onto the live path left it an empty directory."""
+    ``materialize_tier_ladder``) and a day refresh
+    (``install_partition``) stage their copy and swap it in: a write
+    whose tasks fail leaves the previous tier and its sidecar readable
+    and no staging dir behind, beside the tier or inside it. The
+    failure is an unavailable parquet codec, which raises in the write
+    tasks themselves; an overwrite onto the live path left it an empty
+    directory, and a failed day refresh left its ``__digest_*``
+    staging dir inside the tier."""
     from py4j.protocol import Py4JJavaError
 
     from etsd_time_series_database_spark.operators.trends import (
@@ -184,6 +187,10 @@ def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
     lad = str(tmp_path / "ladder")
     store.refresh_digest_tier(spark, raw, dig)
     materialize_tier_ladder(events, lad, tiers_s=(3600, 86400))
+    day = min(
+        q.name[len("dt="):] for q in (tmp_path / "digest").iterdir()
+        if q.name.startswith("dt=")
+    )
     tiers = {
         dig: store.DIGEST_TIER.sidecar, lad: "_ladder_meta.json",
     }
@@ -201,6 +208,8 @@ def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
         with pytest.raises(Py4JJavaError, match="LzoCodec"):
             store.refresh_digest_tier(spark, raw, dig)
         with pytest.raises(Py4JJavaError, match="LzoCodec"):
+            store.refresh_digest_tier(spark, raw, dig, days=[day])
+        with pytest.raises(Py4JJavaError, match="LzoCodec"):
             materialize_tier_ladder(events, lad, tiers_s=(3600, 21600))
     finally:
         spark.conf.unset(codec)
@@ -209,4 +218,5 @@ def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
             sorted(map(tuple, spark.read.parquet(p).collect())),
             store.read_meta_sidecar(spark, p, sidecar),
         ) == before[p], p
-    assert not [q for q in tmp_path.iterdir() if q.name.startswith("__")]
+    for root in (tmp_path, tmp_path / "digest"):
+        assert not [q for q in root.iterdir() if q.name.startswith("__")]

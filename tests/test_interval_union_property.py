@@ -11,7 +11,8 @@ import pytest
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
+
+from tests.plain_windows import channel_global, range_stats
 
 episode = st.tuples(
     st.integers(min_value=0, max_value=500),   # start (scaled to us)
@@ -20,42 +21,13 @@ episode = st.tuples(
 )
 
 
-def _run_union(spark, eps_rows, bucket_s, scalable):
-    from etsd_time_series_database_spark.operators.range_stats import (
-        _interval_union_stitched,
-    )
-    from pyspark.sql import Window
-
+def _run_union(spark, eps_rows, bucket_s):
     eps = spark.createDataFrame(
         [(ch, i, s * 1_000_000, (s + d) * 1_000_000)
          for i, (s, d, ch) in enumerate(eps_rows)],
         "event_type string, __island bigint, start_us bigint, end_us bigint",
     )
-    if scalable:
-        merged = _interval_union_stitched(eps, "event_type", bucket_s)
-    else:
-        order = [F.col("start_us"), F.col("end_us"), F.col("event_type")]
-        w_prev = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        w_run = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        opened = F.when(
-            F.max("end_us").over(w_prev).isNull()
-            | (F.col("start_us") > F.max("end_us").over(w_prev)),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        merged = (
-            eps.withColumn("__iv", F.sum(opened).over(w_run))
-            .groupBy("__iv")
-            .agg(
-                F.min("start_us").alias("i_start"),
-                F.max("end_us").alias("i_end"),
-                F.count(F.lit(1)).alias("i_eps"),
-            )
-            .select("i_start", "i_end", "i_eps")
-        )
+    merged = range_stats._interval_union_stitched(eps, "event_type", bucket_s)
     return sorted(
         (r.i_start, r.i_end, r.i_eps) for r in merged.collect()
     )
@@ -71,20 +43,16 @@ def _run_union(spark, eps_rows, bucket_s, scalable):
     bucket_s=st.sampled_from([7, 60, 97, 250]),
 )
 def test_stitched_union_equals_global_union(spark, eps, bucket_s):
-    got = _run_union(spark, eps, bucket_s, scalable=True)
-    want = _run_union(spark, eps, bucket_s, scalable=False)
+    got = _run_union(spark, eps, bucket_s)
+    with channel_global():
+        want = _run_union(spark, eps, bucket_s)
     assert got == want
 
 
-def _run_co_alarm(spark, eps_rows, bucket_s, scalable):
-    """Drive co_alarm_matrix's two join paths on a synthetic episode
-    table by monkey-building events that produce exactly these
-    episodes: one sample at start and one at end of each episode
-    (values above threshold), separated by below-threshold samples."""
-    from etsd_time_series_database_spark.operators.range_stats import (
-        co_alarm_matrix,
-    )
-
+def _events_for(spark, eps_rows):
+    """Events that produce exactly these episodes: one sample at start
+    and one at end of each episode (values above threshold), separated
+    by below-threshold samples."""
     rows, seq = [], 0
     for s, d, ch in eps_rows:
         # an above sample at start and end; a below sample right after
@@ -92,93 +60,76 @@ def _run_co_alarm(spark, eps_rows, bucket_s, scalable):
         rows.append((s * 1_000_000, ch, 99.0, seq)); seq += 1
         rows.append(((s + d) * 1_000_000, ch, 99.0, seq)); seq += 1
         rows.append(((s + d) * 1_000_000 + 1, ch, 1.0, seq)); seq += 1
-    df = spark.createDataFrame(
-        [(ts, ch, v, sq) for ts, ch, v, sq in rows],
-        "us bigint, event_type string, value double, event_id bigint",
-    ).selectExpr(
-        "timestamp_micros(us) AS ts", "event_type", "value", "event_id"
-    )
-    out = co_alarm_matrix(
-        df, 20.0, scalable=scalable, bucket_s=bucket_s
-    ).collect()
-    return sorted(
-        (r.channel_a, r.channel_b, r.n_copairs, r.overlap_us) for r in out
-    )
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    eps=st.lists(episode, min_size=1, max_size=15),
-    bucket_s=st.sampled_from([7, 60, 250]),
-)
-@pytest.mark.slow
-def test_co_alarm_stitched_equals_plain(spark, eps, bucket_s):
-    got = _run_co_alarm(spark, eps, bucket_s, scalable=True)
-    want = _run_co_alarm(spark, eps, bucket_s, scalable=False)
-    assert got == want
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(eps=st.lists(episode, min_size=1, max_size=15))
-@pytest.mark.slow
-def test_co_alarm_auto_bucket_equals_plain(spark, eps):
-    """bucket_s='auto' (density-derived join bucket) must be a pure
-    physical choice: identical output to the plain theta-join on
-    random episode sets, including point episodes and touch chains."""
-    got = _run_co_alarm(spark, eps, "auto", scalable=True)
-    want = _run_co_alarm(spark, eps, 60, scalable=False)
-    assert got == want
-
-
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    eps=st.lists(episode, min_size=1, max_size=15),
-    salt=st.sampled_from([2, 3, 7]),
-)
-@pytest.mark.slow
-def test_co_alarm_salted_join_equals_plain(spark, eps, salt):
-    """A forced salt factor (the hot-bucket sub-split) must be a pure
-    physical choice: every episode pair meets exactly once (side b
-    keyed by hash(island)%S, side a replicated over all S salts), so
-    output is identical to the plain theta-join."""
-    from etsd_time_series_database_spark.operators.range_stats import (
-        co_alarm_matrix,
-    )
-
-    rows, seq = [], 0
-    for s, d, ch in eps:
-        rows.append((s * 1_000_000, ch, 99.0, seq)); seq += 1
-        rows.append(((s + d) * 1_000_000, ch, 99.0, seq)); seq += 1
-        rows.append(((s + d) * 1_000_000 + 1, ch, 1.0, seq)); seq += 1
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "us bigint, event_type string, value double, event_id bigint",
     ).selectExpr(
         "timestamp_micros(us) AS ts", "event_type", "value", "event_id"
     )
-    got = sorted(
-        tuple(r)
-        for r in co_alarm_matrix(
-            df, 20.0, scalable=True, bucket_s=60, salt=salt
-        ).collect()
+
+
+def _co_alarm(df, **kw):
+    return sorted(
+        tuple(r) for r in range_stats.co_alarm_matrix(df, 20.0, **kw).collect()
     )
-    want = sorted(
-        tuple(r)
-        for r in co_alarm_matrix(df, 20.0, scalable=False).collect()
+
+
+# Each co-alarm property runs a small example budget in the default
+# gate and its full budget under ``slow``.
+def _budgets(full):
+    return pytest.mark.parametrize(
+        "n", [2, pytest.param(full, marks=pytest.mark.slow)],
+        ids=["fast", "full"],
     )
-    assert got == want
+
+
+_EPISODES = st.lists(episode, min_size=1, max_size=15)
+
+
+@_budgets(8)
+def test_co_alarm_stitched_equals_plain(spark, n):
+    @settings(max_examples=n, deadline=None)
+    @given(eps=_EPISODES, bucket_s=st.sampled_from([7, 60, 250]))
+    def prop(eps, bucket_s):
+        df = _events_for(spark, eps)
+        with channel_global():
+            want = _co_alarm(df, bucket_s=bucket_s)
+        assert _co_alarm(df, bucket_s=bucket_s) == want
+
+    prop()
+
+
+@_budgets(6)
+def test_co_alarm_auto_bucket_equals_plain(spark, n):
+    """bucket_s='auto' (density-derived join bucket) must be a pure
+    physical choice: identical output to the plain theta-join on
+    random episode sets, including point episodes and touch chains."""
+    @settings(max_examples=n, deadline=None)
+    @given(eps=_EPISODES)
+    def prop(eps):
+        df = _events_for(spark, eps)
+        with channel_global():
+            want = _co_alarm(df, bucket_s=60)
+        assert _co_alarm(df, bucket_s="auto") == want
+
+    prop()
+
+
+@_budgets(6)
+def test_co_alarm_salted_join_equals_plain(spark, n):
+    """A forced salt factor (the hot-bucket sub-split) must be a pure
+    physical choice: every episode pair meets exactly once (side b
+    keyed by hash(island)%S, side a replicated over all S salts), so
+    output is identical to the plain theta-join."""
+    @settings(max_examples=n, deadline=None)
+    @given(eps=_EPISODES, salt=st.sampled_from([2, 3, 7]))
+    def prop(eps, salt):
+        df = _events_for(spark, eps)
+        with channel_global():
+            want = _co_alarm(df)
+        assert _co_alarm(df, bucket_s=60, salt=salt) == want
+
+    prop()
 
 
 def test_co_alarm_forced_hot_bucket_auto_salts(spark):
@@ -188,10 +139,6 @@ def test_co_alarm_forced_hot_bucket_auto_salts(spark):
     lowered so the sandbox-sized data crosses the 4*auto_target
     trigger, the auto-salt path must engage AND reproduce the plain
     theta-join exactly."""
-    from etsd_time_series_database_spark.operators.range_stats import (
-        co_alarm_matrix,
-    )
-
     rows, seq = [], 0
     base = 1_700_000_000 * 1_000_000
     for ch_i in range(6):
@@ -207,16 +154,9 @@ def test_co_alarm_forced_hot_bucket_auto_salts(spark):
     ).selectExpr(
         "timestamp_micros(us) AS ts", "event_type", "value", "event_id"
     )
-    got = sorted(
-        tuple(r)
-        for r in co_alarm_matrix(
-            df, 20.0, bucket_s="auto", auto_target=2, salt="auto"
-        ).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in co_alarm_matrix(df, 20.0, scalable=False).collect()
-    )
+    got = _co_alarm(df, bucket_s="auto", auto_target=2, salt="auto")
+    with channel_global():
+        want = _co_alarm(df)
     assert got == want
     assert got  # the hot second really produces co-alarm pairs
 

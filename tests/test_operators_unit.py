@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 import importlib
 
+from tests.plain_windows import channel_global
+
 ops = importlib.import_module("etsd_time_series_database_spark.operators.range_stats")
 
 
@@ -911,8 +913,9 @@ def test_longest_gaps_scalable_matches_plain(spark):
             sq += 1
             rows.append((f"2026-01-01 00:0{m}:{s:02d}", ch, sq, sq))
     df = _series(spark, rows)
-    plain = longest_gaps(df, k=3, scalable=False).collect()
-    stitched = longest_gaps(df, k=3, scalable=True, bucket_s=60).collect()
+    with channel_global():
+        plain = longest_gaps(df, k=3).collect()
+    stitched = longest_gaps(df, k=3, bucket_s=60).collect()
     assert [tuple(r) for r in stitched] == [tuple(r) for r in plain]
     assert len(plain) == 6  # 3 per channel
 
@@ -937,8 +940,9 @@ def test_alarm_episodes_scalable_matches_plain(spark):
         ("2026-01-01 00:04:00", "b", 99, 8),   # one episode
     ]
     df = _series(spark, rows)
-    plain = alarm_episodes(df, 20.0, scalable=False).collect()
-    stitched = alarm_episodes(df, 20.0, scalable=True, bucket_s=60).collect()
+    with channel_global():
+        plain = alarm_episodes(df, 20.0).collect()
+    stitched = alarm_episodes(df, 20.0, bucket_s=60).collect()
     assert [tuple(r) for r in stitched] == [tuple(r) for r in plain]
     a = {r.event_type: r for r in stitched}["a"]
     assert a.n_episodes == 2
@@ -969,8 +973,9 @@ def test_alarm_coverage_merges_overlaps(spark):
     assert r.n_intervals == 2          # [00:10,00:40] and [01:00,01:05]
     assert r.covered_us == (30 + 5) * 60 * 1_000_000
     assert r.longest_interval_us == 30 * 60 * 1_000_000
-    # scalable and plain island construction agree
-    r2 = alarm_coverage(df, 20.0, scalable=False).collect()[0]
+    # stitched and channel-global island construction agree
+    with channel_global():
+        r2 = alarm_coverage(df, 20.0).collect()[0]
     assert tuple(r) == tuple(r2)
 
 
@@ -1008,11 +1013,10 @@ def test_alarm_coverage_bucket_stitch_equivalence(spark):
         ("2026-01-01 00:12:05", "b", 99, 13),
     ]
     df = _series(spark, rows)
-    plain = alarm_coverage(df, 20.0, scalable=False).collect()[0]
+    with channel_global():
+        plain = alarm_coverage(df, 20.0).collect()[0]
     for bucket_s in (60, 30, 7):
-        st = alarm_coverage(
-            df, 20.0, scalable=True, bucket_s=bucket_s
-        ).collect()[0]
+        st = alarm_coverage(df, 20.0, bucket_s=bucket_s).collect()[0]
         assert tuple(st) == tuple(plain), f"bucket_s={bucket_s}"
     # sanity of the plain baseline itself: per channel, consecutive
     # above-samples form ONE episode — a: [00:00:30,00:10:00];
@@ -1034,10 +1038,9 @@ def test_alarm_coverage_equivalence_on_events(spark):
     from tests.conftest import SF_SMOKE
 
     df = load_table(spark, SF_SMOKE, "events")
-    plain = alarm_coverage(df, 100.0, scalable=False).collect()[0]
-    st = alarm_coverage(
-        df, 100.0, scalable=True, bucket_s=3600
-    ).collect()[0]
+    with channel_global():
+        plain = alarm_coverage(df, 100.0).collect()[0]
+    st = alarm_coverage(df, 100.0, bucket_s=3600).collect()[0]
     assert tuple(st) == tuple(plain)
 
 
@@ -1139,8 +1142,9 @@ def test_monotone_runs_picks_longest_earliest(spark):
     b = out["b"]
     assert b.up_n is None and (b.down_n, b.fall) == (2, -3.0)
     # stitched default == plain global windows, across bucket edges
-    plain = monotone_runs(df, scalable=False).collect()
-    stitched = monotone_runs(df, scalable=True, bucket_s=120).collect()
+    with channel_global():
+        plain = monotone_runs(df).collect()
+    stitched = monotone_runs(df, bucket_s=120).collect()
     assert [tuple(r) for r in stitched] == [tuple(r) for r in plain]
 
 
@@ -1406,8 +1410,9 @@ def test_rle_profile_runs_and_ratio(spark):
         t(0).timestamp()) * 1_000_000
     b = out["b"]
     assert (b.n_rows, b.n_runs, b.rle_ratio, b.longest_run) == (2, 1, 0.5, 2)
-    plain = rle_profile(df, scalable=False).collect()
-    stitched = rle_profile(df, scalable=True, bucket_s=25).collect()
+    with channel_global():
+        plain = rle_profile(df).collect()
+    stitched = rle_profile(df, bucket_s=25).collect()
     assert [tuple(x) for x in stitched] == [tuple(x) for x in plain]
 
 
@@ -1513,8 +1518,9 @@ def test_freshness_report_cadence_and_overdue(spark):
     c = out["c"]
     assert c.median_gap_us is None and c.overdue is None
     assert c.staleness_us == 70 * 1_000_000
-    plain = freshness_report(df, scalable=False).collect()
-    stitched = freshness_report(df, scalable=True, bucket_s=35).collect()
+    with channel_global():
+        plain = freshness_report(df).collect()
+    stitched = freshness_report(df, bucket_s=35).collect()
     assert [tuple(x) for x in stitched] == [tuple(x) for x in plain]
 
 
@@ -1543,7 +1549,8 @@ def test_co_alarm_matrix_counts_overlaps(spark):
         ("2026-01-01 01:05:00", "b", 99, 9),
     ]
     df = _series(spark, rows)
-    plain = co_alarm_matrix(df, 20.0, scalable=False).collect()
+    with channel_global():
+        plain = co_alarm_matrix(df, 20.0).collect()
     want = {
         ("a", "b"): (1, 10 * 60 * 1_000_000),
         ("b", "c"): (1, 5 * 60 * 1_000_000),
@@ -1552,9 +1559,7 @@ def test_co_alarm_matrix_counts_overlaps(spark):
            for r in plain}
     assert got == want  # (a, c) touches only: excluded
     for bucket_s in (60, 7):
-        st = co_alarm_matrix(
-            df, 20.0, scalable=True, bucket_s=bucket_s
-        ).collect()
+        st = co_alarm_matrix(df, 20.0, bucket_s=bucket_s).collect()
         got_st = {(r.channel_a, r.channel_b): (r.n_copairs, r.overlap_us)
                   for r in st}
         assert got_st == want, f"bucket_s={bucket_s}"
@@ -1763,9 +1768,9 @@ def test_co_alarm_point_on_bucket_boundary(spark):
         "timestamp_micros(us) AS ts", "event_type", "value", "event_id"
     )
     want = [("a", "b", 1, 0)]
-    plain = [tuple(r) for r in co_alarm_matrix(df, 20.0, scalable=False).collect()]
-    st = [tuple(r) for r in co_alarm_matrix(
-        df, 20.0, scalable=True, bucket_s=60).collect()]
+    with channel_global():
+        plain = [tuple(r) for r in co_alarm_matrix(df, 20.0).collect()]
+    st = [tuple(r) for r in co_alarm_matrix(df, 20.0, bucket_s=60).collect()]
     assert plain == want and st == want
 
 

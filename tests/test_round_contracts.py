@@ -303,3 +303,38 @@ def test_rra_consolidation_rules_have_one_copy():
         "tier_multiple": {"_rra_cascade": 1},
         "route": {"_coarsest_dividing": 1},
     }, found
+
+
+def test_only_hysteresis_keeps_a_scalable_switch():
+    """The stitched (channel, bucket) form is the one path of every
+    channel-window operator; the channel-global forms live in
+    ``tests/plain_windows.py`` as test references. Only q62's
+    ``hysteresis_episodes`` keeps its ``scalable`` switch, because its
+    ``"auto"`` mode picks a side by a measured crossover. q33's value
+    bucket width is a module constant, not a parameter."""
+    import ast
+
+    def params(f):
+        a = f.args
+        return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+
+    funcs = list(_package_functions())
+    assert [f.name for f in funcs if "scalable" in params(f)] == [
+        "hysteresis_episodes"
+    ]
+    assert not [f.name for f in funcs if "value_bucket_bits" in params(f)]
+    kwargs = [
+        f.name
+        for f in funcs
+        for n in ast.walk(f)
+        if isinstance(n, ast.keyword) and n.arg == "scalable"
+    ]
+    assert not kwargs, kwargs
+    branches = [
+        f.name
+        for f in funcs
+        for n in ast.walk(f)
+        if isinstance(n, ast.If)
+        and "scalable" in {x.id for x in ast.walk(n.test) if isinstance(x, ast.Name)}
+    ]
+    assert branches == ["hysteresis_episodes"] * 2, branches

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from etsd_time_series_database_spark.sources.store import load_table
 from tests.conftest import SF_SMOKE
+from tests.plain_windows import channel_global
 
 ops = importlib.import_module("etsd_time_series_database_spark.operators.range_stats")
 sw = importlib.import_module(
@@ -27,19 +28,25 @@ def _rows(df):
 
 def test_rate_scalable_equals_global_window(spark):
     e = _events(spark)
-    assert _rows(sw.rate_scalable(e, bucket_s=86400)) == _rows(ops.rate(e, scalable=False))
+    with channel_global():
+        want = ops.rate(e)
+    assert _rows(sw.rate_scalable(e, bucket_s=86400)) == _rows(want)
 
 
 def test_rate_scalable_small_buckets_still_exact(spark):
     # 1-hour buckets: many more boundaries to stitch, same result.
     e = _events(spark)
-    assert _rows(sw.rate_scalable(e, bucket_s=3600)) == _rows(ops.rate(e, scalable=False))
+    with channel_global():
+        want = ops.rate(e)
+    assert _rows(sw.rate_scalable(e, bucket_s=3600)) == _rows(want)
 
 
 def test_rollover_scalable_equals_global_window(spark):
     e = _events(spark)
+    with channel_global():
+        want = ops.rollover_corrected(e)
     assert _rows(sw.rollover_corrected_scalable(e, bucket_s=86400)) == _rows(
-        ops.rollover_corrected(e, scalable=False)
+        want
     )
 
 
@@ -217,7 +224,8 @@ def test_exact_percentiles_scalable_equals_global_rank(spark):
 
     e = _events(spark)
     got = _rows(ops.exact_percentiles(e))
-    want = _rows(ops.exact_percentiles(e, scalable=False))
+    with channel_global():
+        want = _rows(ops.exact_percentiles(e))
     assert got == want
 
     plan = (
@@ -256,9 +264,9 @@ def test_exact_percentiles_scalable_equals_global_rank(spark):
         # NaN != NaN under tuple equality; compare by repr instead
         return [tuple(map(repr, r)) for r in rows_]
 
-    assert _norm(_rows(ops.exact_percentiles(df))) == _norm(
-        _rows(ops.exact_percentiles(df, scalable=False))
-    )
+    with channel_global():
+        want = _rows(ops.exact_percentiles(df))
+    assert _norm(_rows(ops.exact_percentiles(df))) == _norm(want)
 
 
 def test_exact_percentiles_bucket_adaptive_on_narrow_range(spark):
@@ -275,20 +283,49 @@ def test_exact_percentiles_bucket_adaptive_on_narrow_range(spark):
     df = spark.createDataFrame(
         rows, "event_id long, event_type string, value double"
     )
-    assert _rows(ops.exact_percentiles(df)) == _rows(
-        ops.exact_percentiles(df, scalable=False)
-    )
+    with channel_global():
+        want = _rows(ops.exact_percentiles(df))
+    assert _rows(ops.exact_percentiles(df)) == want
     from etsd_time_series_database_spark.functions.exprs import (
         double_sortable_bits,
     )
 
     n_buckets = (
         df.select(
-            F.shiftright(double_sortable_bits(F.col("value")), 52 - 4).alias(
-                "vb"
-            )
+            F.shiftright(
+                double_sortable_bits(F.col("value")), 52 - ops.VALUE_BUCKET_BITS
+            ).alias("vb")
         )
         .distinct()
         .count()
     )
     assert n_buckets > 16, n_buckets
+
+
+def test_value_ranks_match_row_number_on_signed_zeros(spark):
+    """q33's rank helper on channels mixing -0.0, 0.0 and other values.
+    The rank sort treats -0.0 == 0.0 and breaks the tie by seq, so the
+    stitched ranks must equal the channel-global row_number row for
+    row. Bucketing on the raw bits image put -0.0 one bucket below
+    +0.0 and ranked every -0.0 ahead of every 0.0."""
+    rows = [
+        (1, "a", 0.0), (2, "a", -0.0), (3, "a", 1.0), (4, "a", -1.0),
+        (5, "a", -0.0), (6, "a", 0.0), (7, "b", 0.0), (8, "b", -0.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, event_type string, value double"
+    )
+
+    def ranks():
+        ranked, counts = ops._value_ranks(df, "event_type", "value", "event_id")
+        # repr tells -0.0 from 0.0, which tuple equality does not
+        return (
+            sorted((r[0], repr(r[1]), r[2]) for r in ranked.collect()),
+            _rows(counts),
+        )
+
+    got = ranks()
+    with channel_global():
+        want = ranks()
+    assert got == want
+    assert ("a", "0.0", 2) in want[0]  # seq 1's 0.0 before seq 2's -0.0
