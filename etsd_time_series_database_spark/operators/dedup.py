@@ -619,7 +619,7 @@ def minhash_index_compact(
     the band table at ``files_per_band`` files per partition
     (repartition on band, still partitionBy(band) so probes keep
     partition pruning), install the copy with
-    ``sources.store.swap_in_dir`` (as the survivors write does), and
+    ``sources.store.install_staged`` (as the survivors write does), and
     carry ``_meta`` over unchanged — signatures, recipe and probe
     results are byte-identical, only the file layout changes. Returns
     {files_before, files_after, rows}. Run it from the index's single
@@ -627,8 +627,7 @@ def minhash_index_compact(
     concurrent-writer protocol."""
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
-        staging_dir,
-        swap_in_dir,
+        install_staged,
     )
 
     fs, Path = _hadoop_fs(spark, path)
@@ -645,7 +644,6 @@ def minhash_index_compact(
 
     before = _count_files(Path(path))
     bands = spark.read.parquet(path)
-    tmp = staging_dir(path, "compact")
     if int(files_per_band) <= 1:
         compacted = bands.repartition(F.col("band"))
     else:
@@ -655,15 +653,18 @@ def minhash_index_compact(
             F.col("band"),
             F.pmod(F.xxhash64(F.col("sig")), F.lit(int(files_per_band))),
         )
-    compacted.write.mode("overwrite").partitionBy("band").parquet(tmp)
-    # carry the recipe table over unchanged
     meta = spark.read.parquet(path + "/_meta")
-    meta.coalesce(1).write.mode("overwrite").parquet(tmp + "/_meta")
-    # count the COMPACTED copy (not a second scan of the old index):
-    # the stat doubles as a readability check of the new files before
-    # anything destructive happens
-    rows = spark.read.parquet(tmp).count()
-    swap_in_dir(fs, Path, tmp, path, "minhash compact")
+
+    def write(tmp: str) -> int:
+        compacted.write.partitionBy("band").parquet(tmp)
+        # carry the recipe table over unchanged
+        meta.coalesce(1).write.parquet(tmp + "/_meta")
+        # count the COMPACTED copy (not a second scan of the old
+        # index): the stat doubles as a readability check of the new
+        # files before anything destructive happens
+        return spark.read.parquet(tmp).count()
+
+    rows = install_staged(spark, path, "compact", write)
     return {
         "files_before": before,
         "files_after": _count_files(Path(path)),
@@ -870,20 +871,18 @@ def incremental_dedup(
     )
     if survivors_path is not None:
         # persist survivors FIRST (staged, then installed by
-        # swap_in_dir — a torn write can never be mistaken for output,
-        # and a failed install raises with the previous survivors
-        # still in place and the index NOT appended), THEN append
-        # their signatures — the crash-safe ordering
+        # install_staged — a torn write can never be mistaken for
+        # output, and a failed write or install raises with the
+        # previous survivors still in place and the index NOT
+        # appended), THEN append their signatures — the crash-safe
+        # ordering
         from etsd_time_series_database_spark.sources.store import (
-            _hadoop_fs,
-            staging_dir,
-            swap_in_dir,
+            install_staged,
         )
 
-        fs, Path = _hadoop_fs(spark, survivors_path)
-        tmp = staging_dir(survivors_path, "survivors")
-        survivors.write.mode("overwrite").parquet(tmp)
-        swap_in_dir(fs, Path, tmp, survivors_path, "incremental_dedup")
+        install_staged(
+            spark, survivors_path, "survivors", survivors.write.parquet
+        )
         if do_append:
             # survivors' signatures = the shard band table minus
             # dropped ids minus ROWS the index already holds. The

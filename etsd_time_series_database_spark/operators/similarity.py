@@ -134,8 +134,12 @@ def _nearest_cell(scored: DataFrame, key: str, vec: str) -> DataFrame:
     KEY the vector is just hashed bytes and the only buffers are the
     argmax's (BIGINT value, DECIMAL ordering), both mutable ->
     HashAggregate. ``vec`` is functionally dependent on ``key`` (one
-    row per vector id), so the extra group column changes nothing
-    semantically."""
+    row per vector id), so the extra group column changes no result on
+    such input. Two edges follow from grouping on it: Spark normalizes
+    float group keys, so a returned ``vec`` carries 0.0 for -0.0 and
+    one canonical NaN for any NaN payload; and duplicate rows for a
+    key yield one output row per distinct ``(key, vec)``, not one per
+    key."""
     from etsd_time_series_database_spark.functions.exprs import (
         with_sortable_bits,
     )
@@ -818,8 +822,6 @@ def ivf_compact(
         for r in df.groupBy("cent_id").agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    # one staging root beside the cells; partitionBy splits it per cell
-    tmp = staging_dir(f"{path}/{fragmented[0]}", "ivfc")
     if int(files_per_cell) > 1:
         # explicit count: AQE coalesces a column-only repartition,
         # collapsing the per-cell fan-out salt
@@ -831,50 +833,52 @@ def ivf_compact(
         )
     else:
         staged = df.repartition(F.col("cent_id"))
-    (
-        staged.sortWithinPartitions("cent_id", key)
-        .write.mode("overwrite")
-        .partitionBy("cent_id")
-        .parquet(tmp)
-    )
-    # readability + per-cell row-conservation of the compacted copy
-    # BEFORE anything destructive happens: a lossy rewrite must not
-    # replace the only copy of a cell
-    new_counts = {
-        int(r["cent_id"]): r["n"]
-        for r in spark.read.parquet(tmp)
-        .groupBy("cent_id").agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    if new_counts != src_counts:
-        fs.delete(Path(tmp), True)
-        bad = sorted(
-            set(src_counts) ^ set(new_counts)
-            | {c for c in src_counts if new_counts.get(c) != src_counts[c]}
+    # one staging root beside the cells; partitionBy splits it per
+    # cell. It is deleted however the rest ends: a failed write, count
+    # or swap leaves the live cells old or new, never the root
+    tmp = staging_dir(f"{path}/{fragmented[0]}", "ivfc")
+    try:
+        (
+            staged.sortWithinPartitions("cent_id", key)
+            .write.partitionBy("cent_id")
+            .parquet(tmp)
         )
-        raise IOError(
-            f"ivf_compact: compacted copy disagrees with source on "
-            f"cell(s) {bad} — index left untouched"
-        )
-    for cell in fragmented:
-        cid = int(cell.split("=", 1)[1])
-        if cid not in src_counts:
-            # only empty files: nothing staged for this cell — leave it
+        # readability + per-cell row-conservation of the compacted copy
+        # BEFORE anything destructive happens: a lossy rewrite must not
+        # replace the only copy of a cell
+        new_counts = {
+            int(r["cent_id"]): r["n"]
+            for r in spark.read.parquet(tmp)
+            .groupBy("cent_id").agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        if new_counts != src_counts:
+            bad = sorted(
+                set(src_counts) ^ set(new_counts)
+                | {c for c in src_counts
+                   if new_counts.get(c) != src_counts[c]}
+            )
+            raise IOError(
+                f"ivf_compact: compacted copy disagrees with source on "
+                f"cell(s) {bad} — index left untouched"
+            )
+        for cell in fragmented:
+            cid = int(cell.split("=", 1)[1])
+            if cid in src_counts:
+                stats["rows"] += src_counts[cid]
+                swap_in_dir(
+                    fs, Path, f"{tmp}/{cell}", f"{path}/{cell}",
+                    "ivf_compact",
+                )
+                stats["cells_compacted"] += 1
+            # else only empty files: nothing staged for this cell
             stats["files_after"] += sum(
                 1
                 for f in fs.listStatus(Path(f"{path}/{cell}"))
                 if f.getPath().getName().endswith(".parquet")
             )
-            continue
-        stats["rows"] += src_counts.get(cid, 0)
-        swap_in_dir(fs, Path, f"{tmp}/{cell}", f"{path}/{cell}", "ivf_compact")
-        stats["cells_compacted"] += 1
-        stats["files_after"] += sum(
-            1
-            for f in fs.listStatus(Path(f"{path}/{cell}"))
-            if f.getPath().getName().endswith(".parquet")
-        )
-    fs.delete(Path(tmp), True)
+    finally:
+        fs.delete(Path(tmp), True)
     return stats
 
 
@@ -921,8 +925,8 @@ def rebalance_cells(
        dirs via the :func:`ivf_append` path (O(retired rows)), then
        the empty dirs are removed.
     5. ``_centroids`` is rewritten (split + retired ids out, sub-ids
-       in) through a temp + rename swap, so probers re-plan against
-       the new geometry atomically.
+       in) through ``sources.store.install_staged``, so probers
+       re-plan against the new geometry atomically.
 
     Cost: O(hot + retired cells' data); the corpus is never reshuffled
     and untouched dirs are never rewritten (byte-identical — pinned in
@@ -936,8 +940,8 @@ def rebalance_cells(
     """
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
+        install_staged,
         staging_dir,
-        swap_in_dir,
     )
 
     fs, Path = _hadoop_fs(spark, path)
@@ -996,35 +1000,32 @@ def rebalance_cells(
         assigned = assign_cells(cell, [], key, vec, _centroids=refined)
         cell_dir = f"{path}/cent_id={h}"
         tmp = staging_dir(cell_dir, "rebal")
-        assigned.repartition(F.col("cent_id")).write.mode(
-            "overwrite"
-        ).partitionBy("cent_id").parquet(tmp)
-        sub_parts = [
-            st.getPath().getName()
-            for st in fs.listStatus(Path(tmp))
-            if st.getPath().getName().startswith("cent_id=")
-        ]
-        old_dir = Path(cell_dir)
-        old = Path(staging_dir(cell_dir, "old"))
-        if not fs.rename(old_dir, old):
-            fs.delete(Path(tmp), True)
-            raise IOError(f"rebalance: failed to move cent_id={h} aside")
-        installed = []
-        ok = True
-        for sp in sub_parts:
-            if fs.rename(Path(f"{tmp}/{sp}"), Path(f"{path}/{sp}")):
+        try:
+            assigned.repartition(F.col("cent_id")).write.partitionBy(
+                "cent_id"
+            ).parquet(tmp)
+            sub_parts = [
+                st.getPath().getName()
+                for st in fs.listStatus(Path(tmp))
+                if st.getPath().getName().startswith("cent_id=")
+            ]
+            old_dir = Path(cell_dir)
+            old = Path(staging_dir(cell_dir, "old"))
+            if not fs.rename(old_dir, old):
+                raise IOError(f"rebalance: failed to move cent_id={h} aside")
+            installed = []
+            for sp in sub_parts:
+                if not fs.rename(Path(f"{tmp}/{sp}"), Path(f"{path}/{sp}")):
+                    for done in installed:  # roll back: old cell returns whole
+                        fs.delete(Path(f"{path}/{done}"), True)
+                    fs.rename(old, old_dir)
+                    raise IOError(
+                        f"rebalance: failed to install split of cell {h}"
+                    )
                 installed.append(sp)
-            else:
-                ok = False
-                break
-        if not ok:
-            for sp in installed:  # roll back: old cell returns whole
-                fs.delete(Path(f"{path}/{sp}"), True)
-            fs.rename(old, old_dir)
+            fs.delete(old, True)
+        finally:
             fs.delete(Path(tmp), True)
-            raise IOError(f"rebalance: failed to install split of cell {h}")
-        fs.delete(old, True)
-        fs.delete(Path(tmp), True)
     # surviving centroid table: drop split + retired, add sub-cells
     gone = set(hot) | set(empty)
     survivors = [
@@ -1050,10 +1051,9 @@ def rebalance_cells(
             ).partitionBy("cent_id").parquet(path)
             stats["reassigned"] += n
         fs.delete(e_dir, True)
-    cdir = f"{path}/_centroids"
-    ctmp = staging_dir(cdir, "cent")
-    cent_df.coalesce(1).write.mode("overwrite").parquet(ctmp)
-    swap_in_dir(fs, Path, ctmp, cdir, "rebalance _centroids")
+    install_staged(
+        spark, f"{path}/_centroids", "cent", cent_df.coalesce(1).write.parquet
+    )
     # the sidecar tracks the geometry the rebalance just changed:
     # nlist follows the surviving centroid set (dim/metric/columns
     # are invariants of the layout)

@@ -2764,24 +2764,28 @@ def materialize_tier_ladder(
     each tier so a bounded fetch prunes at parquet row-group level. The
     root carries a ``_ladder_meta.json`` sidecar ({tiers_s, channel}),
     the routing metadata read before any parquet is listed. The table
-    is staged and swapped in (:func:`sources.store.install_rebuild`), so
+    is staged and swapped in (:func:`sources.store.install_staged`), so
     a failed rebuild leaves the previous ladder readable. Returns
     {tier_s: n_buckets}.
     """
     from etsd_time_series_database_spark.sources.store import (
-        install_rebuild,
+        install_staged,
+        write_meta_sidecar,
     )
 
     spark = df.sparkSession
     ladder = _rra_cascade(df, tiers_s, [channel], ts, value, count_all=False)
-    install_rebuild(
-        spark, path, "ladder",
-        ladder.repartition("tier_s")
-        .sortWithinPartitions(channel, "bucket_us")
-        .write.partitionBy("tier_s").parquet,
-        "_ladder_meta.json",
-        {"tiers_s": [int(t) for t in tiers_s], "channel": channel},
-    )
+
+    def write(tmp: str) -> None:
+        ladder.repartition("tier_s").sortWithinPartitions(
+            channel, "bucket_us"
+        ).write.partitionBy("tier_s").parquet(tmp)
+        write_meta_sidecar(
+            spark, tmp, "_ladder_meta.json",
+            {"tiers_s": [int(t) for t in tiers_s], "channel": channel},
+        )
+
+    install_staged(spark, path, "ladder", write)
     return {
         int(r.tier_s): r.n
         for r in spark.read.parquet(path)

@@ -21,7 +21,7 @@ import posixpath
 import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
-from typing import NamedTuple
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -266,7 +266,7 @@ def compact_partition(
 ) -> int:
     """Compact one date partition: rewrite its many small files (the
     residue of frequent streaming micro-batch commits) into
-    ``target_files`` sorted files, installed with :func:`swap_in_dir`.
+    ``target_files`` sorted files, installed with :func:`install_staged`.
     Returns the number of files before compaction.
 
     Only safe on partitions no longer receiving appends (i.e. past the
@@ -281,14 +281,12 @@ def compact_partition(
         if st.getPath().getName().endswith(".parquet")
     ]
     df = spark.read.parquet(part_dir)
-    tmp = staging_dir(part_dir, "compact")
-    (
+    install_staged(
+        spark, part_dir, "compact",
         df.repartition(target_files)
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
-        .write.mode("overwrite")
-        .parquet(tmp)
+        .write.parquet,
     )
-    swap_in_dir(fs, Path, tmp, part_dir, "compact")
     return len(files_before)
 
 
@@ -339,7 +337,7 @@ def amend_events(
     parquet the equivalent is a partition-scoped rewrite: per affected
     day, current rows anti-join the correction keys, union the day's
     corrections, and the merged partition installs through
-    :func:`swap_in_dir`.
+    :func:`install_staged`.
 
     A correction whose ``ts`` moves a row ACROSS days is two physical
     operations (delete old-day row + insert new-day row); ``cross_day``
@@ -456,17 +454,17 @@ def amend_events(
                 continue
         else:
             merged = day_corr
-        tmp = staging_dir(part_dir, "amend")
-        (
-            merged.repartition(int(target_files))
-            .sortWithinPartitions(
-                *[c for c in sort_cols if c in merged.columns]
-            )
-            .write.mode("overwrite")
-            .parquet(tmp)
+        merged = merged.repartition(int(target_files)).sortWithinPartitions(
+            *[c for c in sort_cols if c in merged.columns]
         )
-        swap_in_dir(fs, Path, tmp, part_dir, "amend")
-        stats["partitions"][part] = spark.read.parquet(part_dir).count()
+
+        def write(tmp: str) -> int:
+            merged.write.parquet(tmp)
+            return spark.read.parquet(tmp).count()
+
+        stats["partitions"][part] = install_staged(
+            spark, part_dir, "amend", write
+        )
     # key-level accounting: each moved key contributes one removal (old
     # day) and one insertion (new day) but is neither a replace nor a
     # net insert; everything else removed was replaced in place
@@ -489,7 +487,7 @@ def sync_partition(
     The partition's parquet files are copied BYTE-IDENTICALLY through
     the Hadoop FileSystem API (no decode/re-encode — works across
     file:/hdfs:/s3a: and guarantees the re-digest converges), staged
-    into a temp dir and installed with :func:`swap_in_dir`. A
+    into a temp dir and installed with :func:`install_staged`. A
     partition absent from the source is DELETED from the target
     (drift-by-extra-data).
     Returns 'synced' | 'deleted' | 'noop' (absent on both sides).
@@ -507,24 +505,21 @@ def sync_partition(
             fs_dst.delete(Path(dst), True)
             return "deleted"
         return "noop"
-    tmp_s = staging_dir(dst, "sync")
-    tmp = Path(tmp_s)
-    fs_dst.mkdirs(tmp)
-    jvm = spark._jvm
+    copy = spark._jvm.org.apache.hadoop.fs.FileUtil.copy
     conf = spark._jsc.hadoopConfiguration()
-    for st in fs_src.listStatus(src_dir):
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS / CRC side files regenerate
-        ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs_src, st.getPath(), fs_dst, Path(f"{tmp_s}/{name}"),
-            False, conf,
-        )
-        if not ok:
-            fs_dst.delete(tmp, True)
-            raise IOError(f"sync: copy of {name} failed; "
-                          f"target partition {partition} untouched")
-    swap_in_dir(fs_dst, Path, tmp_s, dst, "sync")
+
+    def write(tmp: str) -> None:
+        fs_dst.mkdirs(Path(tmp))
+        for st in fs_src.listStatus(src_dir):
+            name = st.getPath().getName()
+            if name.startswith("_") or name.startswith("."):
+                continue  # _SUCCESS / CRC side files regenerate
+            if not copy(fs_src, st.getPath(), fs_dst, Path(f"{tmp}/{name}"),
+                        False, conf):
+                raise IOError(f"sync: copy of {name} failed; "
+                              f"target partition {partition} untouched")
+
+    install_staged(spark, dst, "sync", write)
     return "synced"
 
 
@@ -644,7 +639,7 @@ def refresh_derived_tier(
     :func:`check_derived_tier` first.
 
     A full rebuild writes the tier partitioned by bucket day, stamps
-    the sidecar, installs both with :func:`install_rebuild` and reads
+    the sidecar, installs both with :func:`install_staged` and reads
     the result back for its per-day counts. With ``target_files > 1``
     each day fans out over up to that many write tasks through a
     deterministic (channel, bucket)-hash salt — not
@@ -654,13 +649,16 @@ def refresh_derived_tier(
     task per day, undoing the salt.
 
     A day refresh recomputes each named day from ``day_scoped(source,
-    day)`` (partition-pruned) into ``target_files`` files and installs
-    it with :func:`install_partition`; untouched days are never
-    listed, read or rewritten, and a day whose source vanished drops
-    its partition. Both paths run the same ``derive``, so a refreshed
-    day is bit-identical to a full rebuild of it. ``project(fresh,
-    tier_columns)``, when given, maps each fresh day onto an existing
-    tier's columns. Returns {day: rows}."""
+    day)`` (partition-pruned) into ``target_files`` files, counts the
+    staged copy and installs it with :func:`install_staged`; untouched
+    days are never listed, read or rewritten. A day whose source
+    vanished (0 staged rows, e.g. drained by a cross-day amend) drops
+    its partition after the install; a crash between the two leaves an
+    empty day, which the next refresh of that day drops again. Both
+    paths run the same ``derive``, so a refreshed day is bit-identical
+    to a full rebuild of it. ``project(fresh, tier_columns)``, when
+    given, maps each fresh day onto an existing tier's columns.
+    Returns {day: rows}."""
     adopt = check_derived_tier(spark, tier, path, meta, rebuild=days is None)
     bucket = tier.bucket_col
     if days is None:
@@ -682,21 +680,21 @@ def refresh_derived_tier(
             )
         else:
             full = full.repartition("dt")
-        install_rebuild(
-            spark, path, tier.name,
-            full.sortWithinPartitions(channel, bucket)
-            .write.partitionBy("dt").parquet,
-            tier.sidecar, meta,
-        )
+        full = full.sortWithinPartitions(channel, bucket)
+
+        def rebuild(tmp: str) -> None:
+            full.write.partitionBy("dt").parquet(tmp)
+            write_meta_sidecar(spark, tmp, tier.sidecar, meta)
+
+        install_staged(spark, path, tier.name, rebuild)
         out = spark.read.parquet(path).groupBy("dt").count()
         return {r.dt.isoformat(): r["count"] for r in out.collect()}
     if adopt:
         write_meta_sidecar(spark, path, tier.sidecar, meta)
+    fs, Path = _hadoop_fs(spark, path)
     tier_cols = None
-    if project is not None:
-        fs, Path = _hadoop_fs(spark, path)
-        if fs.exists(Path(path)):
-            tier_cols = spark.read.parquet(path).columns
+    if project is not None and fs.exists(Path(path)):
+        tier_cols = spark.read.parquet(path).columns
     stats: dict = {}
     for d in sorted(days):
         fresh = (
@@ -706,7 +704,15 @@ def refresh_derived_tier(
         )
         if tier_cols is not None:
             fresh = project(fresh, tier_cols)
-        stats[d] = install_partition(fresh, f"{path}/dt={d}", tier.name)
+
+        def write(tmp: str) -> int:
+            fresh.write.parquet(tmp)
+            return spark.read.parquet(tmp).count()
+
+        part_dir = f"{path}/dt={d}"
+        stats[d] = install_staged(spark, part_dir, tier.name, write)
+        if stats[d] == 0:
+            fs.delete(Path(part_dir), True)
     return stats
 
 
@@ -773,11 +779,8 @@ def staging_dir(dst: str, kind: str) -> str:
 
 def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
     """The crash-safe directory swap every single-dir maintenance verb
-    shares (compact, ingest compact, amend, sync, the day-scoped tier
-    refreshes via :func:`install_partition`, the whole-tier rebuilds via
-    :func:`install_rebuild`, minhash-index compact,
-    incremental-dedup survivors, ivf-compact, the rebalance
-    ``_centroids`` rewrite): the new data is FULLY written at ``tmp``
+    shares (see :func:`install_staged`; ivf-compact swaps each cell
+    with it): the new data is FULLY written at ``tmp``
     (a :func:`staging_dir`) before anything destructive happens;
     ``dst`` (if present) moves aside to a ``__old_*`` sibling, ``tmp``
     renames in, the old copy is deleted last. Hadoop rename signals
@@ -804,57 +807,28 @@ def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
         fs.delete(Path(old), True)
 
 
-def install_rebuild(
-    spark: SparkSession,
-    path: str,
-    kind: str,
-    write: Callable[[str], None],
-    sidecar: str,
-    meta: dict,
-) -> None:
-    """Replace the whole derived table at ``path``: ``write(tmp)``
-    fills a :func:`staging_dir`, the ``sidecar`` recording ``meta`` is
-    stamped there, and :func:`swap_in_dir` installs the copy. A write
-    or stamp that fails deletes the staging copy and leaves the live
-    table and its sidecar as they were (an overwrite onto the live path
-    would leave an empty directory). The full-rebuild tail of
-    :func:`refresh_derived_tier` and
-    :func:`operators.trends.materialize_tier_ladder`."""
-    fs, Path = _hadoop_fs(spark, path)
-    tmp = staging_dir(path, kind)
+def install_staged(
+    spark: SparkSession, dst: str, kind: str, write: Callable[[str], Any]
+) -> Any:
+    """Replace the directory ``dst`` with what ``write(tmp)`` puts at
+    a fresh :func:`staging_dir` of ``kind``, installed with
+    :func:`swap_in_dir`; returns what ``write`` returns (e.g. a count
+    of the staged copy, read back before anything destructive). A
+    ``write`` that raises deletes the staging copy and leaves ``dst``
+    as it was — an overwrite onto the live path would leave an empty
+    directory. Every single-directory rewrite goes through here:
+    compact, ingest compact, amend, sync, the derived-tier rebuilds
+    and day refreshes, the tier ladder, minhash-index compact, the
+    incremental-dedup survivors and the rebalance ``_centroids``."""
+    fs, Path = _hadoop_fs(spark, dst)
+    tmp = staging_dir(dst, kind)
     try:
-        write(tmp)
-        write_meta_sidecar(spark, tmp, sidecar, meta)
+        out = write(tmp)
     except Exception:
         fs.delete(Path(tmp), True)
         raise
-    swap_in_dir(fs, Path, tmp, path, f"{kind} rebuild")
-
-
-def install_partition(fresh: DataFrame, part_dir: str, kind: str) -> int:
-    """Stage ``fresh`` beside ``part_dir``, count the staged copy (a
-    readability check before anything destructive) and install it
-    with :func:`swap_in_dir` — or, when it holds no rows, drop
-    ``part_dir`` rather than install an empty partition (its source
-    day vanished, e.g. drained by a cross-day amend). The tail of a
-    :func:`refresh_derived_tier` day refresh. A write or count that
-    fails deletes the staging copy, as in :func:`install_rebuild`.
-    Returns the row count."""
-    spark = fresh.sparkSession
-    fs, Path = _hadoop_fs(spark, part_dir)
-    tmp = staging_dir(part_dir, kind)
-    try:
-        fresh.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
-    except Exception:
-        fs.delete(Path(tmp), True)
-        raise
-    if n == 0:
-        fs.delete(Path(tmp), True)
-        fs.delete(Path(part_dir), True)
-        return 0
-    swap_in_dir(fs, Path, tmp, part_dir, f"{kind} refresh")
-    return n
+    swap_in_dir(fs, Path, tmp, dst, kind)
+    return out
 
 
 def day_scoped(df: DataFrame, day: str) -> DataFrame:

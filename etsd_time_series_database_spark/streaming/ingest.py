@@ -439,7 +439,7 @@ def compact_ingest_partition(
     directory depth stays uniform for Spark's partition discovery and
     :func:`read_ingest_table` keeps dropping the column.
 
-    Installed with ``sources.store.swap_in_dir``, like
+    Installed with ``sources.store.install_staged``, like
     ``sources.store.compact_partition``, and under the same contract:
     only for partitions past the ingest watermark — a
     micro-batch RETRY of a merged epoch would re-create its
@@ -450,8 +450,7 @@ def compact_ingest_partition(
     """
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
-        staging_dir,
-        swap_in_dir,
+        install_staged,
     )
 
     fs, Path = _hadoop_fs(spark, path)
@@ -470,17 +469,17 @@ def compact_ingest_partition(
 
     files_before = _count_files(part_dir)
     df = spark.read.parquet(part_dir).drop("__epoch")
-    tmp = staging_dir(part_dir, "compact")
-    (
+    compacted = (
         df.repartition(int(target_files))
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
         .withColumn("__epoch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(tmp)
     )
-    rows = spark.read.parquet(tmp).count()
-    swap_in_dir(fs, Path, tmp, part_dir, "ingest compact")
+
+    def write(tmp: str) -> int:
+        compacted.write.partitionBy("__epoch").parquet(tmp)
+        return spark.read.parquet(tmp).count()
+
+    rows = install_staged(spark, part_dir, "compact", write)
     return {
         "files_before": files_before,
         "files_after": _count_files(part_dir),
@@ -531,7 +530,10 @@ def compact_stream_sink(
     import json as _json
     import uuid
 
-    from etsd_time_series_database_spark.sources.store import _hadoop_fs
+    from etsd_time_series_database_spark.sources.store import (
+        _hadoop_fs,
+        staging_dir,
+    )
 
     fs, Path = _hadoop_fs(spark, path)
     md = f"{path}/_spark_metadata"
@@ -541,7 +543,8 @@ def compact_stream_sink(
             "sink (use sources.store.compact_partition for batch "
             "tables)"
         )
-    manifest_p = Path(f"{md}/.compact_manifest")
+    manifest = f"{md}/.compact_manifest"
+    manifest_p = Path(manifest)
 
     def _write_file(target: str, content: str) -> None:
         # temp + rename; fs.create regenerates the .crc side file
@@ -617,45 +620,44 @@ def compact_stream_sink(
             if e.get("action") == "add":
                 live.append(e["path"])
 
-    stage = f"{path.rstrip('/')}.__compact__"
+    stage = staging_dir(path, "compact")
     df = spark.read.parquet(path)
-    (
-        df.repartition(int(target_files))
-        .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    # readability check of the compacted copy before anything destructive
-    rows = spark.read.parquet(stage).count()
     new_entries = []
-    for st in fs.listStatus(Path(stage)):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        dst = Path(f"{path}/{name}")
-        if not fs.rename(st.getPath(), dst):
-            raise IOError(f"sink compact: staging rename of {name} failed")
-        dst_st = fs.getFileStatus(dst)
-        new_entries.append(
-            {
-                "path": dst_st.getPath().toString(),
-                "size": int(dst_st.getLen()),
-                "modificationTime": int(dst_st.getModificationTime()),
-            }
+    try:
+        (
+            df.repartition(int(target_files))
+            .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
+            .write.parquet(stage)
         )
-    fs.delete(Path(stage), True)
+        # readability check of the compacted copy before anything
+        # destructive
+        rows = spark.read.parquet(stage).count()
+        for st in fs.listStatus(Path(stage)):
+            name = st.getPath().getName()
+            if not name.endswith(".parquet"):
+                continue
+            dst = Path(f"{path}/{name}")
+            if not fs.rename(st.getPath(), dst):
+                raise IOError(
+                    f"sink compact: staging rename of {name} failed"
+                )
+            dst_st = fs.getFileStatus(dst)
+            new_entries.append(
+                {
+                    "path": dst_st.getPath().toString(),
+                    "size": int(dst_st.getLen()),
+                    "modificationTime": int(dst_st.getModificationTime()),
+                }
+            )
+    finally:
+        fs.delete(Path(stage), True)
     plan = {
         "earlier": log_files[:-1],
         "latest": log_files[-1],
         "new": new_entries,
         "old": live,
     }
-    tmp_manifest = Path(f"{md}/.tmp_manifest_{uuid.uuid4().hex}")
-    out = fs.create(tmp_manifest, True)
-    out.write(bytearray(_json.dumps(plan).encode()))
-    out.close()
-    if not fs.rename(tmp_manifest, manifest_p):
-        raise IOError("sink compact: manifest rename failed")
+    _write_file(manifest, _json.dumps(plan))
     if _fail_after_manifest:  # test hook: simulate a crash mid-swap
         raise RuntimeError("simulated crash after manifest commit")
     _finish(plan)

@@ -4,9 +4,11 @@ under injected failures.
 Hadoop rename signals most failures by returning FALSE, not raising.
 The fake-FileSystem tests drive the swap against an in-memory
 FileSystem whose ``rename`` returns False at a chosen step, so each
-rollback branch is pinned without Spark. The last one injects the same
-failure under a real verb: a failed survivors install in
-``incremental_dedup`` must leave the previous survivors in place.
+rollback branch is pinned without Spark. The Spark tests inject
+failures under real verbs: a failed survivors install in
+``incremental_dedup`` must leave the previous survivors in place, and a
+staged write that raises (an unavailable parquet codec) must leave
+every verb's live data and directory listing as they were.
 """
 
 from __future__ import annotations
@@ -166,8 +168,8 @@ def test_incremental_dedup_failed_install_keeps_previous_survivors(
 
 def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
     """A whole-tier rebuild (``refresh_derived_tier(days=None)``,
-    ``materialize_tier_ladder``) and a day refresh
-    (``install_partition``) stage their copy and swap it in: a write
+    ``materialize_tier_ladder``) and a day refresh stage their copy
+    and swap it in: a write
     whose tasks fail leaves the previous tier and its sidecar readable
     and no staging dir behind, beside the tier or inside it. The
     failure is an unavailable parquet codec, which raises in the write
@@ -220,3 +222,242 @@ def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
         ) == before[p], p
     for root in (tmp_path, tmp_path / "digest"):
         assert not [q for q in root.iterdir() if q.name.startswith("__")]
+
+
+def test_staged_copy_reads_back_its_rows(spark, tmp_path):
+    """Day refreshes and compactions count their staged copy by
+    reading its ``__{kind}_*`` root. Spark hides underscore entries
+    when it lists a table and logs "All paths were ignored" for such a
+    root, yet returns its rows; a day refresh drops the live day when
+    that count is 0, so the read-back is pinned here."""
+    tmp = staging_dir(str(tmp_path / "tbl" / "dt=2026-01-01"), "digest")
+    spark.range(37).write.parquet(tmp)
+    assert spark.read.parquet(tmp).count() == 37
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _events_store(spark, path):
+    """Three one-row appends into one ``dt=`` partition."""
+    import pyspark.sql.functions as F
+
+    for i in range(3):
+        store.create_events_table(
+            spark.createDataFrame(
+                [(f"2026-01-01 00:00:{i:02d}", "a", float(i), i)],
+                "ts string, event_type string, value double, "
+                "event_id bigint",
+            ).withColumn("ts", F.to_timestamp("ts")),
+            path, mode="append",
+        )
+    return lambda: _sorted_rows(store.read_events_table(spark, path))
+
+
+def _compact_partition(spark, root):
+    read = _events_store(spark, str(root))
+    return (
+        lambda: store.compact_partition(spark, str(root), "dt=2026-01-01"),
+        read,
+    )
+
+
+def _amend_events(spark, root):
+    import pyspark.sql.functions as F
+
+    read = _events_store(spark, str(root))
+    fix = spark.createDataFrame(
+        [("2026-01-01 00:00:01", "a", 99.0, 1)],
+        "ts string, event_type string, value double, event_id bigint",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    return lambda: store.amend_events(spark, str(root), fix), read
+
+
+def _compact_ingest_partition(spark, root):
+    import pyspark.sql.functions as F
+
+    from etsd_time_series_database_spark.streaming.ingest import (
+        compact_ingest_partition,
+        read_ingest_table,
+        write_ingest_epoch,
+    )
+
+    for i in range(3):
+        write_ingest_epoch(
+            spark.createDataFrame(
+                [(f"2026-01-01 00:{i:02d}:00", "s", "a", float(i), 0)],
+                "ts string, source string, channel string, value double, "
+                "status int",
+            ).withColumn("ts", F.to_timestamp("ts")),
+            i, str(root),
+        )
+    return (
+        lambda: compact_ingest_partition(spark, str(root), "dt=2026-01-01"),
+        lambda: _sorted_rows(read_ingest_table(spark, str(root))),
+    )
+
+
+def _minhash_index(spark, root):
+    from etsd_time_series_database_spark.operators.dedup import (
+        write_minhash_index,
+    )
+
+    docs = store.load_table(spark, SF_SMOKE, "documents")
+    write_minhash_index(docs, str(root), hash_mode="poly")
+    return docs
+
+
+def _minhash_index_compact(spark, root):
+    from etsd_time_series_database_spark.operators.dedup import (
+        minhash_index_compact,
+    )
+
+    _minhash_index(spark, root)
+    return (
+        lambda: minhash_index_compact(spark, str(root)),
+        lambda: (
+            _sorted_rows(spark.read.parquet(str(root))),
+            _sorted_rows(spark.read.parquet(f"{root}/_meta")),
+        ),
+    )
+
+
+def _incremental_dedup(spark, root):
+    from etsd_time_series_database_spark.operators.dedup import (
+        incremental_dedup,
+    )
+
+    index = str(root.parent / "mh")
+    docs = _minhash_index(spark, index)
+    incremental_dedup(docs, index, survivors_path=str(root),
+                      append_survivors=False)
+    return (
+        lambda: incremental_dedup(docs, index, survivors_path=str(root)),
+        lambda: (
+            _sorted_rows(spark.read.parquet(str(root))),
+            spark.read.parquet(index).count(),
+        ),
+    )
+
+
+def _ivf_index(spark, root):
+    """A hot 100-vector cell, a 20-vector one, and cell 0 fragmented
+    by two appends."""
+    from etsd_time_series_database_spark.operators.similarity import (
+        ivf_append,
+        read_centroids,
+        write_ivf_partitioned,
+    )
+
+    schema = "vec_id int, embedding array<float>"
+    rows = [(i, [1.0, i * 0.009]) for i in range(100)] + [
+        (100 + j, [0.01 * j, 1.0]) for j in range(20)
+    ]
+    write_ivf_partitioned(
+        spark.createDataFrame(rows, schema), centroid_ids=[0, 100],
+        path=str(root),
+    )
+    for i in range(2):
+        ivf_append(
+            spark.createDataFrame([(200 + i, [1.0, 0.5])], schema),
+            str(root),
+        )
+    return lambda: (
+        _sorted_rows(spark.read.parquet(str(root))),
+        _sorted_rows(read_centroids(spark, str(root))),
+    )
+
+
+def _ivf_compact(spark, root):
+    from etsd_time_series_database_spark.operators.similarity import (
+        ivf_compact,
+    )
+
+    read = _ivf_index(spark, root)
+    return lambda: ivf_compact(spark, str(root), files_per_cell=1), read
+
+
+def _rebalance_split(spark, root):
+    from etsd_time_series_database_spark.operators.similarity import (
+        rebalance_cells,
+    )
+
+    read = _ivf_index(spark, root)
+    return lambda: rebalance_cells(spark, str(root), hot_threshold=50), read
+
+
+def _rebalance_centroids(spark, root):
+    from etsd_time_series_database_spark.operators.similarity import (
+        rebalance_cells,
+    )
+
+    # no hot and no empty cell: only _centroids is rewritten
+    read = _ivf_index(spark, root)
+    return (
+        lambda: rebalance_cells(spark, str(root), hot_threshold=10**6),
+        read,
+    )
+
+
+def _compact_stream_sink(spark, root):
+    from etsd_time_series_database_spark.streaming.ingest import (
+        compact_stream_sink,
+    )
+    from tests.test_streaming_ingest import _mk_feed, _mk_run
+
+    src = str(root.parent / "src")
+    for i in range(3):
+        _mk_feed(spark, src, i)
+    _mk_run(spark, src, str(root), str(root.parent / "ckpt"))
+    return (
+        lambda: compact_stream_sink(spark, str(root)),
+        lambda: _sorted_rows(spark.read.parquet(str(root))),
+    )
+
+
+@pytest.mark.parametrize(
+    "setup",
+    [
+        _compact_partition,
+        _amend_events,
+        _compact_ingest_partition,
+        _minhash_index_compact,
+        _incremental_dedup,
+        _rebalance_centroids,
+        _ivf_compact,
+        _rebalance_split,
+        _compact_stream_sink,
+    ],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_failed_staged_write_leaves_no_staging_dir(spark, tmp_path, setup):
+    """Every verb that stages a rewrite deletes its staging copy when
+    the staged write raises: the live data reads the same and neither
+    the table root nor its parent gains an entry. The failure is an
+    unavailable parquet codec, which raises in the write tasks; six
+    single-directory verbs and the three multi-directory installs
+    left their ``__{kind}_*`` (or ``.__compact__``) stage behind."""
+    from py4j.protocol import Py4JJavaError
+
+    root = tmp_path / "tbl"
+    run, read = setup(spark, root)
+
+    def listing():
+        return {
+            p: sorted(q.name for q in p.iterdir()) for p in (root, tmp_path)
+        }
+
+    before = read(), listing()
+    codec = "spark.sql.parquet.compression.codec"
+    spark.conf.set(codec, "lzo")
+    try:
+        with pytest.raises(Py4JJavaError, match="LzoCodec"):
+            run()
+    finally:
+        spark.conf.unset(codec)
+    assert (read(), listing()) == before
+    assert not [
+        q for p in (root, tmp_path) for q in p.iterdir()
+        if q.name.startswith("__")
+    ]

@@ -131,21 +131,11 @@ def test_ewma_carry_margin_any_bucket_layout(spark, samples, bucket_s):
     assert got == want
 
 
-@_few
-@given(
-    st.lists(
-        st.lists(
-            st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"]),
-            min_size=0,
-            max_size=20,
-        ),
-        min_size=1,
-        max_size=10,
-    ),
-    st.sampled_from([2, 4]),
+# a small example budget in the default gate, the full one under slow
+@pytest.mark.parametrize(
+    "n", [2, pytest.param(8, marks=pytest.mark.slow)], ids=["fast", "full"]
 )
-@pytest.mark.slow
-def test_segment_dedup_fingerprint_equals_raw(spark, docs, seg_tokens):
+def test_segment_dedup_fingerprint_equals_raw(spark, n):
     """The xxhash64-keyed segment-count path (the scale default) must
     be row-identical to the exact raw-string form for both the
     accounting (segment_dedup) and the rewrite (segment_rewrite) —
@@ -160,16 +150,32 @@ def test_segment_dedup_fingerprint_equals_raw(spark, docs, seg_tokens):
         ngram_novelty,
     )
 
-    rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for op in (exact_dedup, ngram_novelty):
-        fp = sorted(map(tuple, op(df, fingerprint=True).collect()))
-        raw = sorted(map(tuple, op(df, fingerprint=False).collect()))
-        assert fp == raw
-    for op in (segment_dedup, segment_rewrite):
-        fp = sorted(map(tuple, op(df, seg_tokens=seg_tokens, fingerprint=True).collect()))
-        raw = sorted(map(tuple, op(df, seg_tokens=seg_tokens, fingerprint=False).collect()))
-        assert fp == raw
+    @settings(max_examples=n, deadline=None)
+    @given(
+        st.lists(
+            st.lists(
+                st.sampled_from(["alpha", "beta", "gamma", "delta", "eps"]),
+                min_size=0,
+                max_size=20,
+            ),
+            min_size=1,
+            max_size=10,
+        ),
+        st.sampled_from([2, 4]),
+    )
+    def prop(docs, seg_tokens):
+        rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
+        df = spark.createDataFrame(rows, "doc_id bigint, text string")
+        for op in (exact_dedup, ngram_novelty):
+            fp = sorted(map(tuple, op(df, fingerprint=True).collect()))
+            raw = sorted(map(tuple, op(df, fingerprint=False).collect()))
+            assert fp == raw
+        for op in (segment_dedup, segment_rewrite):
+            fp = sorted(map(tuple, op(df, seg_tokens=seg_tokens, fingerprint=True).collect()))
+            raw = sorted(map(tuple, op(df, seg_tokens=seg_tokens, fingerprint=False).collect()))
+            assert fp == raw
+
+    prop()
 
 
 @_few

@@ -122,40 +122,79 @@ def _package_functions():
 
 def _calls_by_function(attr: str, receiver: str | None) -> dict[str, int]:
     """{top-level function: n} for calls ``<receiver>.<attr>(`` (any
-    receiver when None) anywhere in the package, nested defs counted
-    toward their enclosing top-level function."""
+    receiver, or a bare ``<attr>(``, when None) anywhere in the
+    package, nested defs counted toward their enclosing top-level
+    function."""
     import ast
 
     out: dict[str, int] = {}
     for top in _package_functions():
         for node in ast.walk(top):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
             if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == attr
+                isinstance(f, ast.Attribute)
+                and f.attr == attr
                 and (
                     receiver is None
-                    or isinstance(node.func.value, ast.Name)
-                    and node.func.value.id == receiver
+                    or isinstance(f.value, ast.Name) and f.value.id == receiver
                 )
+                or receiver is None
+                and isinstance(f, ast.Name)
+                and f.id == attr
             ):
                 out[top.name] = out.get(top.name, 0) + 1
     return out
 
 
+def _cleans_up_in_try() -> set[str]:
+    """Top-level functions holding a ``try`` whose ``except`` or
+    ``finally`` calls ``.delete(`` — a staging cleanup."""
+    import ast
+
+    return {
+        top.name
+        for top in _package_functions()
+        for t in ast.walk(top)
+        if isinstance(t, ast.Try)
+        and any(
+            isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "delete"
+            for part in [*t.handlers, *t.finalbody]
+            for c in ast.walk(part)
+        )
+    }
+
+
 def test_directory_swaps_go_through_swap_in_dir():
-    """Every single-directory install goes through
-    ``store.swap_in_dir`` and every FileSystem handle through
-    ``store._hadoop_fs``: an inline copy of the swap drifts (one
-    leaked its temp on a failed move-aside, one deleted the live dir
-    before its rename). The two multi-file protocols keep their own
-    renames: the stream sink's commit-log rewrite and the rebalance
-    one-to-many hot-cell install."""
+    """Every single-directory rewrite stages, cleans up and swaps
+    through ``store.install_staged``, and every FileSystem handle
+    comes from ``store._hadoop_fs``: hand copies of the stage drifted
+    (six of nine leaked their staging dir when the write failed). The
+    multi-directory installs keep their own staging root and its one
+    cleanup: ivf-compact's per-cell swap, the rebalance split and the
+    stream sink's commit-log rewrite, whose renames stay their own."""
+    multi = {"ivf_compact", "rebalance_cells", "compact_stream_sink"}
+    assert set(_calls_by_function("swap_in_dir", None)) == {
+        "install_staged", "ivf_compact"
+    }
+    assert set(_calls_by_function("staging_dir", None)) == multi | {
+        "install_staged", "swap_in_dir"
+    }
+    assert set(_calls_by_function("install_staged", None)) == {
+        "compact_partition", "amend_events", "sync_partition",
+        "refresh_derived_tier", "compact_ingest_partition",
+        "minhash_index_compact", "incremental_dedup", "rebalance_cells",
+        "materialize_tier_ladder",
+    }
+    assert _cleans_up_in_try() == multi | {"install_staged"}
     renames = _calls_by_function("rename", "fs")
     assert set(renames) <= {
         "swap_in_dir", "compact_stream_sink", "rebalance_cells"
     }, renames
-    assert sum(renames.values()) - renames["swap_in_dir"] == 6, renames
+    assert sum(renames.values()) - renames["swap_in_dir"] == 5, renames
     assert set(_calls_by_function("getFileSystem", None)) == {"_hadoop_fs"}
 
 
