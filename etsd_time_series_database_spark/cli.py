@@ -36,7 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etsd_time_series_database_spark.session import get_spark
-from etsd_time_series_database_spark.sources.store import epoch_ts
+from etsd_time_series_database_spark.sources.store import (
+    epoch_ts,
+    read_footer,
+    read_parquet,
+)
 from etsd_time_series_database_spark.timeparse import resolve_range
 
 _ops = importlib.import_module(
@@ -47,41 +51,64 @@ _ops = importlib.import_module(
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     # store.epoch_ts is session-timezone INDEPENDENT — cli.main accepts
     # external SparkSessions, whose confs this read leaves untouched
-    return epoch_ts(spark.read.parquet(path))
+    return epoch_ts(read_parquet(spark, path, read_footer(spark, path)))
+
+
+def _utc(t: datetime | None) -> datetime | None:
+    return t.replace(tzinfo=timezone.utc) if t else None
 
 
 def _bounds(df: DataFrame, ts: str = "ts") -> tuple[datetime, datetime]:
     row = df.select(F.min(ts).alias("lo"), F.max(ts).alias("hi")).collect()[0]
-    lo = row.lo.replace(tzinfo=timezone.utc) if row.lo else None
-    hi = row.hi.replace(tzinfo=timezone.utc) if row.hi else None
-    return lo, hi
+    return _utc(row.lo), _utc(row.hi)
 
 
-def resolve_channels(
-    df: DataFrame, patterns: list[str], channel_col: str = "event_type"
-) -> list[str]:
-    """Case-insensitive substring channel-name resolution — the
-    reference's etsdChanNum (code/etsdQuery.c:193-203), which matches
-    the first channel whose name contains the argument. Returns every
-    matching channel name; unknown patterns raise."""
-    names = [r[0] for r in df.select(channel_col).distinct().collect()]
-    out: list[str] = []
+def match_channels(names: list, patterns: list[str]) -> list:
+    """Case-insensitive substring channel-name resolution over the
+    stored ``names`` — the reference's etsdChanNum
+    (code/etsdQuery.c:193-203), which matches the first channel whose
+    name contains the argument. Returns every matching channel name;
+    unknown patterns raise."""
+    out: list = []
     for pat in patterns:
         hits = [n for n in names if pat.lower() in str(n).lower()]
         if not hits:
-            raise ValueError(f"no channel matches {pat!r} (have: {sorted(names)})")
+            raise ValueError(
+                f"no channel matches {pat!r} (have: {sorted(names, key=str)})"
+            )
         out.extend(h for h in hits if h not in out)
     return out
 
 
+def resolve_channels(
+    df: DataFrame,
+    patterns: list[str],
+    channel_col: str = "event_type",
+    names: list | None = None,
+) -> list:
+    """:func:`match_channels` over ``names`` (e.g. a file's
+    :func:`~sources.store.read_footer` names), or over the column's
+    ``distinct()`` values — one scan — when they are None."""
+    if names is None:
+        names = [r[0] for r in df.select(channel_col).distinct().collect()]
+    return match_channels(names, patterns)
+
+
 def cmd_query(args, spark: SparkSession) -> int:
-    df = _load_events(spark, args.path)
-    begin, _ = _bounds(df)
-    start, end = resolve_range(args.start, args.end, begin=begin)
+    # one footer open gives the schema and, when it can, the channel
+    # names; min(ts) is computed only when the range refers to begin
+    footer = read_footer(
+        spark, args.path, args.channel_col if args.channel else None
+    )
+    df = events = epoch_ts(read_parquet(spark, args.path, footer))
+    start, end = resolve_range(
+        args.start, args.end, begin=lambda: _bounds(events)[0]
+    )
     if args.channel:
+        names = footer.names if footer else None
         df = df.filter(
             F.col(args.channel_col).isin(
-                resolve_channels(df, args.channel, args.channel_col)
+                resolve_channels(df, args.channel, args.channel_col, names)
             )
         )
     stats = _ops.range_stats(
@@ -105,10 +132,13 @@ def cmd_examine(args, spark: SparkSession) -> int:
     df = _load_events(spark, args.path)
     print("schema:")
     df.printSchema()
-    lo, hi = _bounds(df)
-    n = df.count()
-    print(f"rows: {n}")
-    print(f"time range: {lo} .. {hi}")
+    row = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.min("ts").alias("lo"),
+        F.max("ts").alias("hi"),
+    ).collect()[0]
+    print(f"rows: {row.n}")
+    print(f"time range: {_utc(row.lo)} .. {_utc(row.hi)}")
     if args.channel_col in df.columns:
         print("channels:")
         df.groupBy(args.channel_col).agg(
@@ -133,8 +163,9 @@ def cmd_dump(args, spark: SparkSession) -> int:
         ).drop("payload", "batch_ts")
     else:
         df = _load_events(spark, args.path)
-    begin, _ = _bounds(df)
-    start, end = resolve_range(args.start, args.end, begin=begin)
+    start, end = resolve_range(
+        args.start, args.end, begin=lambda: _bounds(df)[0]
+    )
     out = df.filter(
         (F.col("ts") >= F.lit(start.replace(tzinfo=None)))
         & (F.col("ts") <= F.lit(end.replace(tzinfo=None)))

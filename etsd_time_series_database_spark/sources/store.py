@@ -16,15 +16,20 @@ thousands of files and pruned by Catalyst before any I/O happens.
 
 from __future__ import annotations
 
+import base64
+import json
 import os
 import posixpath
+import struct
 import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 from typing import Any, NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 TABLES = (
     "region",
@@ -104,6 +109,157 @@ def _ts_kind(df: DataFrame) -> str | None:
     )
 
 
+class Footer(NamedTuple):
+    """What one Parquet file's footer answers without a Spark job (see
+    :func:`read_footer`)."""
+
+    schema: StructType
+    names: list[str | None] | None
+
+
+def read_footer(
+    spark: SparkSession, path: str, channel_col: str | None = None
+) -> Footer | None:
+    """Read a single Parquet file's footer on the driver: the analog of
+    reading the ETSD header block (code/etsd.c:41-123), whose stored
+    channel names etsdChanNum matches against
+    (code/etsdQuery.c:193-203). None when ``path`` is not one file (a
+    directory store, a glob, a missing path): Spark's own inference and
+    errors apply there.
+
+    ``schema`` is Spark's own footer conversion
+    (``ParquetFileFormat.readSchemaFromFooter``) through a converter
+    built from the session's CURRENT SQLConf, so it is the schema
+    ``spark.read.parquet`` would infer under the same confs; nothing is
+    set here. ``names`` is ``channel_col``'s value set as
+    ``select(channel_col).distinct()`` returns it, read from each row
+    group's dictionary page (None added when a chunk counts NULLs); it
+    is None, meaning "scan for them", unless :func:`_dictionary_names`
+    can prove the pages hold exactly the stored values."""
+    fs, Path = _hadoop_fs(spark, path)
+    jpath = Path(path)
+    try:
+        status = fs.getFileStatus(jpath)
+    except Py4JJavaError as exc:
+        missing = "java.io.FileNotFoundException"
+        if exc.java_exception.getClass().getName() == missing:
+            return None
+        raise
+    if not status.isFile():
+        return None
+    jvm = spark._jvm
+    hadoop = jvm.org.apache.parquet.hadoop
+    spq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    reader = hadoop.ParquetFileReader.open(
+        hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        footer = reader.getFooter()
+        converter = spq.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()
+        )
+        jschema = spq.ParquetFileFormat.readSchemaFromFooter(
+            hadoop.Footer(jpath, footer), converter
+        )
+        # nullable, as a relation's inferred data schema is
+        schema = StructType.fromJson(json.loads(jschema.asNullable().json()))
+        names = (
+            None
+            if channel_col is None
+            else _dictionary_names(spark, reader, footer, schema, channel_col)
+        )
+        return Footer(schema, names)
+    finally:
+        reader.close()
+
+
+def _dictionary_names(spark, reader, footer, schema, col):
+    """``col``'s distinct values from its dictionary pages, or None
+    unless every condition that makes them exact holds: ``col`` is a
+    top-level StringType; every chunk has encoding stats with no
+    non-dictionary data page (a writer that fell back to PLAIN
+    mid-chunk stored values outside the dictionary) and a null count;
+    and the footer's ``ARROW:schema``, when present, does not declare
+    ``col`` dictionary-typed (Arrow writes a DictionaryArray's unused
+    entries into the page)."""
+    field = next((f for f in schema.fields if f.name == col), None)
+    if field is None or field.dataType != StringType():
+        return None
+    meta = footer.getFileMetaData()
+    arrow = meta.getKeyValueMetaData().get("ARROW:schema")
+    if arrow is not None and _arrow_declares_dictionary(arrow, col):
+        return None
+    jcol = spark.sparkContext._gateway.new_array(spark._jvm.java.lang.String, 1)
+    jcol[0] = col
+    pschema = meta.getSchema()
+    desc = pschema.getColumnDescription(jcol)
+    # a row group's column chunks follow the schema's leaf order
+    leaf = pschema.getColumns().indexOf(desc)
+    names: dict[str | None, None] = {}
+    blocks = footer.getBlocks()
+    for i in range(blocks.size()):
+        chunk = blocks.get(i).getColumns().get(leaf)
+        encodings, stats = chunk.getEncodingStats(), chunk.getStatistics()
+        if (
+            encodings is None
+            or encodings.hasNonDictionaryEncodedPages()
+            or stats is None
+            or not stats.isNumNullsSet()
+        ):
+            return None
+        page = reader.getDictionaryReader(i).readDictionaryPage(desc)
+        if page is None:
+            return None
+        try:
+            names.update(
+                dict.fromkeys(
+                    _plain_strings(
+                        bytes(page.getBytes().toByteArray()),
+                        page.getDictionarySize(),
+                    )
+                )
+            )
+        except UnicodeDecodeError:
+            return None
+        if stats.getNumNulls() > 0:
+            names[None] = None
+    return list(names)
+
+
+def _arrow_declares_dictionary(arrow_schema: str, col: str) -> bool:
+    """Whether a footer's base64 ``ARROW:schema`` declares ``col``
+    dictionary-typed (or cannot say: ``col`` is missing or repeated)."""
+    import pyarrow as pa
+
+    declared = pa.ipc.read_schema(pa.py_buffer(base64.b64decode(arrow_schema)))
+    i = declared.get_field_index(col)
+    return i < 0 or pa.types.is_dictionary(declared.field(i).type)
+
+
+def _plain_strings(raw: bytes, n: int) -> list[str]:
+    """Decode ``n`` PLAIN-encoded BYTE_ARRAY values (4-byte
+    little-endian length, then the bytes): a dictionary page's body."""
+    out, off = [], 0
+    for _ in range(n):
+        (size,) = struct.unpack_from("<i", raw, off)
+        out.append(raw[off + 4 : off + 4 + size].decode())
+        off += 4 + size
+    return out
+
+
+def read_parquet(
+    spark: SparkSession, path: str, footer: Footer | None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with ``footer``'s schema (the
+    :func:`read_footer` of ``path``) given up front: no
+    schema-inference job. A directory (``footer`` None) keeps Spark's
+    inference."""
+    reader = spark.read if footer is None else spark.read.schema(footer.schema)
+    return reader.parquet(path)
+
+
 def raw_ts_micros_divisor(spark: SparkSession, path: str) -> int:
     """Divisor that turns ``path``'s RAW int64 ts into epoch micros —
     the same :func:`_ts_kind` probe :func:`load_table` converts with,
@@ -111,7 +267,7 @@ def raw_ts_micros_divisor(spark: SparkSession, path: str) -> int:
     must declare an explicit int64 schema) cannot drift from it:
     nanos divide by 1000; naive micros pass through."""
     _ensure_ts_confs(spark)
-    kind = _ts_kind(spark.read.parquet(path))
+    kind = _ts_kind(read_parquet(spark, path, read_footer(spark, path)))
     if kind is None:
         raise ValueError(
             f"{path} has no 'ts' column — cannot derive a timestamp "
@@ -127,7 +283,9 @@ def load_table(
     ts_range: tuple[str | None, str | None] | None = None,
 ) -> DataFrame:
     """Load one testdata table. Schema comes from the Parquet footer
-    (the analog of reading the ETSD header block, code/etsd.c:41-123).
+    (the analog of reading the ETSD header block, code/etsd.c:41-123),
+    read on the driver by :func:`read_footer` for a single file: no
+    Spark job.
 
     Nanosecond parquet timestamps arrive as LongType (session conf
     ``spark.sql.legacy.parquet.nanosAsLong``) and are floor-truncated
@@ -147,7 +305,8 @@ def load_table(
     converted column; this prefilter is a superset.
     """
     _ensure_ts_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = read_parquet(spark, path, read_footer(spark, path))
     ts_kind = _ts_kind(df)
     raw_ns = ts_kind == "bigint"
     raw_ntz = ts_kind == "timestamp_ntz"
@@ -786,7 +945,8 @@ def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
     renames in, the old copy is deleted last. Hadoop rename signals
     most failures by returning FALSE, not raising, so every step
     before a destructive delete is checked: a failed move-aside
-    deletes only the temp; a failed install renames the old dir back.
+    deletes only the temp; a failed install renames the old dir back,
+    then deletes the temp.
     A crash leaves either the old dir or a rollback-able ``__old_*``
     — the target is never simply absent with no recovery copy, and
     never double-counted. Rename is atomic on HDFS but copy-based on
@@ -800,8 +960,10 @@ def swap_in_dir(fs, Path, tmp: str, dst: str, label: str) -> None:
         fs.delete(Path(tmp), True)
         raise IOError(f"{label}: failed to move {dst} aside")
     if not fs.rename(Path(tmp), Path(dst)):
-        if had_old:
-            fs.rename(Path(old), Path(dst))
+        # a failed rollback keeps tmp: with dst absent, old and tmp are
+        # the copies left to recover from
+        if not had_old or fs.rename(Path(old), Path(dst)):
+            fs.delete(Path(tmp), True)
         raise IOError(f"{label}: failed to install {dst}")
     if had_old:
         fs.delete(Path(old), True)

@@ -623,6 +623,7 @@ def compact_stream_sink(
     stage = staging_dir(path, "compact")
     df = spark.read.parquet(path)
     new_entries = []
+    moved = []
     try:
         (
             df.repartition(int(target_files))
@@ -641,6 +642,7 @@ def compact_stream_sink(
                 raise IOError(
                     f"sink compact: staging rename of {name} failed"
                 )
+            moved.append(dst)
             dst_st = fs.getFileStatus(dst)
             new_entries.append(
                 {
@@ -649,6 +651,12 @@ def compact_stream_sink(
                     "modificationTime": int(dst_st.getModificationTime()),
                 }
             )
+    except Exception:
+        # no manifest references the files moved so far: nothing would
+        # ever list or reclaim them
+        for dst in moved:
+            fs.delete(dst, False)
+        raise
     finally:
         fs.delete(Path(stage), True)
     plan = {

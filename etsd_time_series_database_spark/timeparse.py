@@ -19,7 +19,9 @@ Grammar:
 
 from __future__ import annotations
 
+import functools
 import re
+from collections.abc import Callable
 from datetime import datetime, timedelta, timezone
 
 _SPAN_RE = re.compile(r"^(\d+)([smhdy])$")
@@ -65,12 +67,23 @@ def _parse_absolute(text: str, now: datetime) -> datetime:
     raise ValueError(f"unparseable time literal: {text!r}")
 
 
+Begin = datetime | Callable[[], datetime | None] | None
+
+
+def _begin_getter(begin: Begin) -> Callable[[], datetime | None]:
+    """``begin`` as a zero-argument getter that computes it at most
+    once: a callable (e.g. a min(ts) scan) runs on first use only."""
+    return functools.cache(begin) if callable(begin) else lambda: begin
+
+
 def parse_time(
-    text: str, now: datetime | None = None, begin: datetime | None = None
+    text: str, now: datetime | None = None, begin: Begin = None
 ) -> datetime:
     """Parse one time literal (reference etsdParseTime,
     code/etsdQuery.c:97-182). ``begin`` is the earliest stored
-    timestamp (the reference's block-1 time, code/etsdCmd.c:449-454).
+    timestamp (the reference's block-1 time, code/etsdCmd.c:449-454),
+    or a zero-argument callable returning it, called only when the
+    literal's base is ``begin``.
     """
     now = now or datetime.now(timezone.utc)
     t = text.strip().lower()
@@ -83,9 +96,9 @@ def parse_time(
     elif base_s in ("mid", "midnight"):
         base = now.replace(hour=0, minute=0, second=0, microsecond=0)
     elif base_s == "begin":
-        if begin is None:
+        base = _begin_getter(begin)()
+        if base is None:
             raise ValueError("'begin' needs the table's min(ts)")
-        base = begin
     elif _SPAN_RE.match(base_s):
         # a bare span means "now - span" (reference code/etsdQuery.c:100-104)
         return now - parse_span(base_s)
@@ -101,12 +114,15 @@ def resolve_range(
     start: str | None,
     end: str | None,
     now: datetime | None = None,
-    begin: datetime | None = None,
+    begin: Begin = None,
 ) -> tuple[datetime, datetime]:
     """Resolve s=/e= with ``start``/``end`` cross-references (reference
     code/etsdCmd.c:362-428). Defaults: start=begin, end=now
-    (code/etsdCmd.c:449-454)."""
+    (code/etsdCmd.c:449-454). A callable ``begin`` is called at most
+    once, and only when a side's base is ``begin`` or ``start`` is
+    empty."""
     now = now or datetime.now(timezone.utc)
+    begin = _begin_getter(begin)
 
     def _xref(text: str, other: datetime | None, kw: str) -> datetime | None:
         m = re.match(rf"^{kw}([+-])(\d+[smhdy])$", text.strip().lower())
@@ -126,7 +142,7 @@ def resolve_range(
     if e_txt and not e_txt.startswith("start"):
         e_dt = parse_time(e_txt, now, begin)
     if s_dt is None:
-        s_dt = _xref(s_txt, e_dt, "end") if s_txt else (begin or now)
+        s_dt = _xref(s_txt, e_dt, "end") if s_txt else (begin() or now)
     if e_dt is None:
         e_dt = _xref(e_txt, s_dt, "start") if e_txt else now
     if s_dt is None or e_dt is None:

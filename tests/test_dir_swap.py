@@ -29,11 +29,14 @@ TMP = staging_dir(DST, "compact")
 
 class FakeFs:
     """Directories as {path: content}; ``rename`` returns False on its
-    ``fail_at``-th call (1-based). Every call is logged in order."""
+    ``fail_at``-th call (1-based; a tuple names several calls). Every
+    call is logged in order."""
 
-    def __init__(self, dirs: dict[str, str], fail_at: int | None = None):
+    def __init__(
+        self, dirs: dict[str, str], fail_at: int | tuple[int, ...] = ()
+    ):
         self.dirs = dict(dirs)
-        self.fail_at = fail_at
+        self.fail_at = {fail_at} if isinstance(fail_at, int) else set(fail_at)
         self.n_renames = 0
         self.log: list[tuple] = []
 
@@ -43,7 +46,7 @@ class FakeFs:
     def rename(self, src: str, dst: str) -> bool:
         self.n_renames += 1
         ok = (
-            self.n_renames != self.fail_at
+            self.n_renames not in self.fail_at
             and src in self.dirs
             and dst not in self.dirs
         )
@@ -86,6 +89,28 @@ def test_failed_install_renames_old_back():
     old = fs.log[0][2]
     assert fs.log[2] == ("rename", old, DST, True)
     assert old not in fs.dirs
+    # the staged copy is deleted once the rollback has succeeded
+    assert [e for e in fs.log if e[0] == "delete"] == [("delete", TMP)]
+    assert fs.dirs == {DST: "live"}
+
+
+def test_failed_install_without_old_copy_drops_tmp():
+    fs = FakeFs({TMP: "new"}, fail_at=1)
+    with pytest.raises(IOError, match="install"):
+        _swap(fs)
+    assert fs.dirs == {}
+    assert [e for e in fs.log if e[0] == "delete"] == [("delete", TMP)]
+
+
+def test_failed_rollback_keeps_both_copies():
+    """With the install and the rollback failed, ``dst`` is absent:
+    the moved-aside old copy and the staged copy are all that is left,
+    so neither is deleted."""
+    fs = FakeFs({DST: "live", TMP: "new"}, fail_at=(2, 3))
+    with pytest.raises(IOError, match="install"):
+        _swap(fs)
+    old = fs.log[0][2]
+    assert fs.dirs == {old: "live", TMP: "new"}
     assert not any(e[0] == "delete" for e in fs.log)
 
 

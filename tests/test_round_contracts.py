@@ -198,6 +198,61 @@ def test_directory_swaps_go_through_swap_in_dir():
     assert set(_calls_by_function("getFileSystem", None)) == {"_hadoop_fs"}
 
 
+def test_interactive_metadata_comes_from_the_footer():
+    """A single file's schema (and the CLI's channel names) come from
+    one driver-side footer read, ``store.read_footer``, passed to
+    ``store.read_parquet``: the readers that once ran a
+    schema-inference job make no bare ``read.parquet(`` call. The
+    CLI's ``min(ts)`` scan ``_bounds(`` runs only inside the ``begin``
+    callables that ``cmd_query`` and ``cmd_dump`` hand to
+    ``resolve_range``, which calls them only when the range refers to
+    ``begin``: a query with absolute bounds runs no metadata job."""
+    import ast
+
+    readers = {"load_table", "raw_ts_micros_divisor", "_load_events", "cmd_query"}
+    assert readers <= set(_calls_by_function("read_footer", None))
+    assert readers <= set(_calls_by_function("read_parquet", None))
+    bare = {
+        top.name
+        for top in _package_functions()
+        if top.name in readers
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parquet"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "read"
+    }
+    assert not bare, bare
+
+    def is_bounds(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "_bounds"
+        )
+
+    calls, in_begin = [], []
+    for top in _package_functions():
+        for node in ast.walk(top):
+            if is_bounds(node):
+                calls.append((top.name, id(node)))
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "resolve_range"
+            ):
+                in_begin += [
+                    (top.name, id(n))
+                    for kw in node.keywords
+                    if kw.arg == "begin" and isinstance(kw.value, ast.Lambda)
+                    for n in ast.walk(kw.value)
+                    if is_bounds(n)
+                ]
+    assert sorted(calls) == sorted(in_begin)
+    assert {name for name, _ in calls} == {"cmd_query", "cmd_dump"}
+
+
 def test_derived_tier_contract_has_one_copy():
     """The derived-tier rules (``store.check_derived_tier``) and the
     salted whole-tier rewrite (``store.refresh_derived_tier``) exist

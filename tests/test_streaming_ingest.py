@@ -372,3 +372,57 @@ def test_compact_stream_sink_multiple_target_files(spark, tmp_path):
     assert stats["files_after"] == 2
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == want
     assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 2
+
+
+def test_compact_stream_sink_failed_move_leaves_the_sink_as_it_was(
+    spark, tmp_path, monkeypatch
+):
+    """The compacted files move into the sink one by one before the
+    manifest commit. When a later move fails, the files already moved
+    are deleted: no manifest references them, so nothing would ever
+    list or reclaim them. The sink's listing and rows stay as they
+    were."""
+    import os
+
+    import pytest
+
+    from etsd_time_series_database_spark.sources import store
+    from etsd_time_series_database_spark.streaming.ingest import (
+        compact_stream_sink,
+    )
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    for i in range(4):
+        _mk_feed(spark, src, i)
+    _mk_run(spark, src, out, ckpt)
+    listing = sorted(os.listdir(out))
+    rows = spark.read.parquet(out).count()
+
+    class SecondStagedRenameFails:
+        def __init__(self, fs):
+            self._fs, self.staged = fs, 0
+
+        def rename(self, src_p, dst_p):
+            if src_p.getParent().getName().startswith("__compact_"):
+                self.staged += 1
+                if self.staged == 2:
+                    return False
+            return self._fs.rename(src_p, dst_p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = store._hadoop_fs
+    monkeypatch.setattr(
+        store,
+        "_hadoop_fs",
+        lambda s, p: (SecondStagedRenameFails(real(s, p)[0]), real(s, p)[1]),
+    )
+    with pytest.raises(IOError, match="staging rename"):
+        compact_stream_sink(spark, out, target_files=2)
+    monkeypatch.undo()
+    assert sorted(os.listdir(out)) == listing
+    assert spark.read.parquet(out).count() == rows
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("__")]

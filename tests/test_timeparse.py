@@ -81,3 +81,40 @@ def test_resolve_range_cross_refs():
 def test_resolve_range_rejects_inverted():
     with pytest.raises(ValueError):
         resolve_range("now", "now-4h", NOW, BEGIN)
+
+
+class _Begin:
+    """A ``begin`` callable that counts its calls (a min(ts) scan)."""
+
+    def __init__(self, value=BEGIN):
+        self.value, self.calls = value, 0
+
+    def __call__(self):
+        self.calls += 1
+        return self.value
+
+
+@pytest.mark.parametrize(
+    "start, end, calls",
+    [
+        ("2026-03-04", "2026-03-05", 0),
+        ("now-4h", "start+1h", 0),
+        ("end-2h", "now", 0),
+        ("begin", "begin+2d", 1),
+        (None, "now", 1),
+        ("end-1d", "begin+2d", 1),
+    ],
+)
+def test_callable_begin_runs_once_and_only_when_needed(start, end, calls):
+    begin = _Begin()
+    got = resolve_range(start, end, NOW, begin)
+    assert begin.calls == calls
+    assert got == resolve_range(start, end, NOW, BEGIN)
+
+
+def test_callable_begin_without_a_value():
+    # an empty table has no min(ts): an empty start falls back to now,
+    # an explicit 'begin' still raises
+    assert resolve_range(None, None, NOW, _Begin(None)) == (NOW, NOW)
+    with pytest.raises(ValueError, match="min\\(ts\\)"):
+        parse_time("begin", NOW, _Begin(None))
