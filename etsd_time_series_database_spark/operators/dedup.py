@@ -627,6 +627,7 @@ def minhash_index_compact(
     concurrent-writer protocol."""
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
+        count_staged,
         install_staged,
     )
 
@@ -662,7 +663,7 @@ def minhash_index_compact(
         # count the COMPACTED copy (not a second scan of the old
         # index): the stat doubles as a readability check of the new
         # files before anything destructive happens
-        return spark.read.parquet(tmp).count()
+        return count_staged(spark, tmp).rows
 
     rows = install_staged(spark, path, "compact", write)
     return {

@@ -2777,8 +2777,9 @@ def materialize_tier_ladder(
     ladder = _rra_cascade(df, tiers_s, [channel], ts, value, count_all=False)
 
     def write(tmp: str) -> None:
+        # led by tier_s, or the planned write's tier_s sort drops it
         ladder.repartition("tier_s").sortWithinPartitions(
-            channel, "bucket_us"
+            "tier_s", channel, "bucket_us"
         ).write.partitionBy("tier_s").parquet(tmp)
         write_meta_sidecar(
             spark, tmp, "_ladder_meta.json",

@@ -39,6 +39,9 @@ def get_spark(app_name: str = "etsd_spark", extra_conf: dict | None = None) -> S
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
+        # PySpark's call-site capture costs ~5 py4j round trips per
+        # Column/DataFrame call; errors keep their JVM-side context
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

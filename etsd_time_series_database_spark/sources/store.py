@@ -110,32 +110,101 @@ def _ts_kind(df: DataFrame) -> str | None:
 
 
 class Footer(NamedTuple):
-    """What one Parquet file's footer answers without a Spark job (see
+    """What a Parquet store's footers answer without a Spark job (see
     :func:`read_footer`)."""
 
     schema: StructType
     names: list[str | None] | None
+    files: int  # data files the path holds: 1 for a single file
+
+
+class StagedCount(NamedTuple):
+    """A directory's rows and data files (see :func:`count_staged`)."""
+
+    rows: int
+    files: int
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for an entry below a table's root
+    (``HadoopFSUtils.shouldFilterOutPathName``): a ``.`` name, an
+    ``_`` name that is not a ``k=v`` partition directory, or a file
+    still being copied is not part of the table."""
+    return (
+        name.startswith(".")
+        or name.startswith("_") and "=" not in name
+        or name.endswith("._COPYING_")
+    )
+
+
+def _store_files(fs, root) -> tuple[list[tuple[str, Any]], bool]:
+    """(data files, deferred) of the directory store at the Hadoop
+    Path ``root``: (path below ``root``, FileStatus) of every file
+    Spark's listing of the table reads, sorted by path as its schema
+    inference sorts them, and whether Spark reads the store through
+    something else than that listing — a Parquet summary file
+    (``_metadata``, ``_common_metadata``) or a streaming sink's
+    ``_spark_metadata`` commit log at the root. Only entries below the
+    root are hidden by :func:`_hidden`, so a ``__{kind}_*`` staging
+    root lists its own files."""
+    files, deferred, dirs = [], False, [(root, "")]
+    while dirs:
+        parent, prefix = dirs.pop()
+        for st in fs.listStatus(parent):
+            path = st.getPath()
+            name = path.getName()
+            if name.startswith(("_metadata", "_common_metadata")) or (
+                not prefix and name == "_spark_metadata"
+            ):
+                deferred = True
+            elif _hidden(name):
+                continue
+            elif st.isDirectory():
+                dirs.append((path, f"{prefix}{name}/"))
+            else:
+                files.append((prefix + name, st))
+    return sorted(files, key=lambda f: f[0]), deferred
+
+
+def _open_parquet(spark: SparkSession, status):
+    """A parquet-hadoop ``ParquetFileReader`` over the file ``status``
+    (the caller closes it); its footer is read on open."""
+    hadoop = spark._jvm.org.apache.parquet.hadoop
+    return hadoop.ParquetFileReader.open(
+        hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        )
+    )
 
 
 def read_footer(
     spark: SparkSession, path: str, channel_col: str | None = None
 ) -> Footer | None:
-    """Read a single Parquet file's footer on the driver: the analog of
-    reading the ETSD header block (code/etsd.c:41-123), whose stored
-    channel names etsdChanNum matches against
-    (code/etsdQuery.c:193-203). None when ``path`` is not one file (a
-    directory store, a glob, a missing path): Spark's own inference and
-    errors apply there.
+    """Read a Parquet store's schema from a footer on the driver: the
+    analog of reading the ETSD header block (code/etsd.c:41-123), whose
+    stored channel names etsdChanNum matches against
+    (code/etsdQuery.c:193-203). ``path`` is one file, or a directory
+    store (the ingest sink, a ``dt=`` store, a staged copy), whose
+    first data file in Spark's listing order (:func:`_store_files`)
+    is read, as Spark's inference reads it. None, leaving Spark's own
+    inference and errors, for a missing path or a glob, a directory
+    without data files, with summary files or a sink commit log, or
+    with a visible non-``.parquet`` file, and under
+    ``spark.sql.parquet.mergeSchema``. Nothing is cached: every call
+    lists the store again.
 
     ``schema`` is Spark's own footer conversion
     (``ParquetFileFormat.readSchemaFromFooter``) through a converter
     built from the session's CURRENT SQLConf, so it is the schema
     ``spark.read.parquet`` would infer under the same confs; nothing is
-    set here. ``names`` is ``channel_col``'s value set as
-    ``select(channel_col).distinct()`` returns it, read from each row
-    group's dictionary page (None added when a chunk counts NULLs); it
-    is None, meaning "scan for them", unless :func:`_dictionary_names`
-    can prove the pages hold exactly the stored values."""
+    set here. For a directory it is the data schema: given to
+    ``spark.read.schema(...)``, Spark appends the partition columns it
+    infers from the ``k=v`` directory names. ``names`` is
+    ``channel_col``'s value set as ``select(channel_col).distinct()``
+    returns it, read from a single file's dictionary pages (None added
+    when a chunk counts NULLs); it is None, meaning "scan for them",
+    for a directory or unless :func:`_dictionary_names` can prove the
+    pages hold exactly the stored values."""
     fs, Path = _hadoop_fs(spark, path)
     jpath = Path(path)
     try:
@@ -145,23 +214,27 @@ def read_footer(
         if exc.java_exception.getClass().getName() == missing:
             return None
         raise
-    if not status.isFile():
-        return None
-    jvm = spark._jvm
-    hadoop = jvm.org.apache.parquet.hadoop
-    spq = jvm.org.apache.spark.sql.execution.datasources.parquet
-    reader = hadoop.ParquetFileReader.open(
-        hadoop.util.HadoopInputFile.fromStatus(
-            status, spark._jsc.hadoopConfiguration()
-        )
-    )
+    if status.isFile():
+        files = [(path, status)]
+    else:
+        if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+            return None
+        files, deferred = _store_files(fs, jpath)
+        if deferred or not files or any(
+            not name.endswith(".parquet") for name, _ in files
+        ):
+            return None
+        channel_col = None
+    spq = spark._jvm.org.apache.spark.sql.execution.datasources.parquet
+    reader = _open_parquet(spark, files[0][1])
     try:
         footer = reader.getFooter()
         converter = spq.ParquetToSparkSchemaConverter(
             spark._jsparkSession.sessionState().conf()
         )
         jschema = spq.ParquetFileFormat.readSchemaFromFooter(
-            hadoop.Footer(jpath, footer), converter
+            spark._jvm.org.apache.parquet.hadoop.Footer(jpath, footer),
+            converter,
         )
         # nullable, as a relation's inferred data schema is
         schema = StructType.fromJson(json.loads(jschema.asNullable().json()))
@@ -170,9 +243,33 @@ def read_footer(
             if channel_col is None
             else _dictionary_names(spark, reader, footer, schema, channel_col)
         )
-        return Footer(schema, names)
+        return Footer(schema, names, len(files))
     finally:
         reader.close()
+
+
+def count_staged(spark: SparkSession, path: str) -> StagedCount:
+    """The rows of the directory ``path`` (a staged copy, read back
+    before :func:`install_staged` swaps it in) as
+    ``spark.read.parquet(path).count()`` counts them, summed from the
+    footer record counts of the same data files on the driver: no
+    Spark job, and no "All paths were ignored" listing of an
+    underscore-prefixed root. A file whose footer does not read raises,
+    as the scan would; a directory without data files raises too (Spark
+    cannot infer its schema), so a 0 count always means an empty data
+    file was written."""
+    fs, Path = _hadoop_fs(spark, path)
+    files, _ = _store_files(fs, Path(path))
+    if not files:
+        raise ValueError(f"{path} holds no data file")
+    rows = 0
+    for _, st in files:
+        reader = _open_parquet(spark, st)
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return StagedCount(rows, len(files))
 
 
 def _dictionary_names(spark, reader, footer, schema, col):
@@ -254,8 +351,7 @@ def read_parquet(
 ) -> DataFrame:
     """``spark.read.parquet(path)`` with ``footer``'s schema (the
     :func:`read_footer` of ``path``) given up front: no
-    schema-inference job. A directory (``footer`` None) keeps Spark's
-    inference."""
+    schema-inference job. ``footer`` None keeps Spark's inference."""
     reader = spark.read if footer is None else spark.read.schema(footer.schema)
     return reader.parquet(path)
 
@@ -386,12 +482,15 @@ def create_events_table(
     Sorting by (event_type, ts) inside each file makes Parquet
     row-group stats selective for both per-channel and time-range
     predicates — the scale replacement for the reference's
-    largest-width-first stream sort (code/etsdCmd.c:167-185).
+    largest-width-first stream sort (code/etsdCmd.c:167-185). The sort
+    leads with ``dt``: Spark's planned write sorts a partitioned
+    write's tasks by the partition columns, and a caller sort that
+    does not already satisfy that ordering is dropped as redundant.
     """
     (
         df.withColumn("dt", F.to_date(F.col(partition_col)))
         .repartition(F.col("dt"))
-        .sortWithinPartitions("event_type", partition_col)
+        .sortWithinPartitions("dt", "event_type", partition_col)
         .write.mode(mode)
         .partitionBy("dt")
         .parquet(path)
@@ -399,7 +498,7 @@ def create_events_table(
 
 
 def read_events_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop("dt")
+    return read_parquet(spark, path, read_footer(spark, path)).drop("dt")
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -426,27 +525,23 @@ def compact_partition(
     """Compact one date partition: rewrite its many small files (the
     residue of frequent streaming micro-batch commits) into
     ``target_files`` sorted files, installed with :func:`install_staged`.
-    Returns the number of files before compaction.
+    Returns the number of data files before compaction, from the
+    listing the footer read makes.
 
     Only safe on partitions no longer receiving appends (i.e. past the
     ingest watermark) — same contract as the reference's rotation
     touching only the closed file (code/etsdSave.c:80-99).
     """
-    fs, Path = _hadoop_fs(spark, path)
     part_dir = f"{path}/{partition}"
-    files_before = [
-        st.getPath().getName()
-        for st in fs.listStatus(Path(part_dir))
-        if st.getPath().getName().endswith(".parquet")
-    ]
-    df = spark.read.parquet(part_dir)
+    footer = read_footer(spark, part_dir)
+    df = read_parquet(spark, part_dir, footer)
     install_staged(
         spark, part_dir, "compact",
         df.repartition(target_files)
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
         .write.parquet,
     )
-    return len(files_before)
+    return footer.files if footer else len(df.inputFiles())
 
 
 def cross_day_probe(
@@ -619,7 +714,7 @@ def amend_events(
 
         def write(tmp: str) -> int:
             merged.write.parquet(tmp)
-            return spark.read.parquet(tmp).count()
+            return count_staged(spark, tmp).rows
 
         stats["partitions"][part] = install_staged(
             spark, part_dir, "amend", write
@@ -809,8 +904,9 @@ def refresh_derived_tier(
 
     A day refresh recomputes each named day from ``day_scoped(source,
     day)`` (partition-pruned) into ``target_files`` files, counts the
-    staged copy and installs it with :func:`install_staged`; untouched
-    days are never listed, read or rewritten. A day whose source
+    staged copy from its footers (:func:`count_staged`) and installs it
+    with :func:`install_staged`; untouched days are never listed, read
+    or rewritten. A day whose source
     vanished (0 staged rows, e.g. drained by a cross-day amend) drops
     its partition after the install; a crash between the two leaves an
     empty day, which the next refresh of that day drops again. Both
@@ -839,7 +935,8 @@ def refresh_derived_tier(
             )
         else:
             full = full.repartition("dt")
-        full = full.sortWithinPartitions(channel, bucket)
+        # led by dt, or the planned write's dt sort drops it
+        full = full.sortWithinPartitions("dt", channel, bucket)
 
         def rebuild(tmp: str) -> None:
             full.write.partitionBy("dt").parquet(tmp)
@@ -866,7 +963,7 @@ def refresh_derived_tier(
 
         def write(tmp: str) -> int:
             fresh.write.parquet(tmp)
-            return spark.read.parquet(tmp).count()
+            return count_staged(spark, tmp).rows
 
         part_dir = f"{path}/dt={d}"
         stats[d] = install_staged(spark, part_dir, tier.name, write)

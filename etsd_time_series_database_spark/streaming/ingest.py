@@ -123,12 +123,20 @@ def write_ingest_epoch(
     date pruning still works and a replayed epoch touches only its own
     subdirectories. The per-write option (not a session conf) keeps the
     behavior independent of the caller's session setup.
+
+    Commit files are not sorted: Spark's planned write would drop a
+    ``(channel, ts)`` sort under its own ``dt``/``__epoch`` sort, and a
+    real one makes the small files larger. The sorted layout is
+    written once, when :func:`compact_ingest_partition` merges a closed
+    day.
     """
     (
-        batch.withColumn("dt", F.to_date("ts"))
-        .withColumn("__epoch", F.lit(int(epoch_id)))
+        batch.select(
+            "*",
+            F.to_date("ts").alias("dt"),
+            F.lit(int(epoch_id)).alias("__epoch"),
+        )
         .repartition("dt")
-        .sortWithinPartitions("channel", "ts")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("dt", "__epoch")
@@ -175,8 +183,16 @@ def consolidate(df: DataFrame, keys: list[str], width_s: int) -> DataFrame:
 
 def read_ingest_table(spark: SparkSession, path: str) -> DataFrame:
     """Read an ingest sink, hiding the internal lifecycle columns
-    (``dt`` date partition, ``__epoch`` idempotency key)."""
-    df = spark.read.parquet(path)
+    (``dt`` date partition, ``__epoch`` idempotency key). The schema
+    comes from a data file's footer (``sources.store.read_footer``),
+    so the read runs no Spark job; every call lists the sink again,
+    so a fresh commit is visible at once."""
+    from etsd_time_series_database_spark.sources.store import (
+        read_footer,
+        read_parquet,
+    )
+
+    df = read_parquet(spark, path, read_footer(spark, path))
     return df.drop(*[c for c in ("dt", "__epoch") if c in df.columns])
 
 
@@ -446,44 +462,42 @@ def compact_ingest_partition(
     ``__epoch=N`` dir beside ``-1`` and duplicate those rows, which is
     exactly the at-least-once window the closed-partition rule
     excludes (reference rotation touches only the closed file,
-    code/etsdSave.c:80-99). Returns {files_before, files_after, rows}.
+    code/etsdSave.c:80-99). Returns {files_before, files_after, rows}:
+    ``files_before`` from the listing the input's footer read makes,
+    ``files_after`` and ``rows`` from the staged copy's footers
+    (``sources.store.count_staged``), so only the write runs jobs.
     """
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
+        count_staged,
         install_staged,
+        read_footer,
+        read_parquet,
     )
 
     fs, Path = _hadoop_fs(spark, path)
     part_dir = f"{path}/{partition}"
     if not fs.exists(Path(part_dir)):
         raise ValueError(f"{part_dir} does not exist")
-
-    def _count_files(p) -> int:
-        n = 0
-        for ep in fs.listStatus(Path(p)):
-            if ep.isDirectory():
-                for f in fs.listStatus(ep.getPath()):
-                    if f.getPath().getName().endswith(".parquet"):
-                        n += 1
-        return n
-
-    files_before = _count_files(part_dir)
-    df = spark.read.parquet(part_dir).drop("__epoch")
+    footer = read_footer(spark, part_dir)
+    df = read_parquet(spark, part_dir, footer)
+    files_before = footer.files if footer else len(df.inputFiles())
+    df = df.drop("__epoch")
     compacted = (
         df.repartition(int(target_files))
         .sortWithinPartitions(*[c for c in sort_cols if c in df.columns])
         .withColumn("__epoch", F.lit(-1))
     )
 
-    def write(tmp: str) -> int:
+    def write(tmp: str):
         compacted.write.partitionBy("__epoch").parquet(tmp)
-        return spark.read.parquet(tmp).count()
+        return count_staged(spark, tmp)
 
-    rows = install_staged(spark, part_dir, "compact", write)
+    staged = install_staged(spark, part_dir, "compact", write)
     return {
         "files_before": files_before,
-        "files_after": _count_files(part_dir),
-        "rows": rows,
+        "files_after": staged.files,
+        "rows": staged.rows,
     }
 
 
@@ -532,6 +546,7 @@ def compact_stream_sink(
 
     from etsd_time_series_database_spark.sources.store import (
         _hadoop_fs,
+        count_staged,
         staging_dir,
     )
 
@@ -632,7 +647,7 @@ def compact_stream_sink(
         )
         # readability check of the compacted copy before anything
         # destructive
-        rows = spark.read.parquet(stage).count()
+        rows = count_staged(spark, stage).rows
         for st in fs.listStatus(Path(stage)):
             name = st.getPath().getName()
             if not name.endswith(".parquet"):

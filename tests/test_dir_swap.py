@@ -250,14 +250,16 @@ def test_failed_full_rebuild_keeps_the_live_tier(spark, tmp_path):
 
 
 def test_staged_copy_reads_back_its_rows(spark, tmp_path):
-    """Day refreshes and compactions count their staged copy by
-    reading its ``__{kind}_*`` root. Spark hides underscore entries
-    when it lists a table and logs "All paths were ignored" for such a
-    root, yet returns its rows; a day refresh drops the live day when
-    that count is 0, so the read-back is pinned here."""
+    """Day refreshes and compactions count their staged copy at its
+    ``__{kind}_*`` root from the footers (``store.count_staged``).
+    Spark hides underscore entries when it lists a table and logs "All
+    paths were ignored" for such a root, yet returns its rows; a day
+    refresh drops the live day when that count is 0, so both reads are
+    pinned here."""
     tmp = staging_dir(str(tmp_path / "tbl" / "dt=2026-01-01"), "digest")
     spark.range(37).write.parquet(tmp)
     assert spark.read.parquet(tmp).count() == 37
+    assert store.count_staged(spark, tmp).rows == 37
 
 
 def _sorted_rows(df):

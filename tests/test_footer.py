@@ -143,11 +143,163 @@ def test_footer_schema_equals_inferred_schema(spark, tmp_path, confs):
                 spark.conf.set(k, v)
 
 
-def test_footer_is_none_for_a_directory_or_missing_path(spark, tmp_path):
+def test_footer_is_none_where_spark_infers(spark, tmp_path):
+    """A missing path, a glob, a directory without a visible data file,
+    one with a sink commit log or a visible non-parquet file, and any
+    directory under ``mergeSchema`` keep Spark's own inference."""
+    assert store.read_footer(spark, str(tmp_path / "absent")) is None
+    hidden = str(tmp_path / "hidden")
+    spark.range(3).write.parquet(f"{hidden}/_x")
+    assert store.read_footer(spark, hidden) is None
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        spark.read.parquet(hidden)
     d = str(tmp_path / "dir")
     spark.range(3).write.parquet(d)
-    assert store.read_footer(spark, d, "id") is None
-    assert store.read_footer(spark, str(tmp_path / "absent")) is None
+    assert store.read_footer(spark, f"{d}/*.parquet") is None
+    assert store.read_footer(spark, d, "id").names is None
+    conf = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(conf, "true")
+    try:
+        assert store.read_footer(spark, d) is None
+    finally:
+        spark.conf.unset(conf)
+    os.makedirs(f"{d}/_spark_metadata")
+    assert store.read_footer(spark, d) is None
+    os.rmdir(f"{d}/_spark_metadata")
+    open(f"{d}/notes.txt", "w").close()
+    assert store.read_footer(spark, d) is None
+
+
+def _ingest_sink(spark, path, days=1, epochs=3):
+    """``epochs`` one-minute commits into each of ``days`` days."""
+    import pyspark.sql.functions as F
+
+    from etsd_time_series_database_spark.streaming.ingest import (
+        write_ingest_epoch,
+    )
+
+    for e in range(days * epochs):
+        day, i = divmod(e, epochs)
+        write_ingest_epoch(
+            spark.createDataFrame(
+                [(f"2026-01-{day + 1:02d} 00:{i:02d}:{j:02d}", "s", f"c{j}",
+                  float(j), j) for j in range(5)],
+                "ts string, source string, channel string, value double, "
+                "status int",
+            ).withColumn("ts", F.to_timestamp("ts")),
+            e, path,
+        )
+    return path
+
+
+def _directory_store(spark, tmp_path, layout):
+    from etsd_time_series_database_spark.streaming.ingest import (
+        compact_ingest_partition,
+    )
+
+    root = str(tmp_path / "store")
+    if layout == "ingest_mid_day":
+        return _ingest_sink(spark, root)
+    if layout == "ingest_compacted_day":
+        _ingest_sink(spark, root, days=2)
+        compact_ingest_partition(spark, root, "dt=2026-01-01")
+        return root
+    if layout == "dt_store":
+        store.create_events_table(
+            store.load_table(spark, SF_SMOKE, "events"), root
+        )
+        return root
+    # a staged copy: the root itself is underscore-prefixed, and its
+    # hidden entries (a side table, a half-copied file) stay unread
+    tmp = store.staging_dir(f"{root}/dt=2026-01-01", "compact")
+    spark.range(7).selectExpr("id", "id * 0.5 AS v").write.parquet(tmp)
+    spark.range(3).selectExpr("'x' AS id").write.parquet(f"{tmp}/_meta")
+    open(f"{tmp}/a._COPYING_", "w").close()
+    return tmp
+
+
+LAYOUTS = ["ingest_mid_day", "ingest_compacted_day", "dt_store", "staging_root"]
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_directory_footer_schema_equals_inferred_schema(
+    spark, tmp_path, layout
+):
+    """A directory store's footer schema, given to ``read_parquet``,
+    is the schema Spark infers, partition columns included; the footer
+    counts the data files Spark lists."""
+    path = _directory_store(spark, tmp_path, layout)
+    want = spark.read.parquet(path)
+    n, footer = _jobs(spark, lambda: store.read_footer(spark, path))
+    assert n == 0
+    assert footer.files == len(want.inputFiles())
+    data = [f for f in want.schema.fields if f.name not in ("dt", "__epoch")]
+    assert footer.schema.fields == data
+    assert store.read_parquet(spark, path, footer).schema == want.schema
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_staged_count_equals_the_scan(spark, tmp_path, layout):
+    path = _directory_store(spark, tmp_path, layout)
+    n, staged = _jobs(spark, lambda: store.count_staged(spark, path))
+    assert n == 0
+    assert staged == (
+        spark.read.parquet(path).count(), len(spark.read.parquet(path).inputFiles())
+    )
+
+
+def test_staged_count_of_empty_and_corrupt_copies(spark, tmp_path):
+    """A 0-row write leaves an empty data file, counted 0 as the scan
+    counts it; a partitioned 0-row write leaves none, and both reads
+    raise; a corrupt footer raises before an install swaps anything."""
+    empty = str(tmp_path / "__empty")
+    spark.range(0).write.parquet(empty)
+    assert store.count_staged(spark, empty) == (0, 1)
+    assert spark.read.parquet(empty).count() == 0
+    none = str(tmp_path / "__none")
+    spark.range(0).selectExpr("id", "1 AS k").write.partitionBy("k").parquet(none)
+    with pytest.raises(ValueError, match="no data file"):
+        store.count_staged(spark, none)
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        spark.read.parquet(none).count()
+
+    live = str(tmp_path / "live")
+    spark.range(4).write.parquet(live)
+
+    def corrupt(tmp):
+        spark.range(9).write.parquet(tmp)
+        f = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+        os.remove(os.path.join(tmp, f".{f}.crc"))  # past the checksum
+        with open(os.path.join(tmp, f), "r+b") as fh:
+            fh.seek(-8, os.SEEK_END)
+            fh.write(b"\0" * 8)
+        return store.count_staged(spark, tmp)
+
+    with pytest.raises(Exception, match="not a Parquet file|magic number"):
+        store.install_staged(spark, live, "compact", corrupt)
+    assert spark.read.parquet(live).count() == 4
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("__compact")]
+
+
+def test_ingest_read_and_compaction_run_no_metadata_job(spark, tmp_path):
+    """Reading the sink runs no job (1 schema-inference job before);
+    compacting a day runs only its write's 2 jobs (6 before: an
+    inference job and a read-back count as well)."""
+    from etsd_time_series_database_spark.streaming.ingest import (
+        compact_ingest_partition,
+        read_ingest_table,
+    )
+
+    path = _ingest_sink(spark, str(tmp_path / "sink"), days=2)
+    n, df = _jobs(spark, lambda: read_ingest_table(spark, path))
+    assert n == 0
+    assert df.columns == ["ts", "source", "channel", "value", "status"]
+    n, stats = _jobs(
+        spark, lambda: compact_ingest_partition(spark, path, "dt=2026-01-01")
+    )
+    assert n == 2
+    assert stats == {"files_before": 3, "files_after": 1, "rows": 15}
+    assert read_ingest_table(spark, path).count() == 30
 
 
 def test_plain_string_column_names_come_from_the_footer(spark, tmp_path, capsys):

@@ -253,6 +253,44 @@ def test_interactive_metadata_comes_from_the_footer():
     assert {name for name, _ in calls} == {"cmd_query", "cmd_dump"}
 
 
+def test_install_paths_count_their_staged_copy_from_footers():
+    """A staged copy's rows come from its footers
+    (``store.count_staged``), not from a ``read.parquet(...).count()``
+    scan: the scan ran two Spark jobs per install and logged "All
+    paths were ignored" on the underscore-prefixed staging root. The
+    install paths are the functions that stage a copy."""
+    import ast
+
+    installs = set(_calls_by_function("install_staged", None)) | set(
+        _calls_by_function("staging_dir", None)
+    )
+    scans = {
+        top.name
+        for top in _package_functions()
+        if top.name in installs
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "count"
+        and isinstance(node.func.value, ast.Call)
+        and isinstance(node.func.value.func, ast.Attribute)
+        and node.func.value.func.attr == "parquet"
+    }
+    assert not scans, scans
+    assert set(_calls_by_function("count_staged", None)) == {
+        "amend_events", "refresh_derived_tier", "compact_ingest_partition",
+        "compact_stream_sink", "minhash_index_compact",
+    }
+
+
+def test_session_turns_off_dataframe_call_site_capture(spark):
+    """PySpark's per-call call-site capture (``_with_origin``) costs
+    about five py4j round trips on every Column/DataFrame call.
+    ``is_debugging_enabled`` reads this conf once per process."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+
+
 def test_derived_tier_contract_has_one_copy():
     """The derived-tier rules (``store.check_derived_tier``) and the
     salted whole-tier rewrite (``store.refresh_derived_tier``) exist

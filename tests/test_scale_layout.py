@@ -204,6 +204,53 @@ def test_compact_partition_merges_files_preserves_rows(spark, tmp_path):
     assert [r.value for r in rows] == [0.0, 1.0, 2.0]
 
 
+def _files_in_order(root, cols):
+    """{file: in ``cols`` order?} for every parquet file under
+    ``root``, read with pyarrow (file order, not Spark's)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for f in names:
+            if f.endswith(".parquet"):
+                t = pq.read_table(os.path.join(d, f), columns=list(cols))
+                rows = list(zip(*(t.column(c).to_pylist() for c in cols)))
+                out[os.path.relpath(os.path.join(d, f), root)] = rows == sorted(rows)
+    return out
+
+
+def test_partitioned_writes_keep_their_in_file_sort(spark, tmp_path):
+    """Spark's planned write sorts a partitioned write's tasks by the
+    partition columns and drops a caller's sort that does not lead
+    with them. The events store, a whole digest-tier rebuild and the
+    tier ladder lead their sort with the partition column, so every
+    file they write is in (channel, time) order, which row-group
+    skipping relies on."""
+    from etsd_time_series_database_spark.operators.trends import (
+        materialize_tier_ladder,
+    )
+    from etsd_time_series_database_spark.sources.store import (
+        create_events_table,
+        refresh_digest_tier,
+    )
+
+    events = load_table(spark, SF_SMOKE, "events").orderBy(F.rand(7))
+    raw, dig, lad = (str(tmp_path / n) for n in ("raw", "digest", "ladder"))
+    create_events_table(events, raw)
+    refresh_digest_tier(spark, raw, dig, bucket_s=3600)
+    materialize_tier_ladder(events, lad, tiers_s=(3600, 86400))
+    for root, cols in (
+        (raw, ("event_type", "ts")),
+        (dig, ("event_type", "bucket_us")),
+        (lad, ("event_type", "bucket_us")),
+    ):
+        order = _files_in_order(root, cols)
+        assert len(order) > 1, root
+        assert all(order.values()), (root, order)
+
+
 def test_ivf_partitioned_layout_prunes_to_one_cell(spark, tmp_path):
     """write_ivf_partitioned + ivf_probe_partitioned: the cent_id
     predicate must be satisfied by partition-directory pruning — the
